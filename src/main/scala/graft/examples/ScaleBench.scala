@@ -1,7 +1,7 @@
 package graft.examples
 
 import graft.SparkEntry
-import graft.operators.{Decontaminate, Dedup, EntityResolution, Graph, Multimodal, Sampling, Similarity, VectorIndex}
+import graft.operators.{Decontaminate, Dedup, EntityResolution, Graph, Modality, Multimodal, Sampling, Similarity, VectorIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -944,7 +944,8 @@ object ScaleBench {
           try {
             nBytes = raw.agg(sum(octet_length(col("content")))).head.getLong(0)
             val photos = Multimodal.repartitionByBytes(raw, "content", targetBytes = 256L << 10)
-            pairs = Dedup.phashNearDupPairs(photos, "doc_id", "content", maxHamming = 3).count()
+            pairs = Dedup.nearDupPairs(Modality.photo, photos, "doc_id", "content", maxHamming = 3)
+              .count()
           } finally raw.unpersist()
         }
         println(

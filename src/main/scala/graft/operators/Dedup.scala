@@ -202,11 +202,12 @@ object Dedup {
     bandedFingerprintPairs(
       Par
         .fanOutSmall(df.select(col(idCol).as("doc_id"), col(textCol).as("__shtext")))
-        .select(col("doc_id"), simhash64(col("__shtext")).as("fp")),
+        .select(col("doc_id"), simhash64(col("__shtext")).as("fp"))
+        // cheap codegen'd fingerprint: lazy persist (see bandedFingerprintPairs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       maxHamming,
       blocks,
-      bits = 64,
-      eagerFp = false // codegen'd text hash: cheap fingerprint, lazy persist
+      bits = 64
     )
 
   /** 32-bit twin of [[simhash64Pairs]] — same Manku multi-table permuted
@@ -227,41 +228,12 @@ object Dedup {
     bandedFingerprintPairs(
       Par
         .fanOutSmall(df.select(col(idCol).as("doc_id"), col(textCol).as("__shtext")))
-        .select(col("doc_id"), simhash32(col("__shtext")).as("fp")),
+        .select(col("doc_id"), simhash32(col("__shtext")).as("fp"))
+        // cheap codegen'd fingerprint: lazy persist (see bandedFingerprintPairs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       maxHamming,
       blocks,
-      bits = 32,
-      eagerFp = false // codegen'd text hash: cheap fingerprint, lazy persist
-    )
-
-  /** Image-content near-dup pairs: 64-bit perceptual dHash
-    * ([[graft.functions.PHashSupport]] — codegen expression over the
-    * decoded luminance grid) banded through the SAME Manku machinery as
-    * [[simhash64Pairs]], so candidate generation is exact at `maxHamming`
-    * by pigeonhole and sub-quadratic by banding. Catches re-encoded /
-    * recompressed / resized image copies whose BYTES differ — invisible to
-    * byte-digest dedup (the reference's only image mechanism,
-    * /root/reference/src/engine/hash.py:27-40). Rows whose bytes do not
-    * decode as an image (NULL hash) drop out before banding: a corrupt
-    * blob never pairs with anything.
-    *
-    * Scale shape: the decode+hash is the per-row cost (the heaviest scan
-    * expression in the engine — gate with the header sniff first, and
-    * pair with [[Multimodal.repartitionByBytes]] for skewed media); the
-    * pair search itself is the banded equi-join, same inventory as q52.
-    */
-  def phashNearDupPairs(
-      df: DataFrame,
-      idCol: String,
-      contentCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame =
-    bandedFingerprintPairs(
-      phashFps(df, idCol, contentCol),
-      maxHamming,
-      blocks,
-      bits = 64
+      bits = 32
     )
 
   /** Embedding-cosine near-duplicate pairs: sign-bit LSH banding for
@@ -483,62 +455,67 @@ object Dedup {
       .filter(col("shared") >= minShared)
   }
 
-  /** The banding join itself, over a (doc_id, fp) frame — separated so specs
-    * can drive it with synthetic fingerprints and prove recall is exact.
-    * `bits` is the fingerprint width (64 for [[simhash64]], 32 for
-    * [[simhash32]]) — ONE implementation serves both, parameterized, so
-    * there is no second fixed-band code path to drift.
+  /** The banding join itself, over a (doc_id, fp[, afp]) frame — separated
+    * so specs can drive it with synthetic fingerprints and prove recall is
+    * exact. `bits` is the fingerprint width (64 for [[simhash64]] and the
+    * photo/video fingerprints, 32 for [[simhash32]], 49 for audio) — ONE
+    * implementation serves every width, parameterized, so there is no
+    * second fixed-band code path to drift. `maxAHamming = Some(a)` (the
+    * verified photo family) carries the confirm hash `afp`: pairs gain
+    * `a_hamming` and must keep it within `a`.
+    *
+    * BOTH sides of the band-key self-join read `fps`, and under AQE's
+    * broadcast choice the sides do NOT share an exchange — so callers hand
+    * in a PERSISTED frame, choosing the persist by fingerprint cost:
+    *  - media decodes ([[nearDupPairs]]) use [[Par.eager]]. Uncached, the
+    *    per-row image decode / PCM Goertzel pass runs once per side
+    *    (measured at sf0.1: q105 6.4→3.6 s, q115 4.5→2.6 s, q117 5.8→3.2 s,
+    *    targeted min-of-3); and because AQE submits the two sides
+    *    CONCURRENTLY, even a lazy persist lost the race and both stages paid
+    *    the full decode (the r16 measurement: q105's sides as two
+    *    overlapping 5.2 s single-task stages).
+    *  - the codegen'd text simhashes use a LAZY `MEMORY_AND_DISK` persist:
+    *    there the blocking count() + cache write EXCEEDS the cheap
+    *    duplicated projection it would save (the r16 verdict's q52 ×0.64
+    *    regression; the same measurement that kept minhash/embed-LSH lazy).
+    * The cached rows are just (doc_id, fp[, afp]) — bytes per doc, not the
+    * media. Blocks are reclaimed by Spark's ContextCleaner once the result
+    * plan is unreferenced (the winnowingOverlapPairs lifecycle contract).
     */
   private[graft] def bandedFingerprintPairs(
       fps: DataFrame,
       maxHamming: Int,
       blocks: Int,
       bits: Int = 64,
-      eagerFp: Boolean = true
+      maxAHamming: Option[Int] = None
   ): DataFrame = {
-    // Persisted because BOTH sides of the band-key self-join read the
-    // fingerprint frame, and under AQE's broadcast choice the sides do
-    // NOT share an exchange — without the cache the fingerprint computation
-    // (the per-row image decode / PCM Goertzel pass, the heaviest scan
-    // expressions in the engine) runs once per side (measured at sf0.1:
-    // q105 6.4→3.6 s, q115 4.5→2.6 s, q117 5.8→3.2 s, q52 1.0→0.6 s,
-    // targeted min-of-3). The r16 refinement: AQE submits the two sides
-    // CONCURRENTLY, so even the lazy persist lost the race and both stages
-    // paid the full decode (measured: q105's sides as two overlapping
-    // 5.2 s single-task stages); [[Par.eager]] materializes the blocks
-    // before the join plan is handed back. The cached rows are just
-    // (doc_id, fp[, confirm hash]) — bytes per doc, not the media. Blocks
-    // are reclaimed by Spark's ContextCleaner once the result plan is
-    // unreferenced (the winnowingOverlapPairs lifecycle contract).
-    //
-    // `eagerFp` keys on the FINGERPRINT COST, set by the caller: eager for
-    // the media decodes above (where losing the AQE race duplicates
-    // seconds of decode per side), LAZY for the codegen'd text simhashes —
-    // there the blocking count() + cache write overhead EXCEEDS the cheap
-    // duplicated projection it would save (the r16 verdict's q52 ×0.64
-    // regression; the same measurement that kept minhash/embed-LSH lazy at
-    // the persist sites above).
-    val cached =
-      if (eagerFp) Par.eager(fps)
-      else fps.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keyed = fingerprintBandKeys(cached, maxHamming, blocks, bits)
+    val keyed = fingerprintBandKeys(fps, maxHamming, blocks, bits)
     keyed
       .as("a")
       .join(keyed.as("b"), col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
       .select(
-        col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"),
-        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming")
-      )
+        Seq(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")) ++
+          hammings(c => col(s"a.$c"), c => col(s"b.$c"), maxAHamming): _*)
       .distinct()
-      .filter(col("hamming") <= maxHamming)
+      .filter(withinBounds(maxHamming, maxAHamming))
   }
+
+  /** `hamming` (plus `a_hamming` under the aHash confirm) between two
+    * fingerprint rows; `l(c)` / `r(c)` name column `c` of each side.
+    */
+  private def hammings(
+      l: String => Column, r: String => Column, maxAHamming: Option[Int]): Seq[Column] =
+    bit_count(l("fp").bitwiseXOR(r("fp"))).as("hamming") +:
+      maxAHamming.toSeq.map(_ => bit_count(l("afp").bitwiseXOR(r("afp"))).as("a_hamming"))
+
+  private def withinBounds(maxHamming: Int, maxAHamming: Option[Int]): Column =
+    maxAHamming.foldLeft(col("hamming") <= maxHamming)((c, a) => c && col("a_hamming") <= a)
 
   /** (doc_id, fp, bk) band-key rows for a (doc_id, fp) fingerprint table —
     * the Manku key construction, shared by the batch self-join
-    * ([[bandedFingerprintPairs]]) and the two-sided/stream-static probe
-    * ([[phashDupCandidates]], [[graft.streaming.Streams.dupPhotoStream]])
-    * so both key with byte-identical arithmetic. One packed-long key per
+    * ([[bandedFingerprintPairs]]), the corpus index ([[corpusIndex]]) and
+    * the index probe ([[probeDups]]) so all three key with byte-identical
+    * arithmetic. One packed-long key per
     * block combination (combo bits + table id in the high bits); the
     * table-id width derives from the ACTUAL combination count — a fixed
     * 5-bit assumption aliased table ids past 32 combos (e.g. blocks=9,
@@ -581,51 +558,134 @@ object Dedup {
     fps.select(col("*"), explode(array(keys: _*)).as("bk"))
   }
 
-  /** (doc_id, fp) with the fingerprint expression evaluated EXACTLY ONCE
-    * per row. The naive select(expr).filter(isnotnull) shape lets the
-    * optimizer rewrite the filter below the projection as
+  /** (doc_id, fp[, afp]) of modality `m` with the fingerprint expression
+    * evaluated EXACTLY ONCE per row. The naive select(expr).filter(isnotnull)
+    * shape lets the optimizer rewrite the filter below the projection as
     * isnotnull(<expr>) — the heaviest scan expression in the engine (the
     * image/PCM/AVI decode) then runs TWICE per row, once in the Filter and
-    * once in the Project (the dualFps comment's measurement: +50% on
-    * q117). A Generate's generator expression is never inlined into
-    * parents, so explode(array(expr)) is a one-eval barrier; explode of a
-    * one-element array is exactly one output row per input row (a null
-    * element yields a null row — filtered, same contract as before).
+    * once in the Project; the verified family's bare struct-field reads get
+    * rewritten by CollapseProject into one decode PER CONSUMER (fp, afp,
+    * the filter — measured +50% on q117). A Generate's generator expression
+    * is never inlined into parents, so explode(array(expr)) is a one-eval
+    * barrier; explode of a one-element array is exactly one output row per
+    * input row (a null element yields a null row — filtered: undecodable
+    * bytes never pair).
     */
-  private def fpOnce(df: DataFrame, idCol: String, fp: org.apache.spark.sql.Column): DataFrame =
-    df.select(col(idCol).as("doc_id"), explode(array(fp)).as("fp"))
-      .filter(col("fp").isNotNull)
+  private def fpOnce(m: Modality, df: DataFrame, idCol: String, contentCol: String): DataFrame = {
+    val fp = explode(array(m.fingerprint(col(contentCol))))
+    val once = m.maxAHamming match {
+      case None => df.select(col(idCol).as("doc_id"), fp.as("fp"))
+      case Some(_) =>
+        df.select(col(idCol).as("doc_id"), fp.as("__dual"))
+          .select(col("doc_id"), col("__dual.dhash").as("fp"), col("__dual.ahash").as("afp"))
+    }
+    once.filter(col("fp").isNotNull)
+  }
 
-  private def phashFps(df: DataFrame, idCol: String, contentCol: String): DataFrame =
-    fpOnce(df, idCol, graft.functions.MediaExprs.imageDHash64(col(contentCol)))
-
-  /** Band-keyed dHash table of a photo corpus — the STATIC side of the
-    * incremental perceptual dedup probe. Build once (and persist) per
-    * corpus snapshot: each later probe batch pays only its own hashes +
-    * one equi-join against this table, never a corpus re-hash. Columns
-    * (corpus_id, corpus_fp, bk); corrupt blobs (NULL hash) never enter.
+  /** Perceptual near-dup pairs of one [[Modality]]: its fingerprint banded
+    * through the SAME Manku machinery as [[simhash64Pairs]], so candidate
+    * generation is exact at `maxHamming` by pigeonhole and sub-quadratic by
+    * banding. Catches re-encoded / resized / resampled media copies whose
+    * BYTES differ — invisible to byte-digest dedup (the reference's only
+    * image mechanism). Rows whose bytes do not decode (NULL fingerprint)
+    * drop out before banding: a corrupt blob never pairs with anything.
+    * Under [[Modality.photoVerified]] every candidate must also agree on
+    * aHash within its bound; the confirm rides the banding join as a
+    * projection — no second join, no second shuffle.
+    *
+    * Scale shape: decode + fingerprint is the per-row cost (the heaviest
+    * scan expressions in the engine — gate with the header sniff first,
+    * and pair with [[Multimodal.repartitionByBytes]] for skewed media); the
+    * pair search is the banded equi-join, same inventory as q52.
+    *
+    * @return (doc_a, doc_b, hamming[, a_hamming]) — doc_a < doc_b
     */
-  def phashCorpusIndex(
+  def nearDupPairs(
+      m: Modality,
+      df: DataFrame,
+      idCol: String,
+      contentCol: String,
+      maxHamming: Int = 3,
+      blocks: Int = 6
+  ): DataFrame =
+    bandedFingerprintPairs(
+      Par.eager(fpOnce(m, df, idCol, contentCol)), maxHamming, blocks, m.bits, m.maxAHamming)
+
+  /** Band-keyed fingerprint table of a corpus — the STATIC side of the
+    * incremental perceptual dedup probe ([[probeDups]]). Build once (and
+    * persist) per corpus snapshot: each later probe batch pays only its own
+    * decodes + one equi-join against this table, never a corpus re-decode.
+    * Columns (corpus_id, corpus_fp[, corpus_afp], bk); undecodable blobs
+    * never enter. The banding parameters ride as `bk` column metadata
+    * stamped with the modality's family ([[bandingStamp]]), which survives
+    * parquet persist/reload.
+    */
+  def corpusIndex(
+      m: Modality,
       corpus: DataFrame,
       idCol: String,
       contentCol: String,
       maxHamming: Int = 3,
       blocks: Int = 6
-  ): DataFrame = {
-    fingerprintBandKeys(phashFps(corpus, idCol, contentCol), maxHamming, blocks, bits = 64)
+  ): DataFrame =
+    fingerprintBandKeys(fpOnce(m, corpus, idCol, contentCol), maxHamming, blocks, m.bits)
       .select(
-        col("doc_id").as("corpus_id"),
-        col("fp").as("corpus_fp"),
-        col("bk").as("bk", bandingStamp("phash", maxHamming, blocks)))
+        Seq(col("doc_id").as("corpus_id"), col("fp").as("corpus_fp")) ++
+          m.maxAHamming.map(_ => col("afp").as("corpus_afp")) :+
+          col("bk").as("bk", bandingStamp(m.family, maxHamming, blocks)): _*)
+
+  /** Probe a batch against a [[corpusIndex]] of the same modality: every
+    * (probe doc, corpus doc) pair within the bounds — the INCREMENTAL form
+    * of [[nearDupPairs]] (new media against an existing corpus, the twin of
+    * [[probeNewDocs]]). The banding/hamming arithmetic is
+    * [[fingerprintBandKeys]]' — identical to the batch self-join, so a pair
+    * this probe reports is exactly a pair the batch operator would.
+    * Stateless, so it is also the per-micro-batch intake probe:
+    *
+    * {{{
+    *   val idx = Dedup.corpusIndex(Modality.photo, photos, "doc_id", "content").persist()
+    *   stream.writeStream.foreachBatch { (batch, _) =>
+    *     sink(Dedup.probeDups(Modality.photo, batch, "doc_id", "content", idx))
+    *   }.start()
+    * }}}
+    *
+    * Rebuild the index when the corpus snapshot advances.
+    *
+    * (maxHamming, blocks) MUST equal the values the index was built with —
+    * band keys from different parameters never collide, so a mismatch
+    * would under-report pairs with no error. A stamped index throws on a
+    * mismatch and on another modality's stamp; for an unstamped frame
+    * (hand-built or pre-stamp persisted) the equality is the caller's
+    * contract.
+    *
+    * @return (doc_id, dup_of, hamming[, a_hamming]) — probe id, corpus id
+    */
+  def probeDups(
+      m: Modality,
+      probe: DataFrame,
+      idCol: String,
+      contentCol: String,
+      index: DataFrame,
+      maxHamming: Int = 3,
+      blocks: Int = 6
+  ): DataFrame = {
+    requireMatchingBanding(index, m.family, maxHamming, blocks)
+    fingerprintBandKeys(fpOnce(m, probe, idCol, contentCol), maxHamming, blocks, m.bits)
+      .join(index, "bk")
+      .select(
+        Seq(col("doc_id"), col("corpus_id").as("dup_of")) ++
+          hammings(c => col(c), c => col(s"corpus_$c"), m.maxAHamming): _*)
+      .distinct()
+      .filter(withinBounds(maxHamming, m.maxAHamming))
   }
 
   /** Banding-parameter stamp for a fingerprint index's key column: band
     * keys built under different (maxHamming, blocks) are incompatible — a
     * mismatched probe join would silently degrade candidate generation
-    * (keys just fail to collide), so index builders write this stamp and
-    * probes verify it. `family` keys the stamp per fingerprint family
-    * ("phash", "audio") so an index of one modality can never silently
-    * probe as another. Column metadata rides the schema through parquet
+    * (keys just fail to collide), so [[corpusIndex]] writes this stamp and
+    * [[probeDups]] verifies it. `family` keys the stamp per
+    * [[Modality]] so an index of one modality can never silently probe as
+    * another. Column metadata rides the schema through parquet
     * persist/reload.
     */
   private def bandingStamp(
@@ -635,13 +695,11 @@ object Dedup {
       .putLong(s"graft_${family}_blocks", blocks.toLong)
       .build()
 
-  /** Require an index's banding stamp (written by [[phashCorpusIndex]] /
-    * [[audioCorpusIndex]]) to match the probe's family and parameters. An
-    * unstamped frame (hand-built or pre-stamp persisted) passes — the
-    * contract is then on the caller, as documented on [[phashProbeDups]].
+  /** Require an index's banding stamp ([[bandingStamp]]) to match the
+    * probe's family and parameters. An unstamped frame (hand-built or
+    * pre-stamp persisted) passes — the contract is then on the caller, as
+    * documented on [[probeDups]].
     */
-  private val fingerprintFamilies = Seq("phash", "phashv", "audio", "video")
-
   private def requireMatchingBanding(
       index: DataFrame, family: String, maxHamming: Int, blocks: Int): Unit = {
     val m = index.schema.find(_.name == "bk").map(_.metadata)
@@ -657,344 +715,13 @@ object Dedup {
         // a stamp from a DIFFERENT family is a wrong-modality index (e.g. an
         // audio index handed to a phash probe): the fingerprints are not
         // comparable at all, so fail loudly instead of joining to nothing
-        fingerprintFamilies.filter(_ != family).foreach { other =>
+        Modality.all.map(_.family).filter(_ != family).foreach { other =>
           require(!md.contains(s"graft_${other}_max_hamming"),
             s"probe expected a $family index but the frame is stamped as a $other index — " +
               "fingerprints of different modalities never pair; pass the matching index")
         }
       }
     }
-  }
-
-  /** Probe a batch of photos against a [[phashCorpusIndex]]: every
-    * (probe doc, corpus doc) pair within `maxHamming` dHash bits — the
-    * INCREMENTAL form of [[phashNearDupPairs]] (new photos against an
-    * existing corpus, the image twin of [[probeNewDocs]]); the streaming
-    * composition is [[graft.streaming.Streams.probePhotoBatch]]. The
-    * banding/hamming arithmetic is [[fingerprintBandKeys]]' — identical
-    * to the batch self-join, so a pair this probe reports is exactly a
-    * pair the batch operator would.
-    *
-    * (maxHamming, blocks) MUST equal the values the index was built with —
-    * band keys from different parameters never collide, so a mismatch
-    * under-reports pairs with no error. Indexes from [[phashCorpusIndex]]
-    * carry the parameters as column metadata and a mismatch throws here;
-    * for an unstamped frame the equality is the caller's contract.
-    *
-    * @return (doc_id, dup_of, hamming) — probe id, corpus id
-    */
-  def phashProbeDups(
-      probe: DataFrame,
-      idCol: String,
-      contentCol: String,
-      index: DataFrame,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame = {
-    requireMatchingBanding(index, "phash", maxHamming, blocks)
-    fingerprintBandKeys(phashFps(probe, idCol, contentCol), maxHamming, blocks, bits = 64)
-      .join(index, "bk")
-      .select(
-        col("doc_id"),
-        col("corpus_id").as("dup_of"),
-        bit_count(col("fp").bitwiseXOR(col("corpus_fp"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** Dual-hash image near-dup pairs: dHash banding generates candidates
-    * (exact at `maxHamming` by pigeonhole, same Manku machinery as
-    * [[phashNearDupPairs]]), and each candidate must ALSO agree on aHash
-    * within `maxAHamming` — the confirm cut. dHash sees only horizontal
-    * luminance GRADIENTS, so two images with identical gradient signs but
-    * different absolute luminance layouts (banner recolors, inverted
-    * themes, flat-vs-structured rows — all comparisons equal) collide at
-    * dHash hamming 0; aHash thresholds cells against the global mean, the
-    * orthogonal signal, and rejects them. Both hashes come from ONE
-    * decode ([[graft.functions.PHashSupport.dualHash64]] — the decode
-    * dominates per-row cost, so the confirm is nearly free), and the
-    * confirm rides the banding join as a projection: no second join, no
-    * second shuffle, same plan shape as the single-hash operator plus one
-    * column.
-    *
-    * @return (doc_a, doc_b, hamming, a_hamming) — both within bounds
-    */
-  def phashVerifiedNearDupPairs(
-      df: DataFrame,
-      idCol: String,
-      contentCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6,
-      maxAHamming: Int = 8
-  ): DataFrame = {
-    // The explode(array(…)) is a ONE-DECODE barrier, not decoration: bare
-    // struct-field extraction gets rewritten by CollapseProject and
-    // predicate pushdown into one copy of the dual-hash expression PER
-    // CONSUMER (fp, afp, the isnotnull filter — three decodes per row,
-    // measured +50% on q117). A Generate's generator expression is never
-    // inlined into parents, so the decode runs exactly once per row and
-    // the field reads reference its output attribute.
-    // same both-sides-read-it EAGER persist rationale as
-    // bandedFingerprintPairs (AQE submits the sides concurrently; a lazy
-    // persist pays the decode once per side)
-    val cached = Par.eager(dualFps(df, idCol, contentCol))
-    val keyed = fingerprintBandKeys(cached, maxHamming, blocks, bits = 64)
-    keyed
-      .as("a")
-      .join(keyed.as("b"), col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"),
-        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"),
-        bit_count(col("a.afp").bitwiseXOR(col("b.afp"))).as("a_hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming && col("a_hamming") <= maxAHamming)
-  }
-
-  private def dualFps(df: DataFrame, idCol: String, contentCol: String): DataFrame =
-    df.select(
-        col(idCol).as("doc_id"),
-        explode(array(
-          graft.functions.MediaExprs.imageDualHash64(col(contentCol)))).as("__dual"))
-      .select(
-        col("doc_id"),
-        col("__dual.dhash").as("fp"),
-        col("__dual.ahash").as("afp"))
-      .filter(col("fp").isNotNull)
-
-  /** Band-keyed DUAL-hash table of a photo corpus — the STATIC side of the
-    * incremental verified probe, completing the family pattern for q117
-    * (every dedup modality ships its index+probe twin). Columns
-    * (corpus_id, corpus_fp, corpus_afp, bk); stamped as family "phashv" so
-    * a single-hash or audio probe can never consume it silently.
-    */
-  def phashVerifiedCorpusIndex(
-      corpus: DataFrame,
-      idCol: String,
-      contentCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame =
-    fingerprintBandKeys(dualFps(corpus, idCol, contentCol), maxHamming, blocks, bits = 64)
-      .select(
-        col("doc_id").as("corpus_id"),
-        col("fp").as("corpus_fp"),
-        col("afp").as("corpus_afp"),
-        col("bk").as("bk", bandingStamp("phashv", maxHamming, blocks)))
-
-  /** Probe a photo batch against a [[phashVerifiedCorpusIndex]]: dHash
-    * banding candidates confirmed on aHash — the INCREMENTAL form of
-    * [[phashVerifiedNearDupPairs]], identical arithmetic on both hashes,
-    * so a pair this probe reports is exactly a pair the batch operator
-    * would. One decode per probe row (the same Generate barrier), one
-    * band-key equi-join.
-    *
-    * @return (doc_id, dup_of, hamming, a_hamming) — probe id, corpus id
-    */
-  def phashVerifiedProbeDups(
-      probe: DataFrame,
-      idCol: String,
-      contentCol: String,
-      index: DataFrame,
-      maxHamming: Int = 3,
-      blocks: Int = 6,
-      maxAHamming: Int = 8
-  ): DataFrame = {
-    requireMatchingBanding(index, "phashv", maxHamming, blocks)
-    fingerprintBandKeys(dualFps(probe, idCol, contentCol), maxHamming, blocks, bits = 64)
-      .join(index, "bk")
-      .select(
-        col("doc_id"),
-        col("corpus_id").as("dup_of"),
-        bit_count(col("fp").bitwiseXOR(col("corpus_fp"))).as("hamming"),
-        bit_count(col("afp").bitwiseXOR(col("corpus_afp"))).as("a_hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming && col("a_hamming") <= maxAHamming)
-  }
-
-  private def audioFps(df: DataFrame, idCol: String, contentCol: String): DataFrame =
-    fpOnce(df, idCol, graft.functions.AudioExprs.audioFingerprint(col(contentCol)))
-
-  /** Audio-content near-dup pairs: the 49-bit perceptual energy-map
-    * fingerprint ([[graft.functions.AudioFpSupport]] — Haitsma-Kalker-style
-    * slice×band dominance over decoded PCM) banded through the SAME Manku
-    * machinery as [[phashNearDupPairs]], so candidate generation is exact
-    * at `maxHamming` by pigeonhole and sub-quadratic by banding. Catches
-    * resampled / re-encoded / gain-shifted audio copies whose BYTES differ —
-    * invisible to byte-digest dedup AND to header metadata (q92 sees a
-    * re-encoded copy as a different file). Bytes that are not a complete
-    * 16-bit PCM WAV hash NULL and drop out before banding: a corrupt blob
-    * never pairs with anything (the q33/q92/q105 untrusted-bytes contract).
-    *
-    * Scale shape: decode+Goertzel is the per-row cost (linear in clip
-    * bytes — pair with [[Multimodal.repartitionByBytes]] for skewed media);
-    * the pair search is the banded equi-join, same inventory as q52/q105.
-    */
-  def audioNearDupPairs(
-      df: DataFrame,
-      idCol: String,
-      contentCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame =
-    bandedFingerprintPairs(
-      audioFps(df, idCol, contentCol),
-      maxHamming,
-      blocks,
-      bits = graft.functions.AudioFpSupport.Bits
-    )
-
-  /** Band-keyed audio-fingerprint table of a clip corpus — the STATIC side
-    * of the incremental perceptual audio probe, the audio twin of
-    * [[phashCorpusIndex]]. Build once (and persist) per corpus snapshot;
-    * each later probe batch pays only its own decodes + one equi-join.
-    * Columns (corpus_id, corpus_fp, bk); non-PCM / corrupt blobs (NULL
-    * fingerprint) never enter. Banding parameters ride as column metadata
-    * and the probe verifies them (a mismatch would silently kill recall).
-    */
-  def audioCorpusIndex(
-      corpus: DataFrame,
-      idCol: String,
-      contentCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame =
-    fingerprintBandKeys(
-      audioFps(corpus, idCol, contentCol), maxHamming, blocks,
-      bits = graft.functions.AudioFpSupport.Bits)
-      .select(
-        col("doc_id").as("corpus_id"),
-        col("fp").as("corpus_fp"),
-        col("bk").as("bk", bandingStamp("audio", maxHamming, blocks)))
-
-  /** Probe a batch of audio clips against an [[audioCorpusIndex]]: every
-    * (probe clip, corpus clip) pair within `maxHamming` fingerprint bits —
-    * the INCREMENTAL form of [[audioNearDupPairs]] (new clips against an
-    * existing corpus, per the family pattern of [[phashProbeDups]] /
-    * [[probeNewDocs]]); the streaming composition is
-    * [[graft.streaming.Streams.probeAudioBatch]]. Banding arithmetic is
-    * [[fingerprintBandKeys]]' — identical to the batch self-join, so a pair
-    * this probe reports is exactly a pair the batch operator would.
-    *
-    * (maxHamming, blocks) MUST equal the index's build values; indexes from
-    * [[audioCorpusIndex]] carry them as column metadata and a mismatch (or
-    * a wrong-modality index) throws here.
-    *
-    * @return (doc_id, dup_of, hamming) — probe id, corpus id
-    */
-  def audioProbeDups(
-      probe: DataFrame,
-      idCol: String,
-      contentCol: String,
-      index: DataFrame,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame = {
-    requireMatchingBanding(index, "audio", maxHamming, blocks)
-    fingerprintBandKeys(
-      audioFps(probe, idCol, contentCol), maxHamming, blocks,
-      bits = graft.functions.AudioFpSupport.Bits)
-      .join(index, "bk")
-      .select(
-        col("doc_id"),
-        col("corpus_id").as("dup_of"),
-        bit_count(col("fp").bitwiseXOR(col("corpus_fp"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  private def videoFps(df: DataFrame, idCol: String, contentCol: String): DataFrame =
-    fpOnce(df, idCol, graft.functions.VideoExprs.videoFingerprint(col(contentCol)))
-
-  /** Video-content near-dup pairs: the 64-bit frame-sampled perceptual
-    * fingerprint ([[graft.functions.VideoFpSupport]] — 8 slice-midpoint
-    * frames × 8 block-luminance gradient bits) banded through the SAME
-    * Manku machinery as [[phashNearDupPairs]]/[[audioNearDupPairs]], so
-    * candidate generation is exact at `maxHamming` by pigeonhole and
-    * sub-quadratic by banding. Catches rescaled / re-framed /
-    * brightness-shifted video copies whose BYTES differ — invisible to
-    * byte-digest dedup AND to container headers (q92/q93 see a re-encoded
-    * copy as a different file). Bytes that are not a complete uncompressed
-    * RGB24 AVI fingerprint NULL and drop out before banding: a corrupt
-    * blob never pairs with anything (the q33/q92/q105 untrusted-bytes
-    * contract). This completes the dedup modality matrix: text, image,
-    * audio, video — each with batch + index/probe twin + streaming probe.
-    *
-    * Scale shape: the chunk walk is linear in clip bytes and the pixel
-    * work touches only the 8 sampled frames (pair with
-    * [[Multimodal.repartitionByBytes]] for skewed media); the pair search
-    * is the banded equi-join, same inventory as q52/q105/q115.
-    */
-  def videoNearDupPairs(
-      df: DataFrame,
-      idCol: String,
-      contentCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame =
-    bandedFingerprintPairs(
-      videoFps(df, idCol, contentCol),
-      maxHamming,
-      blocks,
-      bits = graft.functions.VideoFpSupport.Bits
-    )
-
-  /** Band-keyed video-fingerprint table of a clip corpus — the STATIC side
-    * of the incremental perceptual video probe, the video twin of
-    * [[audioCorpusIndex]]. Build once (and persist) per corpus snapshot;
-    * each later probe batch pays only its own frame samples + one
-    * equi-join. Columns (corpus_id, corpus_fp, bk); non-AVI / corrupt
-    * blobs (NULL fingerprint) never enter. Banding parameters ride as
-    * column metadata and the probe verifies them.
-    */
-  def videoCorpusIndex(
-      corpus: DataFrame,
-      idCol: String,
-      contentCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame =
-    fingerprintBandKeys(
-      videoFps(corpus, idCol, contentCol), maxHamming, blocks,
-      bits = graft.functions.VideoFpSupport.Bits)
-      .select(
-        col("doc_id").as("corpus_id"),
-        col("fp").as("corpus_fp"),
-        col("bk").as("bk", bandingStamp("video", maxHamming, blocks)))
-
-  /** Probe a batch of video clips against a [[videoCorpusIndex]]: every
-    * (probe clip, corpus clip) pair within `maxHamming` fingerprint bits —
-    * the INCREMENTAL form of [[videoNearDupPairs]], per the family pattern
-    * of [[phashProbeDups]]/[[audioProbeDups]]; the streaming composition
-    * is [[graft.streaming.Streams.probeVideoBatch]]. Banding arithmetic is
-    * [[fingerprintBandKeys]]' — identical to the batch self-join, so a
-    * pair this probe reports is exactly a pair the batch operator would.
-    *
-    * (maxHamming, blocks) MUST equal the index's build values; indexes
-    * from [[videoCorpusIndex]] carry them as column metadata and a
-    * mismatch (or a wrong-modality index) throws here.
-    *
-    * @return (doc_id, dup_of, hamming) — probe id, corpus id
-    */
-  def videoProbeDups(
-      probe: DataFrame,
-      idCol: String,
-      contentCol: String,
-      index: DataFrame,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame = {
-    requireMatchingBanding(index, "video", maxHamming, blocks)
-    fingerprintBandKeys(
-      videoFps(probe, idCol, contentCol), maxHamming, blocks,
-      bits = graft.functions.VideoFpSupport.Bits)
-      .join(index, "bk")
-      .select(
-        col("doc_id"),
-        col("corpus_id").as("dup_of"),
-        bit_count(col("fp").bitwiseXOR(col("corpus_fp"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
   }
 
   /** BANDING-QUALITY report: precision/recall of the MinHash-LSH CANDIDATE
@@ -1187,12 +914,11 @@ object Dedup {
     // sides: persist it so shingling + ranking run once. ContextCleaner
     // reclaims the blocks once the result plan is unreferenced; at cluster
     // scale swap for an explicit checkpoint. (Fan-out history: r16's
-    // input fan-out regressed ~15%; the r17 retry — fanOutSmall here plus
-    // fanOutSmallBy(doc_id) before the collect_list aggregate — fixed the
-    // single-task duplicated explode in warm profiles (2.09→1.39 s) but
-    // read flat on q24 and −15% on q133 in the cold interleaved bench,
-    // so the as-scanned shape stays; the racing consumers overlap the
-    // cheap duplicated explode.)
+    // input fan-out regressed ~15%; the r17 retry — a fan-out here plus a
+    // keyed one on doc_id before the collect_list aggregate — won warm
+    // (2.09→1.39 s) but read flat on q24 and −15% on q133 in the cold
+    // interleaved bench, so the as-scanned shape stays; numbers in
+    // OPTIMIZATION_r17.md, "q24_ngram_jaccard / q133_containment_pairs".)
     val grams = df
       .select(col(idCol).as("doc_id"), explode(array_distinct(wordTrigrams(col(textCol)))).as("gs"))
       .select(
@@ -1799,7 +1525,7 @@ object Dedup {
     * later probe batch pays only its own gram explode + one equi-join —
     * the corpus is never re-scanned per refresh, the same
     * index-then-probe contract as [[probeNewDocs]] (text) and
-    * [[phashCorpusIndex]] (images). One linear shuffle to distinct.
+    * [[corpusIndex]] (media). One linear shuffle to distinct.
     */
   def substringGramIndex(corpus: DataFrame, textCol: String, minLen: Int): DataFrame = {
     require(minLen >= 2, "minLen must be >= 2")

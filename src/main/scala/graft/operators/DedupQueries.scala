@@ -684,8 +684,8 @@ object DedupQueries {
     """.trim)
   )
 
-  /** Perceptual image-hash near-dup ([[Dedup.phashNearDupPairs]]): dHash64
-    * over a deterministic synthetic photo corpus
+  /** Perceptual image-hash near-dup ([[Dedup.nearDupPairs]] over
+    * [[Modality.photo]]): dHash64 over a deterministic synthetic photo corpus
     * ([[Multimodal.phashPhotoFixture]] — every id renders a block-pattern
     * PNG; ids ≡ 0 (mod 10) carry a planted base whose ≡ 1 neighbor is the
     * same pattern RESIZED to half resolution with exactly one grid cell
@@ -704,7 +704,7 @@ object DedupQueries {
       val T = Tables(s, dir); import s.implicits._
       val photos = Multimodal.phashPhotoFixture(T.documents.select($"doc_id"), "doc_id")
       Dedup
-        .phashNearDupPairs(photos, "doc_id", "content", maxHamming = 3)
+        .nearDupPairs(Modality.photo, photos, "doc_id", "content", maxHamming = 3)
         .orderBy($"doc_a")
     },
     Some("""
@@ -715,7 +715,8 @@ object DedupQueries {
     """.trim)
   )
 
-  /** Dual-hash verified image near-dup ([[Dedup.phashVerifiedNearDupPairs]]):
+  /** Dual-hash verified image near-dup ([[Dedup.nearDupPairs]] over
+    * [[Modality.photoVerified]]):
     * dHash banding candidates + aHash confirm, over a fixture engineered
     * so the confirm is LOAD-BEARING ([[Multimodal.dualHashPhotoFixture]] —
     * ids ≡ 0 (mod 10) render a gradient base whose ≡ 1 neighbor is a true
@@ -732,7 +733,8 @@ object DedupQueries {
       val T = Tables(s, dir); import s.implicits._
       val photos = Multimodal.dualHashPhotoFixture(T.documents.select($"doc_id"), "doc_id")
       Dedup
-        .phashVerifiedNearDupPairs(photos, "doc_id", "content", maxHamming = 3, maxAHamming = 8)
+        .nearDupPairs(
+          Modality.photoVerified(maxAHamming = 8), photos, "doc_id", "content", maxHamming = 3)
         .orderBy($"doc_a")
     },
     Some("""
@@ -744,7 +746,8 @@ object DedupQueries {
     """.trim)
   )
 
-  /** Perceptual AUDIO near-dup ([[Dedup.audioNearDupPairs]]): the 49-bit
+  /** Perceptual AUDIO near-dup ([[Dedup.nearDupPairs]] over
+    * [[Modality.audio]]): the 49-bit
     * energy-map fingerprint over a deterministic synthesized WAV corpus
     * ([[Multimodal.audioClipFixture]] — every id renders a 7-slice tone
     * clip from its base-7 digit code; ids ≡ 0 (mod 10) carry a planted
@@ -765,7 +768,7 @@ object DedupQueries {
       val T = Tables(s, dir); import s.implicits._
       val clips = Multimodal.audioClipFixture(T.documents.select($"doc_id"), "doc_id")
       Dedup
-        .audioNearDupPairs(clips, "doc_id", "content", maxHamming = 1)
+        .nearDupPairs(Modality.audio, clips, "doc_id", "content", maxHamming = 1)
         .orderBy($"doc_a")
     },
     Some("""
@@ -776,7 +779,8 @@ object DedupQueries {
     """.trim)
   )
 
-  /** Perceptual VIDEO near-dup ([[Dedup.videoNearDupPairs]]): the 64-bit
+  /** Perceptual VIDEO near-dup ([[Dedup.nearDupPairs]] over
+    * [[Modality.video]]): the 64-bit
     * frame-sampled fingerprint over a deterministic synthesized AVI corpus
     * ([[Multimodal.videoClipFixture]] — every id renders an 8-slice coded
     * clip from its base-8 digit frame code; ids ≡ 0 (mod 10) carry a
@@ -800,7 +804,7 @@ object DedupQueries {
       val T = Tables(s, dir); import s.implicits._
       val clips = Multimodal.videoClipFixture(T.documents.select($"doc_id"), "doc_id")
       Dedup
-        .videoNearDupPairs(clips, "doc_id", "content", maxHamming = 1)
+        .nearDupPairs(Modality.video, clips, "doc_id", "content", maxHamming = 1)
         .orderBy($"doc_a")
     },
     Some("""
@@ -835,25 +839,16 @@ object DedupQueries {
       val videos = Multimodal.videoClipFixture(ids.filter(decade === 2), "doc_id")
       // the three media pair operators EAGERLY materialize their fingerprint
       // caches (Par.eager — the decode runs once, not once per join side);
-      // building them from a thread pool overlaps those independent jobs
-      // (Spark schedules concurrent jobs FIFO with back-fill) instead of
-      // paying decade-render + decode three times back to back
-      import scala.concurrent.{Await, Future, blocking}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // one Future.sequence + one Await: a modality whose construction
-      // throws fails the WHOLE build at this single point (the r16 shape
-      // awaited each Future in turn, so a late failure left earlier
-      // orphaned Spark jobs running); `blocking` marks the Spark actions
-      // inside so the global pool grows past them instead of starving
-      val pairsF = Future.sequence(Seq(
-        Future(blocking(Dedup
-          .minhashCandidatePairs(T.documents, "doc_id", "text", shingleK = 5, numHashes = 12, bands = 4))),
-        Future(blocking(Dedup.phashNearDupPairs(photos, "doc_id", "content", maxHamming = 3))),
-        Future(blocking(Dedup.audioNearDupPairs(clips, "doc_id", "content", maxHamming = 1))),
-        Future(blocking(Dedup.videoNearDupPairs(videos, "doc_id", "content", maxHamming = 1)))))
-      val Seq(textPairs, imagePairs, audioPairs, videoPairs) =
-        Await.result(pairsF, Duration.Inf)
+      // building the four frames concurrently overlaps those independent
+      // jobs (Spark schedules concurrent jobs FIFO with back-fill) instead
+      // of paying decade-render + decode three times back to back. A build
+      // that throws cancels the siblings' Spark jobs ([[Par.allOrCancel]]).
+      val Seq(textPairs, imagePairs, audioPairs, videoPairs) = Par.allOrCancel(s)(
+        () => Dedup
+          .minhashCandidatePairs(T.documents, "doc_id", "text", shingleK = 5, numHashes = 12, bands = 4),
+        () => Dedup.nearDupPairs(Modality.photo, photos, "doc_id", "content", maxHamming = 3),
+        () => Dedup.nearDupPairs(Modality.audio, clips, "doc_id", "content", maxHamming = 1),
+        () => Dedup.nearDupPairs(Modality.video, videos, "doc_id", "content", maxHamming = 1))
       Profile.crossModalDupProfile(
         T.documents, "doc_id", "source",
         Seq(

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import scala.concurrent.{Await, Future, blocking}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 
 /** Parallelism/materialization helpers shared by the operator library.
   *
@@ -71,32 +76,33 @@ private[graft] object Par {
     if (est * 4 < BigInt(maxSplit) * cores) df.repartition(cores) else df
   }
 
-  /** Keyed twin of [[fanOutSmall]]: hash-repartition a SMALL frame to
-    * `defaultParallelism` on `cols` right before a groupBy/window on the
-    * same key, so the aggregation runs wide instead of at whatever
-    * partition count AQE's BYTE-based coalescing picks (a collect_list /
-    * ObjectHashAggregate over a byte-small frame is CPU-heavy per byte —
-    * measured: q24's ranked-gram-array build ran as ONE 300 ms task at
-    * sf0.1 and TWO 1.2 s tasks at sf1 under the byte rule). The aggregate
-    * reuses the repartition's hash partitioning, so this REPLACES the
-    * aggregate's own exchange rather than adding one. Same size gate as
-    * [[fanOutSmall]]: corpus-scale inputs pass through untouched and AQE
-    * keeps sizing them by bytes, which is right when partitions are
-    * already core-saturating.
-    *
-    * r17 measurement note: applied to the PPJoin gram family this won in
-    * warm single-query profiles (q24 2.09→1.39 s) but read flat-to-worse
-    * in the cold interleaved bench (q133 −15%), so no bench-surface
-    * operator currently uses it; it remains for refresh-batch compositions
-    * where the warm-session profile is the relevant regime.
+  /** Run independent builds concurrently (each typically ends in a Spark
+    * action such as [[eager]]'s count) and return their results in order —
+    * all or nothing. Every build's jobs run under ONE job group; the first
+    * build to throw cancels that group, current jobs and any the siblings
+    * submit later, and this call waits for every build to settle before
+    * rethrowing that first failure, so no sibling job outlives the call.
+    * `blocking` lets the global pool grow past threads parked in Spark
+    * actions instead of starving.
     */
-  def fanOutSmallBy(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame = {
-    if (df.isStreaming) return df
-    val spark = df.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est * 4 < BigInt(maxSplit) * cores) df.repartition(cores, cols: _*) else df
+  def allOrCancel[T](spark: SparkSession)(builds: (() => T)*): Seq[T] = {
+    val sc = spark.sparkContext
+    val group = s"graft-all-or-cancel-${java.util.UUID.randomUUID()}"
+    val firstFailure = new AtomicReference[Throwable]()
+    val runs = builds.map { build =>
+      Future(blocking {
+        sc.setJobGroup(group, "concurrent frame builds", interruptOnCancel = true)
+        try build()
+        catch {
+          case NonFatal(e) =>
+            if (firstFailure.compareAndSet(null, e)) sc.cancelJobGroupAndFutureJobs(group)
+            throw e
+        } finally sc.clearJobGroup()
+      })
+    }
+    runs.foreach(Await.ready(_, Duration.Inf))
+    Option(firstFailure.get).foreach(e => throw e)
+    runs.map(_.value.get.get)
   }
 
   // NOTE (r17 negative experiment, kept as a record): a `settleSmall`

@@ -22,17 +22,17 @@ import org.apache.spark.sql.functions._
   *                                          [[VectorIndex]] probed per refresh,
   *                                          or [[Dedup.semanticDedup]] —
   *                                          SemDeDup's cluster-bounded mode)
-  *   5c. image near-dup collapse (optional) ([[Dedup.phashNearDupPairs]] —
+  *   5c. image near-dup collapse (optional) ([[Dedup.nearDupPairs]] —
   *                                          perceptual dHash over a photo
   *                                          side table; re-encoded/resized
   *                                          image copies collapse like text
   *                                          near-dups)
-  *   5c2. audio near-dup collapse (optional) ([[Dedup.audioNearDupPairs]] —
+  *   5c2. audio near-dup collapse (optional) ([[Dedup.nearDupPairs]] —
   *                                          the clip twin: resampled/
   *                                          re-encoded/gain-shifted audio
   *                                          copies collapse via the 49-bit
   *                                          energy-map fingerprint)
-  *   5c3. video near-dup collapse (optional) ([[Dedup.videoNearDupPairs]] —
+  *   5c3. video near-dup collapse (optional) ([[Dedup.nearDupPairs]] —
   *                                          rescaled/re-framed/brightness-
   *                                          shifted video copies collapse
   *                                          via the 64-bit frame-sampled
@@ -92,6 +92,58 @@ object TrainingPipeline {
       dropLicenses: Seq[String] = Nil
   )
 
+  /** Optional image near-dup stage (5c): `photos` is a side table keyed
+    * like the corpus ((idCol, contentCol) — e.g. the photo-store read-back
+    * table, [[graft.sources.vgsi.PhotoSink.photoTable]]). Docs whose photo
+    * perceptually duplicates a surviving smaller-id doc's photo are
+    * dropped (the same min-id cluster rule as the text near-dup stage);
+    * docs without a photo, or with undecodable bytes, always survive.
+    *
+    * `maxAHamming = Some(a)` switches the stage to the dual-hash verified
+    * operator ([[Modality.photoVerified]]): dHash banding still
+    * generates the candidates, but a pair must also agree on aHash within
+    * `a` bits — cutting the gradient-only false positives (recolors,
+    * inverted themes) that dHash banding alone admits, at no extra decode
+    * cost (both hashes come from one decode).
+    */
+  final case class ImageStage(
+      photos: DataFrame,
+      idCol: String = "doc_id",
+      contentCol: String = "content",
+      maxHamming: Int = 3,
+      maxAHamming: Option[Int] = None
+  )
+
+  /** Optional audio near-dup stage (5c2) — the clip twin of [[ImageStage]]:
+    * `clips` is a (idCol, contentCol) WAV side table keyed like the corpus.
+    * Docs whose clip perceptually duplicates a surviving smaller-id doc's
+    * clip ([[Modality.audio]] — resampled/re-encoded/gain-shifted
+    * copies collapse) are dropped with the same min-id cluster rule; docs
+    * without a clip, or with undecodable bytes (NULL fingerprint), always
+    * survive.
+    */
+  final case class AudioStage(
+      clips: DataFrame,
+      idCol: String = "doc_id",
+      contentCol: String = "content",
+      maxHamming: Int = 3
+  )
+
+  /** Optional video near-dup stage (5c3) — the last member of the media
+    * dedup family: `clips` is a (idCol, contentCol) AVI side table keyed
+    * like the corpus. Docs whose video perceptually duplicates a surviving
+    * smaller-id doc's video ([[Modality.video]] —
+    * rescaled/re-framed/brightness-shifted copies collapse) are dropped
+    * with the same min-id cluster rule; docs without a clip, or with
+    * undecodable bytes (NULL fingerprint), always survive.
+    */
+  final case class VideoStage(
+      clips: DataFrame,
+      idCol: String = "doc_id",
+      contentCol: String = "content",
+      maxHamming: Int = 3
+  )
+
   /** Optional embedding near-dup stage (5b). `index = None` hashes the
     * corpus per run ([[Dedup.embedNearDupPairs]], LSH candidates); with a
     * persisted [[VectorIndex]] handle the stage probes the index instead —
@@ -115,8 +167,8 @@ object TrainingPipeline {
     * keeps assignments, so the order composes; the reverse would retrain
     * against about-to-be-split lists). Same full-coverage contract on
     * `embeddings` as rebalance.
-    */
-  /** `semanticCentroids` selects the third candidate-generation mode:
+    *
+    * `semanticCentroids` selects the third candidate-generation mode:
     * SemDeDup ([[Dedup.semanticDedup]] — near-dup search bounded by
     * nearest-centroid clusters; Abbas et al. 2023) instead of LSH banding
     * or an index probe. Docs the stage marks `kept=false` are dropped;
@@ -124,58 +176,6 @@ object TrainingPipeline {
     * modes (no embedding ⇒ no candidate). Size the centroid count with
     * the corpus (k ∝ N) — see the operator's scaladoc.
     */
-  /** Optional image near-dup stage (5c): `photos` is a side table keyed
-    * like the corpus ((idCol, contentCol) — e.g. the photo-store read-back
-    * table, [[graft.sources.vgsi.PhotoSink.photoTable]]). Docs whose photo
-    * perceptually duplicates a surviving smaller-id doc's photo are
-    * dropped (the same min-id cluster rule as the text near-dup stage);
-    * docs without a photo, or with undecodable bytes, always survive.
-    */
-  /** `maxAHamming = Some(a)` switches the stage to the dual-hash verified
-    * operator ([[Dedup.phashVerifiedNearDupPairs]]): dHash banding still
-    * generates the candidates, but a pair must also agree on aHash within
-    * `a` bits — cutting the gradient-only false positives (recolors,
-    * inverted themes) that dHash banding alone admits, at no extra decode
-    * cost (both hashes come from one decode).
-    */
-  final case class ImageStage(
-      photos: DataFrame,
-      idCol: String = "doc_id",
-      contentCol: String = "content",
-      maxHamming: Int = 3,
-      maxAHamming: Option[Int] = None
-  )
-
-  /** Optional audio near-dup stage (5c2) — the clip twin of [[ImageStage]]:
-    * `clips` is a (idCol, contentCol) WAV side table keyed like the corpus.
-    * Docs whose clip perceptually duplicates a surviving smaller-id doc's
-    * clip ([[Dedup.audioNearDupPairs]] — resampled/re-encoded/gain-shifted
-    * copies collapse) are dropped with the same min-id cluster rule; docs
-    * without a clip, or with undecodable bytes (NULL fingerprint), always
-    * survive.
-    */
-  final case class AudioStage(
-      clips: DataFrame,
-      idCol: String = "doc_id",
-      contentCol: String = "content",
-      maxHamming: Int = 3
-  )
-
-  /** Optional video near-dup stage (5c3) — the last member of the media
-    * dedup family: `clips` is a (idCol, contentCol) AVI side table keyed
-    * like the corpus. Docs whose video perceptually duplicates a surviving
-    * smaller-id doc's video ([[Dedup.videoNearDupPairs]] —
-    * rescaled/re-framed/brightness-shifted copies collapse) are dropped
-    * with the same min-id cluster rule; docs without a clip, or with
-    * undecodable bytes (NULL fingerprint), always survive.
-    */
-  final case class VideoStage(
-      clips: DataFrame,
-      idCol: String = "doc_id",
-      contentCol: String = "content",
-      maxHamming: Int = 3
-  )
-
   final case class EmbedStage(
       embeddings: DataFrame,
       idCol: String = "doc_id",
@@ -345,22 +345,17 @@ object TrainingPipeline {
       Dedup.dropNearDups(prev, idCol, pairsOf(alive).select(col("doc_a"), col("doc_b")))
     }
     val imageDeduped = image.fold(embedDeduped) { im =>
-      perceptualDedup(embedDeduped, im.photos, im.idCol) { alive =>
-        im.maxAHamming match {
-          case Some(a) =>
-            Dedup.phashVerifiedNearDupPairs(
-              alive, im.idCol, im.contentCol, im.maxHamming, maxAHamming = a)
-          case None => Dedup.phashNearDupPairs(alive, im.idCol, im.contentCol, im.maxHamming)
-        }
-      }
+      val m = im.maxAHamming.fold(Modality.photo)(Modality.photoVerified(_))
+      perceptualDedup(embedDeduped, im.photos, im.idCol)(
+        Dedup.nearDupPairs(m, _, im.idCol, im.contentCol, im.maxHamming))
     }
     val audioDeduped = audio.fold(imageDeduped) { au =>
       perceptualDedup(imageDeduped, au.clips, au.idCol)(
-        Dedup.audioNearDupPairs(_, au.idCol, au.contentCol, au.maxHamming))
+        Dedup.nearDupPairs(Modality.audio, _, au.idCol, au.contentCol, au.maxHamming))
     }
     val videoDeduped = video.fold(audioDeduped) { vi =>
       perceptualDedup(audioDeduped, vi.clips, vi.idCol)(
-        Dedup.videoNearDupPairs(_, vi.idCol, vi.contentCol, vi.maxHamming))
+        Dedup.nearDupPairs(Modality.video, _, vi.idCol, vi.contentCol, vi.maxHamming))
     }
 
     // 5d (optional): Lee et al. substring trim — replace each survivor's

@@ -161,7 +161,7 @@ object UrlOps {
   }
 
   /** The STATIC side of the incremental canonical-URL dedup — the crawl
-    * twin of [[Dedup.audioCorpusIndex]] for the q119 family: one row per
+    * twin of [[Dedup.corpusIndex]] for the q119 family: one row per
     * canonical URL already in the corpus, carrying the corpus's BEST
     * (quality DESC, id ASC) holder of that URL, so a probe batch can
     * reproduce [[canonicalUrlDedup]]'s keep-best verdict without touching

@@ -418,73 +418,6 @@ object Streams {
       .drop("__norm_t")
   }
 
-  /** Per-micro-batch perceptual image-dup probe — the photo-intake twin of
-    * [[probeVectorBatch]]: run inside `foreachBatch` against a
-    * [[graft.operators.Dedup.phashCorpusIndex]] built once per corpus
-    * snapshot (and persisted by the caller), so each arriving batch pays
-    * only its own decodes + one band-key equi-join. Same banding/hamming
-    * arithmetic as the batch operator, so a flagged pair here is exactly
-    * a pair [[graft.operators.Dedup.phashNearDupPairs]] would report.
-    *
-    * {{{
-    *   val idx = Dedup.phashCorpusIndex(photos, "doc_id", "content").persist()
-    *   stream.writeStream.foreachBatch { (batch, _) =>
-    *     sink(Streams.probePhotoBatch(batch, "doc_id", "content", idx))
-    *   }.start()
-    * }}}
-    *
-    * Rebuild the index when the corpus snapshot advances (the same
-    * handle-capture contract as the vector probe). Corrupt image bytes on
-    * either side hash NULL and never pair.
-    */
-  def probePhotoBatch(
-      batch: DataFrame,
-      idCol: String,
-      contentCol: String,
-      index: DataFrame,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame =
-    graft.operators.Dedup.phashProbeDups(batch, idCol, contentCol, index, maxHamming, blocks)
-
-  /** Per-micro-batch DUAL-HASH verified image-dup probe — [[probePhotoBatch]]
-    * with the aHash confirm: run inside `foreachBatch` against a
-    * [[graft.operators.Dedup.phashVerifiedCorpusIndex]]; a flagged pair is
-    * exactly a pair [[graft.operators.Dedup.phashVerifiedNearDupPairs]]
-    * would report (gradient-only dHash false positives cut by the confirm).
-    */
-  def probeVerifiedPhotoBatch(
-      batch: DataFrame,
-      idCol: String,
-      contentCol: String,
-      index: DataFrame,
-      maxHamming: Int = 3,
-      blocks: Int = 6,
-      maxAHamming: Int = 8
-  ): DataFrame =
-    graft.operators.Dedup
-      .phashVerifiedProbeDups(batch, idCol, contentCol, index, maxHamming, blocks, maxAHamming)
-
-  /** Per-micro-batch perceptual AUDIO-dup probe — the clip-intake twin of
-    * [[probePhotoBatch]]: run inside `foreachBatch` against a
-    * [[graft.operators.Dedup.audioCorpusIndex]] built once per corpus
-    * snapshot (and persisted by the caller), so each arriving batch pays
-    * only its own decodes + one band-key equi-join. Same banding/hamming
-    * arithmetic as the batch operator, so a flagged pair here is exactly a
-    * pair [[graft.operators.Dedup.audioNearDupPairs]] would report.
-    * Non-WAV / corrupt bytes on either side fingerprint NULL and never
-    * pair; a wrong-modality or mismatched-parameter index throws.
-    */
-  def probeAudioBatch(
-      batch: DataFrame,
-      idCol: String,
-      contentCol: String,
-      index: DataFrame,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame =
-    graft.operators.Dedup.audioProbeDups(batch, idCol, contentCol, index, maxHamming, blocks)
-
   /** Per-micro-batch canonical-URL dedup against a static
     * [[graft.operators.UrlOps.canonicalUrlCorpusIndex]] — the crawl-intake
     * member of the probe family: each arriving batch is deduped within
@@ -535,22 +468,6 @@ object Streams {
       graft.operators.WebIntake.dedupKey, length(col("text")), urlIndex)
       .select(col("url"), col("host"), col("canonical_url"), col("text"))
   }
-
-  /** Per-batch video-content dup probe against a static
-    * [[graft.operators.Dedup.videoCorpusIndex]] — the video member of the
-    * probe family ([[probePhotoBatch]]/[[probeAudioBatch]]): stateless,
-    * arbitrarily restartable, identical pair arithmetic to the batch
-    * self-join. Use inside `foreachBatch` on a binary-clip stream.
-    */
-  def probeVideoBatch(
-      batch: DataFrame,
-      idCol: String,
-      contentCol: String,
-      index: DataFrame,
-      maxHamming: Int = 3,
-      blocks: Int = 6
-  ): DataFrame =
-    graft.operators.Dedup.videoProbeDups(batch, idCol, contentCol, index, maxHamming, blocks)
 
   /** Windowed change counts per entity-key column — the streaming version of
     * the changed-since report (W5).

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{AudioExprs, AudioFpSupport}
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{Dedup, Modality, Multimodal}
 import org.apache.spark.sql.functions._
 
 /** Perceptual audio fingerprinting (49-bit energy map over PCM) + the banded
@@ -145,7 +145,7 @@ class AudioSpec extends SparkSpec {
     val clips = Multimodal.audioClipFixture(ids, "doc_id")
       // plant a corrupt blob alongside: must be invisible
       .union(Seq((1000L, Array[Byte](1, 2, 3))).toDF("doc_id", "content"))
-    val pairs = Dedup.audioNearDupPairs(clips, "doc_id", "content", maxHamming = 1)
+    val pairs = Dedup.nearDupPairs(Modality.audio, clips, "doc_id", "content", maxHamming = 1)
       .orderBy($"doc_a")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -157,8 +157,8 @@ class AudioSpec extends SparkSpec {
     val clips = Multimodal.audioClipFixture(ids, "doc_id")
     val corpus = clips.filter($"doc_id" % 10 =!= 1)
     val batch = clips.filter($"doc_id" % 10 === 1)
-    val idx = Dedup.audioCorpusIndex(corpus, "doc_id", "content", maxHamming = 1)
-    val dups = graft.streaming.Streams.probeAudioBatch(batch, "doc_id", "content", idx, maxHamming = 1)
+    val idx = Dedup.corpusIndex(Modality.audio, corpus, "doc_id", "content", maxHamming = 1)
+    val dups = Dedup.probeDups(Modality.audio, batch, "doc_id", "content", idx, maxHamming = 1)
       .orderBy($"doc_id")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -167,21 +167,21 @@ class AudioSpec extends SparkSpec {
 
   test("probe rejects a mismatched-parameter index and a wrong-modality index loudly") {
     val clips = Multimodal.audioClipFixture((0L until 10L).toDF("doc_id"), "doc_id")
-    val idx = Dedup.audioCorpusIndex(clips, "doc_id", "content", maxHamming = 1)
+    val idx = Dedup.corpusIndex(Modality.audio, clips, "doc_id", "content", maxHamming = 1)
     val e1 = intercept[IllegalArgumentException] {
-      Dedup.audioProbeDups(clips, "doc_id", "content", idx, maxHamming = 3)
+      Dedup.probeDups(Modality.audio, clips, "doc_id", "content", idx, maxHamming = 3)
     }
     assert(e1.getMessage.contains("maxHamming"))
     // an AUDIO index handed to the PHASH probe: different modality, must throw
     val photos = Multimodal.phashPhotoFixture((0L until 5L).toDF("doc_id"), "doc_id")
     val e2 = intercept[IllegalArgumentException] {
-      Dedup.phashProbeDups(photos, "doc_id", "content", idx, maxHamming = 1)
+      Dedup.probeDups(Modality.photo, photos, "doc_id", "content", idx, maxHamming = 1)
     }
     assert(e2.getMessage.contains("modalit"))
     // and the reverse: a PHASH index probed as audio
-    val pidx = Dedup.phashCorpusIndex(photos, "doc_id", "content")
+    val pidx = Dedup.corpusIndex(Modality.photo, photos, "doc_id", "content")
     val e3 = intercept[IllegalArgumentException] {
-      Dedup.audioProbeDups(clips, "doc_id", "content", pidx)
+      Dedup.probeDups(Modality.audio, clips, "doc_id", "content", pidx)
     }
     assert(e3.getMessage.contains("modalit"))
   }
@@ -219,12 +219,12 @@ class AudioSpec extends SparkSpec {
 
   test("index banding stamp survives a parquet round-trip") {
     val clips = Multimodal.audioClipFixture((0L until 6L).toDF("doc_id"), "doc_id")
-    val idx = Dedup.audioCorpusIndex(clips, "doc_id", "content", maxHamming = 1)
+    val idx = Dedup.corpusIndex(Modality.audio, clips, "doc_id", "content", maxHamming = 1)
     val dir = java.nio.file.Files.createTempDirectory("audio_idx").toString
     idx.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     val e = intercept[IllegalArgumentException] {
-      Dedup.audioProbeDups(clips, "doc_id", "content", back, maxHamming = 2)
+      Dedup.probeDups(Modality.audio, clips, "doc_id", "content", back, maxHamming = 2)
     }
     assert(e.getMessage.contains("maxHamming=1"))
   }

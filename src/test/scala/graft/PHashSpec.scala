@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{MediaExprs, PHashSupport}
-import graft.operators.{Dedup, Multimodal, TrainingPipeline}
+import graft.operators.{Dedup, Modality, Multimodal, TrainingPipeline}
 import org.apache.spark.sql.functions._
 
 /** Perceptual image hashing (dHash/aHash) + the banded pair search and the
@@ -85,10 +85,10 @@ class PHashSpec extends SparkSpec {
   test("verified operator rejects the decoy pairs the single-hash operator admits") {
     val ids = (0L until 40L).toDF("doc_id")
     val photos = Multimodal.dualHashPhotoFixture(ids, "doc_id")
-    val plain = Dedup.phashNearDupPairs(photos, "doc_id", "content", maxHamming = 3)
+    val plain = Dedup.nearDupPairs(Modality.photo, photos, "doc_id", "content", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val verified = Dedup
-      .phashVerifiedNearDupPairs(photos, "doc_id", "content", maxHamming = 3, maxAHamming = 8)
+      .nearDupPairs(Modality.photoVerified(maxAHamming = 8), photos, "doc_id", "content", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val truePairs = (0L until 40L by 10L).map(b => (b, b + 1)).toSet
     val decoyPairs = (0L until 40L by 10L).flatMap(b => Seq((b, b + 2), (b + 1, b + 2))).toSet
@@ -103,9 +103,9 @@ class PHashSpec extends SparkSpec {
     val photos = Multimodal.dualHashPhotoFixture(ids, "doc_id")
     val corpus = photos.filter($"doc_id" % 10 =!= 1)
     val batch = photos.filter($"doc_id" % 10 === 1)
-    val idx = Dedup.phashVerifiedCorpusIndex(corpus, "doc_id", "content")
-    val dups = graft.streaming.Streams
-      .probeVerifiedPhotoBatch(batch, "doc_id", "content", idx)
+    val idx = Dedup.corpusIndex(Modality.photoVerified(), corpus, "doc_id", "content")
+    val dups = Dedup
+      .probeDups(Modality.photoVerified(), batch, "doc_id", "content", idx)
       .orderBy($"doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
     // each copy (≡1) pairs with its base (≡2's decoy is dHash-identical to
@@ -113,12 +113,12 @@ class PHashSpec extends SparkSpec {
     assert(dups.toSeq == (1L until 41L by 10L).map(c => (c, c - 1, 0, 0)))
     // a verified index probed by the UNVERIFIED phash probe: wrong family
     val e = intercept[IllegalArgumentException] {
-      Dedup.phashProbeDups(batch, "doc_id", "content", idx)
+      Dedup.probeDups(Modality.photo, batch, "doc_id", "content", idx)
     }
     assert(e.getMessage.contains("modalit"))
     // and mismatched banding params throw as everywhere
     val e2 = intercept[IllegalArgumentException] {
-      Dedup.phashVerifiedProbeDups(batch, "doc_id", "content", idx, maxHamming = 2)
+      Dedup.probeDups(Modality.photoVerified(), batch, "doc_id", "content", idx, maxHamming = 2)
     }
     assert(e2.getMessage.contains("maxHamming"))
   }
@@ -187,7 +187,7 @@ class PHashSpec extends SparkSpec {
       // plant a corrupt blob on an id that would otherwise be a unique pattern
       .withColumn("content",
         when($"doc_id" === 7L, lit("not an image".getBytes)).otherwise($"content"))
-    val pairs = Dedup.phashNearDupPairs(photos, "doc_id", "content", maxHamming = 3)
+    val pairs = Dedup.nearDupPairs(Modality.photo, photos, "doc_id", "content", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     assert(pairs == Seq((10L, 11L, 1), (20L, 21L, 1), (30L, 31L, 1), (40L, 41L, 1), (50L, 51L, 1)))
   }
@@ -201,14 +201,14 @@ class PHashSpec extends SparkSpec {
       (1003L, Multimodal.blockPatternPng(999L, 8, paired = false, isCopy = false)),
       (1004L, "corrupt bytes".getBytes)
     ).toDF("doc_id", "content")
-    val idx = Dedup.phashCorpusIndex(corpus, "doc_id", "content")
-    val probed = Dedup.phashProbeDups(probe, "doc_id", "content", idx, maxHamming = 3)
+    val idx = Dedup.corpusIndex(Modality.photo, corpus, "doc_id", "content")
+    val probed = Dedup.probeDups(Modality.photo, probe, "doc_id", "content", idx, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     assert(probed == Seq((1001L, 13L, 0), (1002L, 27L, 0)),
       s"resized copies at hamming 0, novel/corrupt never pair — got $probed")
     // parity: the same pairs fall out of the batch self-join over the union
     val batchPairs = Dedup
-      .phashNearDupPairs(corpus.unionByName(probe), "doc_id", "content", maxHamming = 3)
+      .nearDupPairs(Modality.photo, corpus.unionByName(probe), "doc_id", "content", maxHamming = 3)
       .filter($"doc_b" >= 1000L && $"doc_a" < 1000L)
       .collect().map(r => (r.getLong(1), r.getLong(0), r.getInt(2))).sorted.toSeq
     assert(batchPairs == probed, "probe and batch operators must report identical cross pairs")
@@ -218,30 +218,30 @@ class PHashSpec extends SparkSpec {
     val corpus = Multimodal.phashPhotoFixture((1L to 5L).toDF("doc_id"), "doc_id")
     val probe = Seq((9001L, Multimodal.blockPatternPng(2L, 3, paired = false, isCopy = false)))
       .toDF("doc_id", "content")
-    val idx = Dedup.phashCorpusIndex(corpus, "doc_id", "content", maxHamming = 3, blocks = 6)
+    val idx = Dedup.corpusIndex(Modality.photo, corpus, "doc_id", "content", maxHamming = 3, blocks = 6)
     val e = intercept[IllegalArgumentException] {
-      Dedup.phashProbeDups(probe, "doc_id", "content", idx, maxHamming = 2, blocks = 6)
+      Dedup.probeDups(Modality.photo, probe, "doc_id", "content", idx, maxHamming = 2, blocks = 6)
     }
     assert(e.getMessage.contains("maxHamming=3"))
     intercept[IllegalArgumentException] {
-      Dedup.phashProbeDups(probe, "doc_id", "content", idx, maxHamming = 3, blocks = 8)
+      Dedup.probeDups(Modality.photo, probe, "doc_id", "content", idx, maxHamming = 3, blocks = 8)
     }
     // the stamp survives a parquet round-trip (persisted index snapshots)
     val dir = java.nio.file.Files.createTempDirectory("phash_idx").toString
     idx.write.mode("overwrite").parquet(dir)
     val reloaded = spark.read.parquet(dir)
     intercept[IllegalArgumentException] {
-      Dedup.phashProbeDups(probe, "doc_id", "content", reloaded, maxHamming = 2, blocks = 6)
+      Dedup.probeDups(Modality.photo, probe, "doc_id", "content", reloaded, maxHamming = 2, blocks = 6)
     }
     // matching params still probe fine
-    assert(Dedup.phashProbeDups(probe, "doc_id", "content", reloaded).count() >= 1L)
+    assert(Dedup.probeDups(Modality.photo, probe, "doc_id", "content", reloaded).count() >= 1L)
   }
 
   test("probePhotoBatch flags intake dups per micro-batch (streaming composition)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val corpus = Multimodal.phashPhotoFixture((1L to 30L).toDF("doc_id"), "doc_id")
-    val idx = Dedup.phashCorpusIndex(corpus, "doc_id", "content").persist()
+    val idx = Dedup.corpusIndex(Modality.photo, corpus, "doc_id", "content").persist()
     try {
       // the stream carries (id, pattern-seed); the foreachBatch sink builds
       // the photo bytes (the intake decode boundary) and probes the index
@@ -261,8 +261,8 @@ class PHashSpec extends SparkSpec {
           val photos = rows.toSeq.map { case (pid, seed) =>
             (pid, Multimodal.blockPatternPng(seed, cellPx = 3, paired = false, isCopy = false))
           }.toDF("doc_id", "content")
-          graft.streaming.Streams
-            .probePhotoBatch(photos, "doc_id", "content", idx)
+          Dedup
+            .probeDups(Modality.photo, photos, "doc_id", "content", idx)
             .collect()
             .foreach(r => flagged.add((r.getLong(0), r.getLong(1))))
           ()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.VideoFpSupport
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{Dedup, Modality, Multimodal}
 import org.apache.spark.sql.functions._
 
 /** Perceptual video fingerprinting (64-bit frame-sampled gradient hash over
@@ -130,7 +130,7 @@ class VideoSpec extends SparkSpec {
     val ids = (0L until 60L).toDF("doc_id")
     val clips = Multimodal.videoClipFixture(ids, "doc_id")
       .union(Seq((1000L, Array[Byte](1, 2, 3))).toDF("doc_id", "content"))
-    val pairs = Dedup.videoNearDupPairs(clips, "doc_id", "content", maxHamming = 1)
+    val pairs = Dedup.nearDupPairs(Modality.video, clips, "doc_id", "content", maxHamming = 1)
       .orderBy($"doc_a")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -142,8 +142,8 @@ class VideoSpec extends SparkSpec {
     val clips = Multimodal.videoClipFixture(ids, "doc_id")
     val corpus = clips.filter($"doc_id" % 10 =!= 1)
     val batch = clips.filter($"doc_id" % 10 === 1)
-    val idx = Dedup.videoCorpusIndex(corpus, "doc_id", "content", maxHamming = 1)
-    val dups = graft.streaming.Streams.probeVideoBatch(batch, "doc_id", "content", idx, maxHamming = 1)
+    val idx = Dedup.corpusIndex(Modality.video, corpus, "doc_id", "content", maxHamming = 1)
+    val dups = Dedup.probeDups(Modality.video, batch, "doc_id", "content", idx, maxHamming = 1)
       .orderBy($"doc_id")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -152,21 +152,21 @@ class VideoSpec extends SparkSpec {
 
   test("probe rejects a mismatched-parameter index and a wrong-modality index loudly") {
     val clips = Multimodal.videoClipFixture((0L until 10L).toDF("doc_id"), "doc_id")
-    val idx = Dedup.videoCorpusIndex(clips, "doc_id", "content", maxHamming = 1)
+    val idx = Dedup.corpusIndex(Modality.video, clips, "doc_id", "content", maxHamming = 1)
     val e1 = intercept[IllegalArgumentException] {
-      Dedup.videoProbeDups(clips, "doc_id", "content", idx, maxHamming = 3)
+      Dedup.probeDups(Modality.video, clips, "doc_id", "content", idx, maxHamming = 3)
     }
     assert(e1.getMessage.contains("maxHamming"))
     // a VIDEO index handed to the AUDIO probe: different modality, must throw
     val wavs = Multimodal.audioClipFixture((0L until 5L).toDF("doc_id"), "doc_id")
     val e2 = intercept[IllegalArgumentException] {
-      Dedup.audioProbeDups(wavs, "doc_id", "content", idx, maxHamming = 1)
+      Dedup.probeDups(Modality.audio, wavs, "doc_id", "content", idx, maxHamming = 1)
     }
     assert(e2.getMessage.contains("modalit"))
     // and the reverse: an AUDIO index probed as video
-    val aidx = Dedup.audioCorpusIndex(wavs, "doc_id", "content")
+    val aidx = Dedup.corpusIndex(Modality.audio, wavs, "doc_id", "content")
     val e3 = intercept[IllegalArgumentException] {
-      Dedup.videoProbeDups(clips, "doc_id", "content", aidx)
+      Dedup.probeDups(Modality.video, clips, "doc_id", "content", aidx)
     }
     assert(e3.getMessage.contains("modalit"))
   }
@@ -202,12 +202,12 @@ class VideoSpec extends SparkSpec {
 
   test("index banding stamp survives a parquet round-trip") {
     val clips = Multimodal.videoClipFixture((0L until 6L).toDF("doc_id"), "doc_id")
-    val idx = Dedup.videoCorpusIndex(clips, "doc_id", "content", maxHamming = 1)
+    val idx = Dedup.corpusIndex(Modality.video, clips, "doc_id", "content", maxHamming = 1)
     val dir = java.nio.file.Files.createTempDirectory("video_idx").toString
     idx.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     val e = intercept[IllegalArgumentException] {
-      Dedup.videoProbeDups(clips, "doc_id", "content", back, maxHamming = 2)
+      Dedup.probeDups(Modality.video, clips, "doc_id", "content", back, maxHamming = 2)
     }
     assert(e.getMessage.contains("maxHamming=1"))
   }
