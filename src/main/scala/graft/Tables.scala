@@ -20,18 +20,25 @@ final case class Tables(spark: SparkSession, dir: String) {
     * production discipline at any scale (at 100 TB the footer-sampling job
     * is a real driver stall). The memo holds METADATA only (a StructType
     * per path), never rows: every query still computes from the parquet
-    * files. Keyed by (full path, mtime, length), so different SF dirs (or
-    * testdata generations with drifted physical types — see [[events]])
-    * never share an entry — and a table REWRITTEN at the same path within
-    * one JVM (testdata refresh, MakeSf overwrite in a long session) gets a
-    * fresh inference instead of a silently stale StructType (added columns
-    * vanishing, physical-type drift erroring). The stat call is
-    * microseconds against the ~50 ms footer job it replaces.
+    * files. Keyed by the full path plus its part files — their count and
+    * the newest one's (mtime, length) — so different SF dirs (or testdata
+    * generations with drifted physical types — see [[events]]) never share
+    * an entry, and a table REWRITTEN at the same path within one JVM
+    * (testdata refresh, MakeSf overwrite in a long session) gets a fresh
+    * inference instead of a silently stale StructType (added columns
+    * vanishing, physical-type drift erroring). A directory's own stat is
+    * not enough: its length never moves and a rewrite inside the mtime
+    * resolution keeps its mtime. The listing is microseconds against the
+    * ~50 ms footer job it replaces.
     */
   def t(name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val f = new java.io.File(path)
-    val key = s"$path@${f.lastModified}:${f.length}"
+    // a plain parquet file is its own single part; Spark skips _/. files
+    val parts = Option(f.listFiles).fold(Array(f))(
+      _.filter(p => p.isFile && !p.getName.startsWith("_") && !p.getName.startsWith(".")))
+    val newest = parts.maxByOption(p => (p.lastModified, p.getName))
+    val key = s"$path@${parts.length}:${newest.map(p => s"${p.lastModified}:${p.length}")}"
     val schema = Tables.schemaCache.computeIfAbsent(
       key, _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)

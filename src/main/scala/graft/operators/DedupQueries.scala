@@ -279,10 +279,12 @@ object DedupQueries {
 
   /** Near-dup clusters: connected components over the q25 candidate pairs —
     * every doc touched by a pair labeled with its cluster's smallest id.
-    * Spark side runs alternating small-star/large-star rounds
-    * ([[Graph.connectedComponents]]); the oracle computes the same fixpoint
-    * as a recursive min-label closure (fine at oracle scale; quadratic in
-    * cluster size, which is exactly why the Spark side doesn't do it).
+    * Spark side is [[Graph.connectedComponents]]: a driver-side union-find
+    * while the edge list fits its `maxDriverEdges` cap (every sf the bench
+    * runs), alternating small-star/large-star rounds above it; the oracle
+    * computes the same fixpoint as a recursive min-label closure (fine at
+    * oracle scale; quadratic in cluster size, which is exactly why the
+    * Spark side doesn't do it).
     */
   private val q62 = Q(
     "q62_neardup_clusters",

@@ -146,9 +146,10 @@ object EntityResolution {
     *
     * Composition of the engine's existing scale paths: the verified pairs
     * from [[blockedEditDistancePairs]] feed
-    * [[Graph.connectedComponents]] (join-based small-star/large-star — the
-    * same O(log n)-round fixpoint the near-dup clusters ride, never a
-    * driver-side closure), and survivor choice is
+    * [[Graph.connectedComponents]] (the near-dup clusters' operator: a
+    * driver-side union-find up to its `maxDriverEdges` cap of verified
+    * pairs, join-based O(log n) small-star/large-star rounds above it),
+    * and survivor choice is
     * [[Dedup.keepBestPerCluster]] (broadcast cluster assignment, window
     * only over clustered records). Records matching nothing are their own
     * entity and always survive.

@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
 
-/** Distributed connected components — the collapse step of near-dedup.
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+/** Connected components — the collapse step of near-dedup.
   *
   * The pair generators ([[Dedup.minhashCandidatePairs]], simhash/winnowing
   * pairs, [[Dedup.embedNearDupPairs]]) emit similarity EDGES; an actual
@@ -22,8 +26,10 @@ import org.apache.spark.sql.functions._
   * round's output is localCheckpoint'ed to truncate the iterative lineage
   * (without it the plan doubles per round and planning time explodes).
   *
-  * Driver involvement is iteration CONTROL only (a count+checksum action per
-  * round to detect the fixpoint) — never edge data.
+  * Size gate: an edge list of at most `maxDriverEdges` rows is collected and
+  * resolved by a union-find on the driver (zero per-round jobs); a larger
+  * one runs the rounds above, where the driver sees only a per-round
+  * fixpoint count — never edge data.
   */
 object Graph {
 
@@ -59,10 +65,13 @@ object Graph {
 
   /** Rounds the most recent [[connectedComponents]] call took to converge —
     * observability for scale runs (the O(log n) round count is the scaling
-    * claim ScaleBench verifies). Driver-side, last-call-wins; diagnostics
-    * only, never control flow.
+    * claim ScaleBench verifies); 0 when the call took the driver-local
+    * path. Driver-side, last-call-wins; diagnostics only, never control flow.
     */
   @volatile var lastRounds: Int = -1
+
+  /** Default edge-row cap of [[connectedComponents]]'s driver-local path. */
+  val DefaultMaxDriverEdges: Int = 100000
 
   /** Connected components over an undirected edge list.
     *
@@ -80,14 +89,20 @@ object Graph {
     *         both columns carry the ids cast to string. Isolated nodes
     *         never appear in an edge list — union them in with
     *         `component = id` at the call site if needed.
+    * @param maxDriverEdges edge-row cap for the driver-local union-find;
+    *         above it the distributed rounds run instead (100k edges is a
+    *         ~200k-row local result, small enough to broadcast; pass 0 to
+    *         force the distributed form)
     */
   def connectedComponents(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      maxIter: Int = 50
+      maxIter: Int = 50,
+      maxDriverEdges: Int = DefaultMaxDriverEdges
   ): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+    require(maxDriverEdges >= 0 && maxDriverEdges < Int.MaxValue,
+      s"maxDriverEdges must be in [0, Int.MaxValue), got $maxDriverEdges")
     val spark: SparkSession = edges.sparkSession
     import spark.implicits._
     // long space only for INTEGRAL ids: a fractional id (double after an
@@ -101,7 +116,7 @@ object Graph {
     if (numeric)
       ccLongIds(
         edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")),
-        maxIter)
+        maxIter, maxDriverEdges)
     else {
       // hash each id to a long (xxhash64 — collision odds ~n²/2⁶⁴,
       // negligible below ~10⁹ distinct ids), run CC in long space, then
@@ -131,7 +146,8 @@ object Graph {
         .select(xxhash64($"orig").as("h"), $"orig")
         .localCheckpoint(false)
       val comp =
-        ccLongIds(strEdges.select(xxhash64($"os").as("s"), xxhash64($"od").as("d")), maxIter)
+        ccLongIds(
+          strEdges.select(xxhash64($"os").as("s"), xxhash64($"od").as("d")), maxIter, maxDriverEdges)
       // left join + coalesce-to-self: ids absent from the CC body (their
       // only edges were half-null) are their own singleton component
       mapping
@@ -144,16 +160,39 @@ object Graph {
     }
   }
 
-  private def ccLongIds(prepared: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark: SparkSession = prepared.sparkSession
-    import spark.implicits._
-
+  private def ccLongIds(prepared: DataFrame, maxIter: Int, maxDriverEdges: Int): DataFrame = {
     // Scan the caller's edge plan exactly ONCE: the input is often itself an
     // expensive pipeline (q62/q63 feed the full MinHash+window plan in), and
-    // both the canonical edge set and the node list below need it. A narrow
-    // two-long-column local checkpoint decouples everything downstream from
-    // the input plan's cost.
+    // the size gate, the canonical edge set and the node list all read it.
+    // A narrow two-long-column local checkpoint decouples everything
+    // downstream from the input plan's cost.
     val raw = prepared.localCheckpoint(false)
+
+    // Size gate: a bounded collect (cap + 1 rows) decides. At or below the
+    // cap the whole edge list is on the driver and one union-find replaces
+    // every distributed round — per-job latency, not data volume, is the
+    // cost of the rounds on a few-thousand-edge graph.
+    val local =
+      if (maxDriverEdges == 0) None
+      else Some(raw.limit(maxDriverEdges + 1).collect()).filter(_.length <= maxDriverEdges)
+    local match {
+      case Some(rows) =>
+        lastRounds = 0
+        // nullable exactly when the distributed path's output is: when an
+        // input id column is
+        val schema = StructType(
+          Seq("id", "component").map(StructField(_, LongType, raw.schema.exists(_.nullable))))
+        raw.sparkSession.createDataFrame(unionFind(rows).asJava, schema)
+      case None => starRounds(raw, maxIter)
+    }
+  }
+
+  /** The distributed form of [[ccLongIds]]: alternating large/small-star
+    * rounds over the checkpointed (s, d) edge rows until star form.
+    */
+  private def starRounds(raw: DataFrame, maxIter: Int): DataFrame = {
+    val spark: SparkSession = raw.sparkSession
+    import spark.implicits._
 
     // Canonicalize once (high, low): every later round's edges come out of
     // smallStar already in this orientation and deduplicated, so the
@@ -215,6 +254,32 @@ object Graph {
     nodes
       .join(star, Seq("id"), "left")
       .select($"id", coalesce($"c", $"id").as("component"))
+  }
+
+  /** Driver-local components of collected (s, d) rows: every non-null
+    * endpoint is a node (a half-null edge leaves its non-null end as a
+    * singleton), and path-compressing union-find links each root to the
+    * smaller root, so a component's root is its smallest id — the same
+    * (id, component) set the distributed rounds produce.
+    */
+  private def unionFind(edges: Array[Row]): Seq[Row] = {
+    val parent = mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var n = x
+      while (n != r) { val up = parent(n); parent(n) = r; n = up }
+      r
+    }
+    for (row <- edges) {
+      val ends = (0 to 1).filterNot(row.isNullAt).map(row.getLong)
+      ends.foreach(v => parent.getOrElseUpdate(v, v))
+      if (ends.size == 2) {
+        val (ra, rb) = (find(ends(0)), find(ends(1)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+    }
+    parent.keys.toSeq.map(id => Row(id, find(id)))
   }
 
   /** Fixed-iteration PageRank over EXACT scaled integers — host/domain

@@ -181,8 +181,9 @@ object Sampling {
     * law ("ANN neighbors share a context window") holds at the cluster
     * level — which is the property the training objective consumes.
     *
-    * Scale shape: CC's O(log n) bounded rounds over the pair list (pairs
-    * ≪ corpus), one broadcast-ish join of the cluster map onto the
+    * Scale shape: CC over the pair list (pairs ≪ corpus) is a driver-side
+    * union-find up to its `maxDriverEdges` cap and O(log n) bounded rounds
+    * above it, then one broadcast-ish join of the cluster map onto the
     * corpus, one hash shuffle on `shard`, windows inside each shard's
     * task. Docs untouched by any pair are their own singleton cluster.
     *

@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
-  private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] =
+  private def cc(
+      edges: Seq[(Long, Long)],
+      maxDriverEdges: Int = Graph.DefaultMaxDriverEdges): Map[Long, Long] =
     Graph
-      .connectedComponents(edges.toDF("s", "d"), "s", "d")
+      .connectedComponents(edges.toDF("s", "d"), "s", "d", maxDriverEdges = maxDriverEdges)
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
@@ -93,15 +95,19 @@ class GraphSpec extends SparkSpec {
           val root = find(id.toInt)
           edges.flatMap(e => Seq(e._1, e._2)).filter(m => find(m.toInt) == root).min
         }).toMap
-      assert(cc(edges) == want, s"trial $trial")
+      // both sides of the size gate: 0 forces the distributed star rounds
+      for (cap <- Seq(0, Graph.DefaultMaxDriverEdges))
+        assert(cc(edges, cap) == want, s"trial $trial")
     }
   }
 
   test("star graph with a hot center stays join-based (high degree is fine)") {
     val center = 0L
     val edges = (1L to 500L).map(i => (center, i))
-    val got = cc(edges)
-    assert(got.size == 501 && got.values.forall(_ == 0L))
+    for (cap <- Seq(0, Graph.DefaultMaxDriverEdges)) {
+      val got = cc(edges, cap)
+      assert(got.size == 501 && got.values.forall(_ == 0L))
+    }
   }
 
   test("minhashClusterEdges yields identical components to minhashCandidatePairs") {
