@@ -128,7 +128,8 @@ object Main {
             Engine.runLoad(spark, source, min to max, root, city, config)
           } else Engine.runRefresh(spark, source, root, city, config)
         println(s"${args.positional.head} $city: scraped=${stats.scraped} errors=${stats.errors} " +
-          s"invalid=${stats.invalid} written=${stats.rowsWritten.toSeq.sorted.filter(_._2 > 0)}")
+          s"invalid=${stats.invalid} written=${stats.rowsWritten.toSeq.sorted.filter(_._2 > 0)} " +
+          f"${stats.entriesPerSecond}%.1f entries/s")
         // post-refresh change report (P9 + W5, vgsi/source.py:955-966)
         if (cmd == "refresh") {
           val props = Lake.read(spark, root, city, "properties")
@@ -171,7 +172,8 @@ object Main {
               try {
                 val source = vgsiSourceFor(baseUrl0)
                 val stats = Engine.runRefresh(spark, source, root, scope, config)
-                println(s"refresh $scope: scraped=${stats.scraped} errors=${stats.errors}")
+                println(s"refresh $scope: scraped=${stats.scraped} errors=${stats.errors} " +
+                  f"${stats.entriesPerSecond}%.1f entries/s")
               } catch {
                 case e: Exception =>
                   failures += 1

@@ -3,7 +3,8 @@ package graft.ingest
 import graft.lake.{Checkpoint, Checkpoints, Lake}
 import graft.scd.Scd
 import graft.sources.{Flatten, ScrapeResult}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, struct}
 import org.apache.spark.util.LongAccumulator
 
 /** The per-source contract — the Spark dual of the reference's
@@ -59,8 +60,15 @@ final case class IngestStats(
     scraped: Long,
     errors: Long,
     invalid: Long,
-    rowsWritten: Map[String, Long]
-)
+    rowsWritten: Map[String, Long],
+    /** Wall time of the batch loop, post-run compaction included. */
+    wallSeconds: Double = 0.0
+) {
+  /** Scraped entries per second of [[wallSeconds]] — the throughput the
+    * reference logs at completion (engine.py:347-348); 0 for an empty run.
+    */
+  def entriesPerSecond: Double = if (wallSeconds > 0) scraped / wallSeconds else 0.0
+}
 
 /** Ingestion engine (D1/D2): the reference's thread-pool load/refresh loop
   * re-expressed as a sequence of Spark batch jobs.
@@ -77,12 +85,13 @@ final case class IngestStats(
   *    note that on a cluster a retried task re-fetches its partition and
   *    accumulator counts are at-least-once, the standard Spark caveat for
   *    transformation-side accumulators).
-  *  - Flatten fans the nested results into relational tables (§2.8 UDTF
-  *    dual), metadata is stamped, and the content-hash anti-join (J2)
-  *    drops rows the lake already holds before every append — broadcast
-  *    build side, zero shuffle of the new data. Loads pay it too (not
-  *    just refresh): it is what makes a rerun after a crash-before-
-  *    checkpoint idempotent instead of permanently doubling the batch.
+  *  - Flatten dedups the batch on uuid once, fans it into relational
+  *    tables (§2.8 UDTF dual) and metadata is stamped. ONE snapshot dedup
+  *    (J2, [[Scd.snapshotChangedKeys]] keyed on (table, entity)) finds
+  *    every table's changed entities; only tables with changed entities
+  *    are written, each filtered to them. Loads pay it too (not just
+  *    refresh): it is what makes a rerun after a crash-before-checkpoint
+  *    idempotent instead of permanently doubling the batch.
   *  - Entries that exhaust their retries are counted as errors and NOT
   *    retried by later resumed loads (the checkpoint advances past them,
   *    matching the reference's checkpoint loop); `runRefresh` re-scrapes
@@ -90,7 +99,9 @@ final case class IngestStats(
   *
   * At 100 TB scale results and tables stay distributed end to end; only the
   * entry-ID list (ids are small — thousands per scope, vs GBs of page data),
-  * checkpoint docs and accumulator counters live on the driver.
+  * each batch's changed (table, entity key) set (at most 8 ×
+  * `checkpointEvery` keys), checkpoint docs and accumulator counters live
+  * on the driver.
   */
 object Engine {
 
@@ -121,7 +132,6 @@ object Engine {
       scope: String,
       config: IngestConfig = IngestConfig()
   ): IngestStats = {
-    import org.apache.spark.sql.functions.col
     val (idTable, idCol) = source.entryIdSource
     val raw = Lake.read(spark, root, scope, idTable)
     // Fail loudly on an ID column that doesn't survive the long cast: a
@@ -227,6 +237,7 @@ object Engine {
       refresh: Boolean,
       priorTotal: Long
   ): IngestStats = {
+    val t0 = System.nanoTime()
     val errAcc: LongAccumulator = spark.sparkContext.longAccumulator("scrape_errors")
     val invAcc: LongAccumulator = spark.sparkContext.longAccumulator("invalid_entries")
     val okAcc: LongAccumulator = spark.sparkContext.longAccumulator("scraped")
@@ -254,7 +265,7 @@ object Engine {
 
     batches.foreach { batch =>
       ranAny = true
-      val written = runBatch(spark, source, batch, root, scope, config, refresh, okAcc, errAcc, invAcc, scopeKey)
+      val written = runBatch(spark, source, batch, root, scope, config, okAcc, errAcc, invAcc, scopeKey)
       written.foreach { case (t, n) => writtenTotals(t) += n }
       // Checkpoint after every completed batch (D8): loads advance the
       // last-id cursor; refresh runs leave the load cursor untouched
@@ -281,7 +292,7 @@ object Engine {
         Lake.tables(spark, root, scope).foreach(t => Lake.compactIfNeeded(spark, root, scope, t))
       }
 
-    IngestStats(okAcc.value, errAcc.value, invAcc.value, writtenTotals.toMap)
+    IngestStats(okAcc.value, errAcc.value, invAcc.value, writtenTotals.toMap, (System.nanoTime() - t0) / 1e9)
   }
 
   private def runBatch(
@@ -291,7 +302,6 @@ object Engine {
       root: String,
       scope: String,
       config: IngestConfig,
-      refresh: Boolean,
       okAcc: LongAccumulator,
       errAcc: LongAccumulator,
       invAcc: LongAccumulator,
@@ -354,10 +364,11 @@ object Engine {
       }
 
     val scrapedAt = new java.sql.Timestamp(System.currentTimeMillis())
-    val tables = Flatten.flatten(results, scopeKey)
-
-    // Cache the nested results once: all 8 table writes share the scrape.
+    // cache the scrape BEFORE persisting the deduped batch over it: the
+    // photo hook reads the scrape too, and a persist planned ahead of this
+    // cache would run a second scrape of its own (Flatten.dedupBatch)
     results.cache()
+    val deduped = Flatten.dedupBatch(results, scopeKey).persist()
     try {
       // Photo hook (S11, engine.py:210-217): derive this batch's download
       // items from the cached results and run the side-effecting sink —
@@ -366,118 +377,71 @@ object Engine {
         val items = results
           .flatMap(itemsFn(_))
           .toDF("photo_url", "pid")
-          .withColumn("city", org.apache.spark.sql.functions.lit(scope))
+          .withColumn("city", lit(scope))
         graft.sources.vgsi.PhotoSink.downloadPhotos(items, dir, src.fetchPhoto)
       }
-      // One aggregate over the nested results yields every table's pre-dedup
-      // row count — a single action instead of a per-table emptiness probe
-      // (8 tables x N batches of actions added up).
-      import org.apache.spark.sql.functions._
-      val childSizes = Seq("buildings", "ownership", "appraisals", "assessments",
-        "extra_features", "outbuildings")
-      // greatest(size, 0): under non-ANSI legacy semantics size(NULL) is
-      // -1, so a source handing back a null child Seq would SUBTRACT from
-      // the batch's count and could cancel a real row to exactly 0 —
-      // silently skipping that table's write (greatest also covers the
-      // NULL-returning ANSI variant: nulls are ignored by greatest)
-      def sz(c: org.apache.spark.sql.Column) = greatest(size(c), lit(0))
-      val sizeRow = results
-        .toDF()
-        .agg(
-          count(lit(1)).as("entries"),
-          childSizes.map(c => coalesce(sum(sz(col(c))), lit(0L)).as(c)) :+
-            coalesce(
-              // count only sub_areas that SURVIVE Flatten's empty-code
-              // footer filter: a batch whose sub_areas are all "Total"
-              // footer rows would otherwise pass this emptiness probe and
-              // append a zero-row frame — creating the schema-only table
-              // the probe exists to prevent
-              sum(aggregate(col("buildings"), lit(0), (acc, b) =>
-                acc + sz(filter(b.getField("sub_areas"),
-                  s => s.getField("code").isNotNull && s.getField("code") =!= "")))),
-              lit(0L)
-            ).as("sub_areas"): _*
-        )
-        .head()
-      val preCounts: Map[String, Long] =
-        (Seq("properties" -> sizeRow.getLong(0)) ++
-          (childSizes :+ "sub_areas").zipWithIndex.map { case (c, i) => c -> sizeRow.getLong(i + 1) }).toMap
-
-      // ONE listing per batch, not one per table (8 identical FS listings
-      // per batch — on object stores, 8 LIST round-trips computing the
-      // same Seq)
-      val existingTables = Lake.tables(spark, root, scope)
-      // ONE scope-lease hold for the whole batch's table writes (the
-      // per-append acquisitions inside re-enter it for free): 8 separate
-      // acquire/release cycles per batch would cost ~5 FS round-trips and
-      // a heartbeat-thread spin-up EACH on the hot write path, and would
-      // let a concurrent maintenance op interleave between two tables of
-      // one batch. The scrape itself is already materialized (results is
-      // cached by the sizeRow aggregate above), so the hold spans only
-      // the writes, never the politeness-bounded fetching.
+      val stamped = Flatten.tablesOf(deduped).map { case (t, df) => t -> Lake.stampMetadata(df, scrapedAt) }
+      val existingTables = Lake.tables(spark, root, scope).toSet
+      // one lease hold for the batch's dedup read and all its table writes
       Lake.withScopeLease(spark, root, scope, "engine-batch-writes") {
-      tables.map { case (table, df) =>
-        if (preCounts.getOrElse(table, 1L) == 0L) table -> 0L // nothing scraped for this table
-        else {
-          val stamped = Lake.stampMetadata(df, scrapedAt)
-          // dedup against ANY existing table, not only on refresh: a load
-          // that crashes between a batch's append and its checkpoint save
-          // re-scrapes that batch on rerun, and without the anti-join the
-          // re-append doubles every row PERMANENTLY in the append-only
-          // lake (the CT source closed this window the same way; the
-          // pruned 32-byte row_hash rescan is noise against fetch time —
-          // see the trade note below)
-          val dedupAgainstLake = existingTables.contains(table)
-          // per-batch re-read of the lake's hash side is a CONSIDERED
-          // trade, not an oversight: parquet column pruning means each
-          // anti-join scans only the (key, scraped_at, row_hash) triplet
-          // (never the table), and a refresh run's wall clock is politeness-bounded
-          // (~5 fetches/s) — the pruned rescan is noise against the fetch
-          // time while staying memory-free. The alternative (persist
-          // Lake.existingHashes once per run and union each batch's
-          // appends) trades that IO for holding every entity's hash in
-          // executor memory for the whole run — at 10^9 entities that is
-          // tens of GB pinned for a job whose bottleneck is the crawl
-          // budget. Compute-bound REPLAYS (bulk dumps, the no-limiter
-          // path) that want the cached form should preload
-          // Lake.existingHashes themselves and call Scd.refreshDedup
-          // directly.
-          // EXPLICIT snapshot mode on the identity column Flatten's table
-          // contract declares (never sniffed from the frame — a schema
-          // rename or a coincidental column name must not silently flip
-          // the write path's dedup semantics): a content revert (A→B→A)
-          // re-records and the SCD2 chain shows all three versions, where
-          // the old full-history anti-join suppressed the revert forever
-          // (the r14-documented limitation).
-          val toWrite =
-            if (dedupAgainstLake)
-              Scd.refreshDedupForLake(stamped, Lake.read(spark, root, scope, table),
-                Scd.RefreshDedupMode.Snapshot(Flatten.identityColumnOf(table)))
-            else stamped
-          // Refresh can dedup a non-empty batch down to zero rows — probe
-          // so a no-change refresh writes no schema-only file (file-count
-          // creep triggers pointless compactions). The probe must not
-          // re-execute the dedup plan: isEmpty + append would run the
-          // anti-join (and its scan of the whole lake table) twice per
-          // table per batch, so count a PERSISTED frame once — the cache
-          // holds only the surviving new rows, and append reads it.
-          if (dedupAgainstLake) {
-            val cached = toWrite.persist()
-            try {
-              val n = cached.count()
-              if (n == 0L) table -> 0L
-              else { Lake.append(cached, root, scope, table); table -> n }
-            } finally cached.unpersist(blocking = false)
-          } else {
-            // D11 — row counts via observe() on the write action itself: one
-            // execution per table instead of count()+write double-compute.
-            val obs = org.apache.spark.sql.Observation()
-            Lake.append(toWrite.observe(obs, count(lit(1)).as("rows")), root, scope, table)
-            table -> obs.get("rows").asInstanceOf[Long]
+        val changed = changedKeys(spark, stamped, existingTables, root, scope)
+        stamped.map { case (table, df) =>
+          changed.get(table) match {
+            case None => table -> 0L
+            case Some(keys) =>
+              val toWrite =
+                if (existingTables(table))
+                  df.join(broadcast(keys.toDF("__changed_key")),
+                    col(Flatten.identityColumnOf(table)) <=> col("__changed_key"), "left_semi")
+                else df
+              val obs = org.apache.spark.sql.Observation()
+              Lake.append(toWrite.hint("rebalance").observe(obs, count(lit(1)).as("rows")), root, scope, table)
+              table -> obs.get("rows").asInstanceOf[Long]
           }
         }
       }
-      }
-    } finally results.unpersist()
+    } finally {
+      deduped.unpersist()
+      results.unpersist()
+    }
+  }
+
+  /** Every table's changed identity keys for one batch, from ONE
+    * [[Scd.snapshotChangedKeys]] plan keyed on (table, identity key): the
+    * incoming side is the union of the stamped frames, the existing side
+    * the union of the lake tables' pruned (key, scraped_at, row_hash)
+    * scans. A table not yet in the lake has no stored snapshot, so all its
+    * keys are changed; a table with no incoming rows has no keys. The
+    * existing side drops null keys, which the per-table form never
+    * matches either. Snapshot mode comes from Flatten's table contract,
+    * never from the frame's column names, and the lake side is re-read
+    * per batch rather than held in memory for the whole run.
+    */
+  private def changedKeys(
+      spark: SparkSession,
+      stamped: Map[String, DataFrame],
+      existingTables: Set[String],
+      root: String,
+      scope: String
+  ): Map[String, Seq[String]] = {
+    import spark.implicits._
+    def keyed(table: String, df: DataFrame, cols: String*): DataFrame =
+      df.select(lit(table).as("table") +: col(Flatten.identityColumnOf(table)).as("key") +: cols.map(col): _*)
+    val tables = stamped.keys.toSeq.sorted
+    val incoming = tables.map(t => keyed(t, stamped(t), "row_hash")).reduce(_ union _)
+    val existing = tables.filter(existingTables).map { t =>
+      val lake = Lake.read(spark, root, scope, t)
+      Scd.requireSnapshotContract(stamped(t), lake,
+        Scd.RefreshDedupMode.Snapshot(Flatten.identityColumnOf(t)))
+      keyed(t, lake, "scraped_at", "row_hash")
+    }.reduceOption(_ union _)
+      .getOrElse(incoming.select($"table", $"key", lit(null).cast("timestamp").as("scraped_at"), $"row_hash").limit(0))
+      .filter($"key".isNotNull)
+    Scd.snapshotChangedKeys(incoming, existing, struct($"table", $"key"), Seq($"scraped_at"))
+      .select($"__rd_key.table", $"__rd_key.key")
+      .as[(String, String)]
+      .collect()
+      .toSeq
+      .groupMap(_._1)(_._2)
   }
 }

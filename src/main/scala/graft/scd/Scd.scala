@@ -192,9 +192,28 @@ object Scd {
       hashCol: String = "row_hash",
       forceBroadcast: Boolean = false
   ): DataFrame = {
-    require(order.nonEmpty, "refreshDedupSnapshot needs at least one order column")
+    val changedKeys = snapshotChangedKeys(newRows, existing, key, order, hashCol, forceBroadcast)
     require(!newRows.columns.contains("__rd_key"),
       "refreshDedupSnapshot uses helper column __rd_key; the input already has one — rename it first")
+    // null-safe semi-join: a null-keyed incoming group (no entity ever
+    // stored) must append, not silently vanish on null === null
+    newRows.join(changedKeys, key <=> col("__rd_key"), "left_semi")
+  }
+
+  /** The keys [[refreshDedupSnapshot]] keeps, as one column `__rd_key`:
+    * every incoming key whose hash multiset differs from its latest stored
+    * snapshot's, or that has none. A null incoming key never matches a
+    * stored one, so it is always changed.
+    */
+  def snapshotChangedKeys(
+      newRows: DataFrame,
+      existing: DataFrame,
+      key: Column,
+      order: Seq[Column],
+      hashCol: String = "row_hash",
+      forceBroadcast: Boolean = false
+  ): DataFrame = {
+    require(order.nonEmpty, "refreshDedupSnapshot needs at least one order column")
     val orderAliases = order.zipWithIndex.map { case (c, i) => c.as(s"__rd_o$i") }
     val pruned = existing.select(key.as("__rd_key") +: orderAliases :+ col(hashCol).as("__rd_hash"): _*)
     val w = Window.partitionBy(col("__rd_key"))
@@ -210,15 +229,12 @@ object Scd {
     val incomingSig = newRows
       .groupBy(key.as("__rd_key"))
       .agg(sort_array(collect_list(col(hashCol))).as("__rd_new_sig"))
-    val changedKeys = incomingSig
+    incomingSig
       .join(
         if (forceBroadcast) broadcast(latestSig) else latestSig,
         Seq("__rd_key"), "left")
       .filter(col("__rd_sig").isNull || col("__rd_sig") =!= col("__rd_new_sig"))
       .select(col("__rd_key"))
-    // null-safe semi-join: a null-keyed incoming group (no entity ever
-    // stored) must append, not silently vanish on null === null
-    newRows.join(changedKeys, key <=> col("__rd_key"), "left_semi")
   }
 
   /** Which dedup semantics a lake write uses — passed EXPLICITLY by
@@ -252,31 +268,38 @@ object Scd {
       existing: DataFrame,
       mode: RefreshDedupMode
   ): DataFrame = mode match {
-    case RefreshDedupMode.Snapshot(k, o) =>
-      // contract precheck with a DIAGNOSABLE error: an existing lake
-      // table that does not carry the stamp convention (e.g. a foreign
-      // schema staged into an engine scope under a colliding table name)
-      // would otherwise fail deep inside the snapshot plan as an
-      // unresolved-column AnalysisException on every batch, with nothing
-      // pointing at the mode/contract mismatch
-      // (the snapshot plan reads key+order+hash from the existing side
-      // but only key+hash from the incoming batch; row_hash is in BOTH
-      // need lists — a foreign frame carrying uuid+scraped_at but no
-      // row_hash would otherwise still die as the deep unresolved-column
-      // error this precheck exists to replace)
-      Seq(("incoming batch", newRows, Seq(k, "row_hash")),
-          ("existing lake table", existing, Seq(k, o, "row_hash")))
-        .foreach { case (side, df, need) =>
-          val missing = need.filterNot(df.columns.contains)
-          require(missing.isEmpty,
-            s"refreshDedupForLake(Snapshot($k, $o)): the $side is missing column(s) " +
-              s"${missing.mkString(", ")} — this table does not follow the stamp convention " +
-              "the caller declared (was a foreign schema staged into this scope under an " +
-              "engine table name?); resolve the collision or dedup it with FullHistory")
-        }
+    case m @ RefreshDedupMode.Snapshot(k, o) =>
+      requireSnapshotContract(newRows, existing, m)
       refreshDedupSnapshot(newRows, existing, col(k), Seq(col(o)))
     case RefreshDedupMode.FullHistory =>
       refreshDedup(newRows, existing)
+  }
+
+  /** [[refreshDedupForLake]]'s Snapshot-mode contract precheck, with a
+    * DIAGNOSABLE error: an existing lake table that does not carry the
+    * stamp convention (e.g. a foreign schema staged into an engine scope
+    * under a colliding table name) would otherwise fail deep inside the
+    * snapshot plan as an unresolved-column AnalysisException on every
+    * batch, with nothing pointing at the mode/contract mismatch. The plan
+    * reads key+order+hash from the existing side but only key+hash from
+    * the incoming batch; row_hash is in BOTH need lists.
+    */
+  def requireSnapshotContract(
+      newRows: DataFrame,
+      existing: DataFrame,
+      mode: RefreshDedupMode.Snapshot
+  ): Unit = {
+    val RefreshDedupMode.Snapshot(k, o) = mode
+    Seq(("incoming batch", newRows, Seq(k, "row_hash")),
+        ("existing lake table", existing, Seq(k, o, "row_hash")))
+      .foreach { case (side, df, need) =>
+        val missing = need.filterNot(df.columns.contains)
+        require(missing.isEmpty,
+          s"refreshDedupForLake(Snapshot($k, $o)): the $side is missing column(s) " +
+            s"${missing.mkString(", ")} — this table does not follow the stamp convention " +
+            "the caller declared (was a foreign schema staged into this scope under an " +
+            "engine table name?); resolve the collision or dedup it with FullHistory")
+      }
   }
 
   /** Guarded FALLBACK for genuinely dynamic frames (the generic staged

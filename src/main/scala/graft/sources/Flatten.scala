@@ -14,11 +14,11 @@ import org.apache.spark.sql.functions._
   * (MD5(pid + canonical JSON), source.py:182-194) and propagated to
   * children by the explode — no join needed.
   *
-  * Flattening itself is narrow (select/explode) and runs at scan speed;
-  * the ONE wide step is the in-batch uuid dedup (U2) — a window exchange
-  * on the uuid that each of the 8 outputs re-executes over the engine's
-  * cached scrape, made safe by a deterministic keep-rule (the
-  * torn-snapshot note at the dedup site).
+  * Two steps: [[dedupBatch]] is the ONE wide step, the in-batch uuid
+  * dedup (U2, a window exchange on the uuid with a deterministic
+  * keep-rule), and [[tablesOf]] is the narrow select/explode fan-out over
+  * its output. The engine persists the deduped batch once, so the window
+  * runs once per batch however many of the 8 tables read it.
   */
 object Flatten {
 
@@ -116,7 +116,11 @@ object Flatten {
   def identityColumnOf(table: String): String =
     if (table == "properties") "uuid" else "property_uuid"
 
-  def flatten(ds: Dataset[ScrapeResult], scopeKey: Option[String] = None): Map[String, DataFrame] = {
+  def flatten(ds: Dataset[ScrapeResult], scopeKey: Option[String] = None): Map[String, DataFrame] =
+    tablesOf(dedupBatch(ds, scopeKey))
+
+  /** U2 — the nested batch plus its `uuid` column, one row per uuid. */
+  def dedupBatch(ds: Dataset[ScrapeResult], scopeKey: Option[String] = None): DataFrame = {
     val base = ds.toDF()
     val canon = Canonical.canonicalJsonOf(
       ("pid" -> col("property.pid")) +:
@@ -126,16 +130,14 @@ object Flatten {
     // seen_uuids skip, vgsi/source.py:595-601): a duplicate scrape of one
     // entity within a batch is dropped entirely — children included.
     // DETERMINISTIC keep-rule, not dropDuplicates: per-key first()
-    // depends on shuffle arrival order, and each of the 8 returned frames
-    // re-executes the dedup independently — two scrapes of one entity
-    // with DIFFERENT content (retry, overlapping batch) could leave
-    // properties from scrape A and buildings from scrape B, a torn
-    // parent/child snapshot. The window orders on the full row's JSON
-    // hash, so EVERY (re)execution picks the same survivor — which is
-    // what makes the per-table re-execution safe. (No persist here: the
-    // engine's results cache bounds the recompute to this window, and a
-    // persist inside flatten materializes from the pre-cache plan,
-    // re-running the scrape itself — measured as doubled accumulators.)
+    // depends on shuffle arrival order, so two executions of an
+    // unpersisted batch (each table's frame re-runs it) could keep
+    // properties from scrape A and buildings from scrape B of one entity,
+    // a torn parent/child snapshot. The window orders on the full row's
+    // JSON hash, so every execution picks the same survivor. No persist
+    // here: a persist built before the caller caches `ds` materializes
+    // from the uncached plan and re-runs the scrape (doubled accumulators),
+    // so the caller persists this frame after its own cache.
     val withUuid0 = base
       .withColumn("uuid", scopeKey match {
         case Some(s) => scopeKeyedUuid(col("property.pid"), s)
@@ -144,11 +146,16 @@ object Flatten {
     val pick = xxhash64(to_json(struct(base.columns.map(col): _*)))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("uuid")).orderBy(pick.asc)
-    val withUuid = withUuid0
+    withUuid0
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
+  }
 
+  /** The 8 table projections over a [[dedupBatch]] frame: narrow
+    * select/explode only, no exchange.
+    */
+  def tablesOf(withUuid: DataFrame): Map[String, DataFrame] = {
     val properties = withUuid.select(
       col("uuid") +: col("property.pid").as("pid") +:
         propertyHashFields.map(f => col(s"property.$f").as(f)): _*

@@ -160,7 +160,7 @@ object CtDataSource {
       // no-change refresh must not append a schema-only parquet file, and
       // isEmpty + append would execute the dedup anti-join (and its scan
       // of the existing lake table) twice — the pages cache only covers
-      // the fetch side (same fix as Engine.writeTables)
+      // the fetch side
       val cached = toWrite.persist()
       try {
         val n = cached.count()
