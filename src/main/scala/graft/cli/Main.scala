@@ -222,10 +222,8 @@ object Main {
           case "tables" => Lake.tables(spark, root, requireScope(operand(2, "scope"))).foreach(println)
           case "compact" =>
             val scope = requireScope(operand(2, "scope"))
-            // compactIfNeeded dispatches hive-partitioned tables to the
-            // per-leaf variant — calling Lake.compact directly would rewrite
-            // a partitioned table FLAT, destroying its layout. minFiles=2:
-            // compact whenever there is anything to merge.
+            // compactIfNeeded also handles hive-partitioned tables (per
+            // leaf). minFiles=2: compact whenever there is anything to merge.
             Lake.tables(spark, root, scope)
               .foreach(t => Lake.compactIfNeeded(spark, root, scope, t, minFiles = 2))
             println(s"compacted $scope")

@@ -234,7 +234,7 @@ object ScdScaleBench {
     def onceCompact(): Double = {
       spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
-      Lake.compact(spark, root, scope, table, target = 0, targetFileBytes = 64L * 1024 * 1024)
+      Lake.compact(spark, root, scope, table, targetFileBytes = 64L * 1024 * 1024)
       (System.nanoTime() - t0) / 1e9
     }
     val t1 = onceCompact()

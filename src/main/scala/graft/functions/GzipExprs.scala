@@ -97,12 +97,6 @@ object GzipSupport {
     out
   }
 
-  /** True when the buffer leads with the gzip magic — the cheap routing
-    * probe for mixed archive columns (bare WARC vs .warc.gz).
-    */
-  def isGzip(bytes: Array[Byte]): Boolean =
-    bytes != null && bytes.length >= 2 && bytes(0) == 0x1f && bytes(1) == 0x8b.toByte
-
   private def membersOrNull(bytes: Array[Byte]): scala.collection.mutable.ArrayBuffer[Array[Byte]] = {
     if (bytes == null) return null
     val n = bytes.length

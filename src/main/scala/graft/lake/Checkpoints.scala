@@ -38,30 +38,13 @@ object Checkpoints {
     try out.write(json.getBytes(StandardCharsets.UTF_8))
     finally out.close()
     // Hadoop rename-over-existing returns false on most filesystems, so
-    // the old doc must move aside first — but ASIDE, not deleted: a crash
-    // between a delete and the rename would leave NO checkpoint at all,
-    // and the cost of a missing checkpoint is a full-scope re-SCRAPE
-    // (politeness-bounded wall time against the live site; the lake-side
-    // hash anti-join keeps the re-appends deduped), not the documented
-    // one-batch loss. With the aside, [[load]] falls back to the previous
-    // doc — at worst a stale cursor, exactly the scaladoc's contract.
-    val prev = new Path(p.toString + ".__prev")
-    if (fs.exists(p)) {
-      // clear a stale aside ONLY when a live doc is about to replace it.
-      // After a crash that moved the live doc aside but never landed the
-      // new one (p absent, .__prev the only copy), an unconditional delete
-      // here would reopen the exact no-checkpoint window the aside exists
-      // to close — confined to the recovery save, but the same data loss.
-      // Leaving .__prev in place costs nothing: rename(tmp, p) below does
-      // not need the aside slot when p is absent, and the post-landing
-      // delete clears it either way.
-      fs.delete(prev, false)
-      if (!fs.rename(p, prev))
-        throw new java.io.IOException(s"checkpoint save: could not move $p aside")
-    }
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"checkpoint save: could not move $tmp into place")
-    fs.delete(prev, false)
+    // the old doc moves ASIDE, not deleted: a crash between a delete and
+    // the rename would leave NO checkpoint at all, and the cost of a
+    // missing checkpoint is a full-scope re-SCRAPE (politeness-bounded wall
+    // time against the live site), not the documented one-batch loss. With
+    // the aside, [[load]] falls back to the previous doc — at worst a stale
+    // cursor, exactly the scaladoc's contract.
+    Swap.install(fs, tmp, p, new Path(p.toString + ".__prev"), "checkpoint save")
   }
 
   /** Load, degrading to None on a malformed/truncated doc — matching the
@@ -74,11 +57,7 @@ object Checkpoints {
     // fall back to the moved-aside previous doc when a crashed save left
     // no live checkpoint — a stale cursor re-scrapes one batch (dedup-safe)
     // where a missing one re-scrapes the whole scope
-    val p =
-      if (fs.exists(p0)) p0
-      else new Path(p0.toString + ".__prev")
-    if (!fs.exists(p)) None
-    else {
+    Swap.liveOrAside(fs, p0, new Path(p0.toString + ".__prev")).flatMap { p =>
       val in = fs.open(p)
       val raw =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString

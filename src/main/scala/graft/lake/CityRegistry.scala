@@ -1,6 +1,7 @@
 package graft.lake
 
 import graft.scd.Scd
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,29 +10,22 @@ import org.apache.spark.sql.functions._
   * `main.cities` singleton (/root/reference/scrapers/vgsi/source.py:687-779).
   *
   * Vanilla Spark has no `ON CONFLICT DO UPDATE`; the upsert is the
-  * union + key-window rewrite from [[Scd.upsert]], materialized atomically
-  * (write tmp, swap). The table is dimension-sized (≈90 rows for CT) so a
-  * full rewrite is the right cost model; at warehouse scale this would be a
-  * Delta/Iceberg MERGE instead.
+  * union + key-window rewrite from [[Scd.upsert]], materialized through
+  * [[Swap.install]] (write tmp, swap). The table is dimension-sized (≈90
+  * rows for CT) so a full rewrite is the right cost model; at warehouse
+  * scale this would be a Delta/Iceberg MERGE instead.
   */
 object CityRegistry {
 
-  private def path(root: String) = s"$root/_meta/cities"
+  private def live(root: String) = new Path(s"$root/_meta/cities")
+  private def aside(root: String) = new Path(s"$root/_meta/cities.__old")
 
+  /** The registry, or — after a crashed swap — its aside, read in place
+    * ([[Swap.liveOrAside]]; promotion is the next [[upsert]]'s job).
+    */
   def load(spark: SparkSession, root: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path(root))
-    val old = new org.apache.hadoop.fs.Path(path(root) + ".__old")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // READ-ONLY fallback for a crashed swap (the only copy sits at
-    // .__old): serve from the aside WITHOUT renaming it back. A reader
-    // cannot distinguish a crashed swap from a live upsert inside its
-    // millisecond rename window, and a reader-side promote racing the
-    // writer's second rename nests the tmp dir inside the restored one —
-    // a silently lost update. Promotion is the next WRITER's job
-    // ([[upsert]] recovers on entry, the Lake.append rule).
-    if (fs.exists(p)) Some(spark.read.parquet(path(root)))
-    else if (fs.exists(old)) Some(spark.read.parquet(old.toString))
-    else None
+    val fs = live(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Swap.liveOrAside(fs, live(root), aside(root)).map(p => spark.read.parquet(p.toString))
   }
 
   /** Upsert (city_key unique): newest row per key wins, `created_at` of the
@@ -49,16 +43,10 @@ object CityRegistry {
     val incoming = cities
       .withColumn("created_at", now)
       .withColumn("updated_at", now)
+    val fs = live(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // writer-side crash recovery BEFORE reading: the writer owns the swap
     // lifecycle (single-writer contract), so only here is a promote safe
-    locally {
-      val p0 = new org.apache.hadoop.fs.Path(path(root))
-      val old0 = new org.apache.hadoop.fs.Path(path(root) + ".__old")
-      val fs0 = p0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs0.exists(p0) && fs0.exists(old0) && !fs0.rename(old0, p0))
-        throw new java.io.IOException(
-          s"cities registry: found crashed swap at $old0 but could not restore it to $p0")
-    }
+    Swap.promote(fs, aside(root), live(root))
     val merged = load(spark, root) match {
       case None => incoming
       case Some(existing) =>
@@ -71,23 +59,9 @@ object CityRegistry {
           .withColumn("created_at", coalesce(col("__orig_created"), col("created_at")))
           .drop("__orig_created")
     }
-    val p = new org.apache.hadoop.fs.Path(path(root))
-    val tmp = new org.apache.hadoop.fs.Path(path(root) + ".__tmp")
-    val old = new org.apache.hadoop.fs.Path(path(root) + ".__old")
+    val tmp = new Path(s"$root/_meta/cities.__tmp")
     merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // move-aside swap with checked renames (same order as Lake.compact):
-    // the registry always survives at `p` or `old`, never deleted first
-    fs.delete(old, true)
-    if (fs.exists(p) && !fs.rename(p, old))
-      throw new java.io.IOException(s"cities upsert: could not move $p aside")
-    if (!fs.rename(tmp, p)) {
-      val restored = fs.exists(old) && fs.rename(old, p)
-      throw new java.io.IOException(
-        s"cities upsert: could not move new registry into $p " +
-          (if (restored) "(rolled back)" else s"(ROLLBACK FAILED — data is at $old, recover manually)"))
-    }
-    fs.delete(old, true)
+    Swap.install(fs, tmp, live(root), aside(root), "cities upsert")
   }
 
   /** S10 — point lookup: city_key → url. */

@@ -1,7 +1,7 @@
 package graft.lake
 
 import graft.functions.Canonical
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -118,28 +118,12 @@ object Lake {
       .withColumn("row_hash", Canonical.rowHash(df))
 
   /** Writer-side recovery for a crashed whole-table swap: data stranded at
-    * `<table>.__old` with no live `<table>` promotes back. Every WRITE
-    * entry point ([[append]], [[appendPartitioned]], [[compact]]) calls
-    * this first — without it a crash between [[compact]]'s two renames
-    * leaves the whole table invisible, the next append recreates the dir
-    * with only new rows, and the next compact's clear-previous-aside
-    * delete destroys the only pre-crash copy. READERS never promote: a
-    * reader cannot distinguish a crashed swap from a LIVE one inside its
-    * millisecond window, and a promote racing the writer's second rename
-    * nests the tmp dir inside the restored one (silent lost update) —
-    * readers fail cleanly through [[withReadRetry]] instead, and the next
-    * writer heals the table.
+    * `<table>.__old` with no live `<table>` promotes back ([[Swap.promote]]).
+    * Every WRITE entry point calls this first; readers never promote (they
+    * fail cleanly through [[withReadRetry]] and the next writer heals).
     */
-  private def recoverStrandedSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String
-  ): Unit = {
-    val live = new Path(path)
-    val old = new Path(s"$path.__old")
-    if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live))
-      throw new java.io.IOException(
-        s"lake: found crashed swap at $old but could not promote it back to $live")
-  }
+  private def recoverStrandedSwap(fs: FileSystem, path: String): Unit =
+    Swap.promote(fs, new Path(s"$path.__old"), new Path(path))
 
   private def recoverBeforeWrite(df: DataFrame, path: String): Unit = {
     val fs = new Path(path)
@@ -162,12 +146,7 @@ object Lake {
     if (!fs.exists(p)) return
     fs.listStatus(p)
       .filter(st => st.isDirectory && st.getPath.getName.endsWith(".__old"))
-      .foreach { st =>
-        val live = new Path(p, st.getPath.getName.stripSuffix(".__old"))
-        if (!fs.exists(live) && !fs.rename(st.getPath, live))
-          throw new java.io.IOException(
-            s"lake: found crashed swap at ${st.getPath} but could not promote it back to $live")
-      }
+      .foreach(st => Swap.promote(fs, st.getPath, new Path(p, st.getPath.getName.stripSuffix(".__old"))))
   }
 
   /** Recovery sweep for crashed PER-LEAF swaps at every partition level:
@@ -176,23 +155,16 @@ object Lake {
     * before EVERY partitioned write, not only before compaction — an
     * append that recreated a crashed leaf with only new rows would turn
     * the next compaction's live-exists aside-delete into permanent loss
-    * of the pre-crash copy (the exact append-recreates-then-delete
-    * pattern [[recoverStrandedSwap]]'s scaladoc describes at whole-table
-    * level). Cost: one recursive listing — the same listing partitioned
-    * discovery pays anyway.
+    * of the pre-crash copy. Cost: one recursive listing — the same
+    * listing partitioned discovery pays anyway.
     */
-  private def recoverPartitionStrands(fs: org.apache.hadoop.fs.FileSystem, base: Path): Unit = {
+  private def recoverPartitionStrands(fs: FileSystem, base: Path): Unit = {
     if (!fs.exists(base)) return
-    def childDirs(p: Path): Seq[Path] =
-      fs.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
     def sweep(p: Path): Unit = {
-      val children = childDirs(p)
+      val children = fs.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
       children.filter(c => c.getName.startsWith(".") && c.getName.endsWith(".__old")).foreach { o =>
-        val live = new Path(p, o.getName.stripPrefix(".").stripSuffix(".__old"))
-        if (!fs.exists(live)) {
-          if (!fs.rename(o, live))
-            throw new java.io.IOException(s"lake: could not promote crashed leaf swap $o")
-        } else fs.delete(o, true)
+        Swap.promote(fs, o, new Path(p, o.getName.stripPrefix(".").stripSuffix(".__old")))
+        fs.delete(o, true) // still there only when the live leaf was: a completed swap's leftover
       }
       children.filter(_.getName.endsWith(".__compact_tmp")).foreach(t => fs.delete(t, true))
       children
@@ -201,6 +173,10 @@ object Lake {
     }
     sweep(base)
   }
+
+  /** True when the table dir holds hive partition dirs (`col=value`). */
+  private def isPartitioned(fs: FileSystem, path: Path): Boolean =
+    fs.exists(path) && fs.listStatus(path).exists(st => st.isDirectory && st.getPath.getName.contains("="))
 
   /** Append one batch to a table (ZSTD parquet, new files only).
     *
@@ -400,28 +376,24 @@ object Lake {
       .sortBy(key)
       .saveAsTable(tableName)
 
-  /** Compaction (D9): rewrite a table's many small files as `target` files.
-    * Swap order is crash-safe for DATA (not fully atomic — HDFS-like
-    * filesystems have no multi-dir atomic swap): write tmp → move the live
-    * dir aside → move tmp into place → drop the old dir. A crash mid-swap
-    * leaves the data in exactly one of `<table>.__old` or `<table>` (never
-    * deleted-before-replaced), and work dirs are excluded from [[tables]]
-    * listings. Unlike the reference (single file), `target` scales with
-    * table size — one file per ~128MB is the useful default on a cluster.
+  /** Compaction (D9): rewrite a FLAT table's many small files as
+    * ~`targetFileBytes` files (not the reference's single file — one file
+    * per ~128MB is the useful default on a cluster), swapped in through
+    * [[Swap.install]] with `<table>.__compact_tmp` / `<table>.__old`.
+    * Hive-partitioned tables are refused: a whole-table rewrite would fold
+    * `col=value` dirs into columns and write them back flat; route them
+    * through [[compactIfNeeded]] / [[compactPartitioned]].
     *
     * SINGLE WRITER per scope ENFORCED by [[withScopeLease]] (the hazard it
     * closes: an append landing between the tmp rewrite and the swap would
-    * be moved aside and deleted with `old` — under the lease that append
-    * serializes behind the compaction or fails loud). Run compaction
+    * be moved aside and deleted with the aside). Run compaction
     * post-session anyway (as [[graft.ingest.Engine]] does) so the rewrite
     * reads a settled table.
     *
-    * Concurrent READERS are supported lock-free: at every instant the full
-    * row set exists at `<table>` or `<table>.__old`, and nothing is deleted
-    * until the replacement is live — so a racing reader either sees the
-    * complete table or fails cleanly on renamed-away paths, never partial
-    * or doubled rows. [[read]] retries resolution through the rename
-    * window; actions racing the swap re-plan via [[withReadRetry]]
+    * Concurrent READERS are supported lock-free: a racing reader either
+    * sees the complete table or fails cleanly on renamed-away paths, never
+    * partial or doubled rows. [[read]] retries resolution through the
+    * rename window; actions racing the swap re-plan via [[withReadRetry]]
     * (LakeSpec hammers this with a reader loop against back-to-back
     * compactions).
     */
@@ -430,144 +402,95 @@ object Lake {
       root: String,
       scope: String,
       table: String,
-      target: Int = 0,
       targetFileBytes: Long = 128L * 1024 * 1024
-  ): Unit = withScopeLease(spark, root, scope, s"compact:$table") {
-    val path = tablePath(root, scope, table)
-    val tmp = s"$path.__compact_tmp"
-    val old = s"$path.__old"
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // promote a crashed previous swap FIRST: the rewrite below reads the
-    // live dir, and the clear-aside delete after it would otherwise
-    // destroy the stranded only copy
-    recoverStrandedSwap(fs, path)
-    rewritePacked(spark, path, tmp, target, targetFileBytes)
-    fs.delete(new Path(old), true) // clear a COMPLETED swap's leftover aside
-    // Hadoop FS signals rename failure by returning false — check both
-    // steps and roll back so the data always lives at `path` or `old`.
-    if (!fs.rename(new Path(path), new Path(old)))
-      throw new java.io.IOException(s"compact: could not move $path aside")
-    if (!fs.rename(new Path(tmp), new Path(path))) {
-      val restored = fs.rename(new Path(old), new Path(path))
-      throw new java.io.IOException(
-        s"compact: could not move compacted data into $path " +
-          (if (restored) "(rolled back)" else s"(ROLLBACK FAILED — data is at $old, recover manually)"))
-    }
-    fs.delete(new Path(old), true)
+  ): Unit = swapTable(spark, root, scope, table, "compact", "__compact_tmp") { (src, tmp) =>
+    rewritePacked(spark, src, tmp, targetFileBytes)
   }
 
-  /** Whole-table TRANSFORMING rewrite under [[compact]]'s exact swap
-    * discipline (tmp write → move-aside → promote → clear, stranded-swap
-    * recovery first, checked renames with rollback): read the live table,
-    * apply `transform`, swap the result in atomically. Same lease-enforced
-    * single-WRITER contract as compact ([[withScopeLease]]); concurrent
-    * READERS keep the same lock-free guarantee — the full row set exists
-    * at `<table>` or `<table>.__old` at every instant. This is the
-    * maintenance primitive behind [[UuidMigration]]'s one-shot identity
-    * rewrite; `transform` must be idempotent for crash-rerun convergence
-    * (a rerun re-reads whichever side the crash left live).
+  /** Whole-table TRANSFORMING rewrite of a FLAT table, under [[compact]]'s
+    * lease, recovery and swap (`<table>.__rewrite_tmp` / `<table>.__old`):
+    * read the live table, apply `transform`, swap the result in. This is
+    * the maintenance primitive behind [[UuidMigration]]'s one-shot
+    * identity rewrite; `transform` must be idempotent for crash-rerun
+    * convergence (a rerun re-reads whichever side the crash left live).
     */
   def rewriteTable(spark: SparkSession, root: String, scope: String, table: String)(
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit =
-    withScopeLease(spark, root, scope, s"rewriteTable:$table") {
-    val path = tablePath(root, scope, table)
-    val tmp = s"$path.__rewrite_tmp"
-    val old = s"$path.__old"
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverStrandedSwap(fs, path)
-    // FLAT tables only: partition discovery would fold col=value dirs into
-    // ordinary columns and the overwrite would write them back FLAT —
-    // destroying the layout and leaving the next appendPartitioned to mix
-    // hive dirs with flat files (the same hazard compactIfNeeded dispatches
-    // around). A per-leaf rewrite variant is the fix if one is ever needed.
-    val partitioned = fs.exists(new Path(path)) &&
-      fs.listStatus(new Path(path)).exists(st => st.isDirectory && st.getPath.getName.contains("="))
-    require(!partitioned,
-      s"rewriteTable rewrites FLAT tables; $path is hive-partitioned — a whole-table " +
-        "rewrite would destroy its layout")
-    transform(spark.read.option("mergeSchema", "true").parquet(path))
-      .write.mode("overwrite").option("compression", "zstd").parquet(tmp)
-    fs.delete(new Path(old), true) // clear a COMPLETED swap's leftover aside
-    if (!fs.rename(new Path(path), new Path(old)))
-      throw new java.io.IOException(s"rewriteTable: could not move $path aside")
-    if (!fs.rename(new Path(tmp), new Path(path))) {
-      val restored = fs.rename(new Path(old), new Path(path))
-      throw new java.io.IOException(
-        s"rewriteTable: could not move rewritten data into $path " +
-          (if (restored) "(rolled back)" else s"(ROLLBACK FAILED — data is at $old, recover manually)"))
+      transform: DataFrame => DataFrame): Unit =
+    swapTable(spark, root, scope, table, "rewriteTable", "__rewrite_tmp") { (src, tmp) =>
+      transform(spark.read.option("mergeSchema", "true").parquet(src))
+        .write.mode("overwrite").option("compression", "zstd").parquet(tmp)
     }
-    fs.delete(new Path(old), true)
-  }
+
+  /** The body [[compact]] and [[rewriteTable]] share: lease, strand
+    * recovery first (the swap's aside clear would otherwise destroy a
+    * stranded only copy), the flat-table guard, `writeTmp(live, tmp)`, swap.
+    */
+  private def swapTable(spark: SparkSession, root: String, scope: String, table: String,
+      op: String, tmpSuffix: String)(writeTmp: (String, String) => Unit): Unit =
+    withScopeLease(spark, root, scope, s"$op:$table") {
+      val path = tablePath(root, scope, table)
+      val (live, tmp) = (new Path(path), s"$path.$tmpSuffix")
+      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      recoverStrandedSwap(fs, path)
+      require(!isPartitioned(fs, live),
+        s"$op rewrites FLAT tables; $path is hive-partitioned — a whole-table rewrite would " +
+          "destroy its layout (compactIfNeeded/compactPartitioned compact it per leaf)")
+      writeTmp(path, tmp)
+      Swap.install(fs, new Path(tmp), live, new Path(s"$path.__old"), op)
+    }
 
   /** The compaction rewrite itself: read `src`, write `dst` as zstd parquet
-    * sized for a cluster. `files > 0` forces an exact output file count
-    * (coalesce). Otherwise BIN-PACK BY BYTES: the scan's own FilePartition
-    * packing groups input files into ~targetFileBytes partitions
-    * (`spark.sql.files.maxPartitionBytes`, scoped to this rewrite and
-    * restored after), and each task writes one ~target-sized output file.
-    * No shuffle, no driver math, and — unlike a coalesce-by-count, which
-    * merges whatever partitions happen to be adjacent — output sizes are
-    * EVEN: no file exceeds the target by more than one input row group,
-    * and small files pack together up to it.
+    * BIN-PACKED BY BYTES: the scan's own FilePartition packing groups input
+    * files into ~targetFileBytes partitions (`spark.sql.files.maxPartitionBytes`,
+    * scoped to a cloned session), and each task writes one ~target-sized
+    * output file. No shuffle, no driver math, and output sizes are EVEN: no
+    * file exceeds the target by more than one input row group, and small
+    * files pack together up to it.
     */
-  private def rewritePacked(
-      spark: SparkSession,
-      src: String,
-      dst: String,
-      files: Int,
-      targetFileBytes: Long
-  ): Unit = {
-    require(files > 0 || targetFileBytes > 0, "need a file count or a byte target")
-    def write(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").option("compression", "zstd").parquet(dst)
-    if (files > 0) write(spark.read.option("mergeSchema", "true").parquet(src).coalesce(files))
-    else {
-      // Pure byte bin-packing needs all three knobs scoped: the split size
-      // is min(maxPartitionBytes, max(openCost, totalBytes/minPartitionNum)),
-      // so the default parallelism (splits a small table N ways) and the
-      // 4MB openCost (charges tiny files as 4MB, capping packing at one
-      // file per bin) would both defeat the target. openCost exists to
-      // stop over-packing thousands of tiny files into one SCHEDULED task —
-      // compaction wants exactly that packing, so a token 4KB suffices.
-      // A cloned session isolates the conf changes: newSession() shares the
-      // SparkContext but carries its own SQLConf, so concurrent queries on
-      // the caller's session keep their scan-split sizing, and two
-      // compactions can't race a save/restore into a clobbered state.
-      // The clone starts from BUILDER-time confs only, so the caller's
-      // RUNTIME conf.set()s (session timezone, parquet rebase/output-
-      // timestamp modes, codec overrides) are replayed first — compacted
-      // files must be written under the same settings as the appends they
-      // replace. Static/non-settable entries in getAll are skipped.
-      val packer = spark.newSession()
-      spark.conf.getAll.foreach { case (k, v) =>
-        try packer.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-      }
-      packer.conf.set("spark.sql.files.maxPartitionBytes", targetFileBytes.toString)
-      packer.conf.set("spark.sql.files.minPartitionNum", "1")
-      packer.conf.set("spark.sql.files.openCostInBytes", "4096")
-      write(packer.read.option("mergeSchema", "true").parquet(src))
+  private def rewritePacked(spark: SparkSession, src: String, dst: String, targetFileBytes: Long): Unit = {
+    require(targetFileBytes > 0, "need a positive byte target")
+    // Pure byte bin-packing needs all three knobs scoped: the split size
+    // is min(maxPartitionBytes, max(openCost, totalBytes/minPartitionNum)),
+    // so the default parallelism (splits a small table N ways) and the
+    // 4MB openCost (charges tiny files as 4MB, capping packing at one
+    // file per bin) would both defeat the target. openCost exists to
+    // stop over-packing thousands of tiny files into one SCHEDULED task —
+    // compaction wants exactly that packing, so a token 4KB suffices.
+    // A cloned session isolates the conf changes: newSession() shares the
+    // SparkContext but carries its own SQLConf, so concurrent queries on
+    // the caller's session keep their scan-split sizing, and two
+    // compactions can't race a save/restore into a clobbered state.
+    // The clone starts from BUILDER-time confs only, so the caller's
+    // RUNTIME conf.set()s (session timezone, parquet rebase/output-
+    // timestamp modes, codec overrides) are replayed first — compacted
+    // files must be written under the same settings as the appends they
+    // replace. Static/non-settable entries in getAll are skipped.
+    val packer = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      try packer.conf.set(k, v)
+      catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
+    packer.conf.set("spark.sql.files.maxPartitionBytes", targetFileBytes.toString)
+    packer.conf.set("spark.sql.files.minPartitionNum", "1")
+    packer.conf.set("spark.sql.files.openCostInBytes", "4096")
+    packer.read.option("mergeSchema", "true").parquet(src)
+      .write.mode("overwrite").option("compression", "zstd").parquet(dst)
   }
 
   /** Per-partition compaction for hive-partitioned tables: each leaf
     * partition directory is compacted independently (layout preserved,
-    * partitions untouched by other writers unaffected). The per-leaf swap
-    * is the same checked move-aside sequence as [[compact]], with two
-    * partition-specific disciplines:
+    * partitions untouched by other writers unaffected), one
+    * [[Swap.install]] per leaf, with two partition-specific disciplines:
     *
-    *  - WORK DIRS ARE DOT-PREFIXED (`.day=1.__old`), because inside a
-    *    partitioned table any visible directory containing `=` IS a
-    *    partition to discovery: an undotted `day=1.__old` would be read as
-    *    partition value `1.__old`, doubling every row of the leaf for any
-    *    concurrent reader during the swap. Dot-prefixed names are skipped
-    *    by Spark's file listing (and by [[leafDirs]] here).
-    *  - A RECOVERY SWEEP runs first: a crash between the two renames
-    *    leaves the data only at `.X.__old` — and the leaf itself absent
-    *    from listings, so without the sweep nothing would ever promote it
-    *    back. The sweep restores such leaves (or drops the aside when the
-    *    swap had completed), making a re-run after any crash converge to
-    *    the correct table.
+    *  - WORK DIRS ARE DOT-PREFIXED (`.day=1.__compact_tmp`, `.day=1.__old`),
+    *    because inside a partitioned table any visible directory containing
+    *    `=` IS a partition to discovery: an undotted `day=1.__old` would be
+    *    read as partition value `1.__old`, doubling every row of the leaf
+    *    for any concurrent reader during the swap. Dot-prefixed names are
+    *    skipped by Spark's file listing (and by [[leafDirs]] here).
+    *  - A RECOVERY SWEEP runs first: a crashed leaf swap leaves the leaf
+    *    absent from listings, so without the sweep nothing would ever
+    *    promote it back ([[recoverPartitionStrands]]).
     *
     * Reader caveat (weaker than the whole-table [[compact]] contract): a
     * read PLANNED exactly inside a leaf's sub-millisecond rename window
@@ -590,12 +513,9 @@ object Lake {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) return
 
-    def hidden(n: String): Boolean = n.startsWith(".") || n.startsWith("_")
-    def childDirs(p: Path): Seq[Path] =
-      fs.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
-
     def leafDirs(p: Path): Seq[Path] = {
-      val partDirs = childDirs(p).filter(c => !hidden(c.getName) && c.getName.contains("="))
+      val partDirs = fs.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
+        .filter(c => !c.getName.startsWith(".") && !c.getName.startsWith("_") && c.getName.contains("="))
       if (partDirs.isEmpty) Seq(p)
       else partDirs.flatMap(leafDirs)
     }
@@ -606,21 +526,11 @@ object Lake {
       val nFiles = fs.listStatus(leaf).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       if (nFiles >= minFilesPerPartition) {
         val tmp = new Path(leaf.getParent, s".${leaf.getName}.__compact_tmp")
-        val old = new Path(leaf.getParent, s".${leaf.getName}.__old")
         // byte-targeted like the whole-table path: a session-file-sized
         // leaf still lands in one file, an oversized leaf splits at
         // ~targetFileBytes instead of becoming one giant file
-        rewritePacked(spark, leaf.toString, tmp.toString, files = 0, targetFileBytes)
-        fs.delete(old, true)
-        if (!fs.rename(leaf, old))
-          throw new java.io.IOException(s"compactPartitioned: could not move $leaf aside")
-        if (!fs.rename(tmp, leaf)) {
-          val restored = fs.rename(old, leaf)
-          throw new java.io.IOException(
-            s"compactPartitioned: could not move compacted data into $leaf " +
-              (if (restored) "(rolled back)" else s"(ROLLBACK FAILED — data is at $old)"))
-        }
-        fs.delete(old, true)
+        rewritePacked(spark, leaf.toString, tmp.toString, targetFileBytes)
+        Swap.install(fs, tmp, leaf, new Path(leaf.getParent, s".${leaf.getName}.__old"), "compactPartitioned")
       }
     }
   }
@@ -638,8 +548,7 @@ object Lake {
       // layout — so dispatch them to the per-leaf variant (threshold is
       // applied per leaf there: partitions other sessions wrote stay
       // untouched, like the reference's session-scoped compaction).
-      val partitioned = fs.listStatus(p).exists(s => s.isDirectory && s.getPath.getName.contains("="))
-      if (partitioned) compactPartitioned(spark, root, scope, table, minFiles)
+      if (isPartitioned(fs, p)) compactPartitioned(spark, root, scope, table, minFiles)
       else {
         var nFiles = 0
         val it = fs.listFiles(p, true)

@@ -26,15 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Character k-shingles of a text column (k consecutive chars, 1 shingle
-    * per offset). Short texts yield a single whole-text shingle.
-    */
-  def charShingles(text: Column, k: Int): Column =
-    transform(
-      sequence(lit(1), greatest(length(text) - lit(k - 1), lit(1))),
-      i => substr(text, i, lit(k))
-    )
-
   /** MinHash signature via the native single-pass expression
     * ([[graft.functions.HashExprs.minhashSignature]]): one md5 per shingle,
     * integer hash family (a_j·h + b_j mod 2³¹-1). The earlier

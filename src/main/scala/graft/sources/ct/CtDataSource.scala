@@ -1,9 +1,8 @@
 package graft.sources.ct
 
-import graft.functions.Canonical
 import graft.lake.{Checkpoint, Checkpoints, Lake}
 import graft.scd.Scd
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CT Socrata open-data source (S6/S7) — behavioral port of
@@ -180,9 +179,4 @@ object CtDataSource {
   ): Map[String, Long] =
     Datasets.keys.toSeq.sorted.map { ds =>
       loadDataset(spark, ds, counts.getOrElse(ds, 0L), fetchPage, root, refresh)
-    }.toMap
-
-  /** Canonical content hash parity helper for CT rows (used in tests). */
-  def hashCols(df: DataFrame): DataFrame =
-    df.withColumn("row_hash", Canonical.rowHash(df))
-}
+    }.toMap}

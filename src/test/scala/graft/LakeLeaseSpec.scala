@@ -100,7 +100,7 @@ class LakeLeaseSpec extends SparkSpec {
       try {
         Lake.append((1 to 50).map(i => (i, s"v$i")).toDF("id", "v"), root, "a", "t")
         Lake.append((51 to 100).map(i => (i, s"v$i")).toDF("id", "v"), root, "a", "t")
-        Lake.compact(spark, root, "a", "t", target = 1)
+        Lake.compact(spark, root, "a", "t")
         // a DIFFERENT scope is not covered by this hold: it takes (and
         // releases) its own lease
         Lake.append(Seq((1, "b")).toDF("id", "v"), root, "b", "t")

@@ -117,6 +117,19 @@ class LakeSpec extends SparkSpec {
     assert(Lake.read(spark, root, "s", "t").count() == 11)
   }
 
+  test("direct compact refuses a hive-partitioned table and leaves its layout intact") {
+    val root = tmpDir("lake")
+    Seq("2024-01-01", "2024-01-02").foreach { day =>
+      Lake.appendPartitioned(Seq((1, day), (2, day)).toDF("id", "day"), root, "s", "t", Seq("day"))
+    }
+    val e = intercept[IllegalArgumentException](Lake.compact(spark, root, "s", "t"))
+    assert(e.getMessage.contains("hive-partitioned"), e.getMessage)
+    val dirs = new java.io.File(s"$root/s/t").listFiles().filter(_.isDirectory).map(_.getName).sorted
+    assert(dirs.toSeq == Seq("day=2024-01-01", "day=2024-01-02"))
+    assert(!new java.io.File(s"$root/s/t").listFiles().exists(_.getName.endsWith(".parquet")))
+    assert(Lake.read(spark, root, "s", "t").count() == 4)
+  }
+
   test("partitioned compaction work dirs are invisible to readers; crashed swaps recover") {
     val root = tmpDir("lake")
     (1 to 5).foreach { i =>
