@@ -3,14 +3,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // Optional comma-separated name filter for local iteration on a subset
+    // (e.g. SPARK_GRAFT_BENCH_ONLY=q62_neardup_clusters,q63_neardup_dropped);
+    // unset, every query runs. Checked before the session starts: an
+    // unknown name fails naming it.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(SparkEntry.selectNames(_).toSet)
+    val spark = GraftSession.local(cpus, cpus)
     // Warm-up: absorb one-time session bootstrap (codegen compiler, shuffle
     // infrastructure, broadcast machinery, parquet footer reads) so
     // per-query times measure the queries — whichever query ran first was
@@ -38,12 +37,6 @@ object Bench {
     // hit. (The OS page cache is shared by all sweeps; that is the steady
     // state a real cluster sees too.) A query that throws in any sweep
     // reports -1.0 — a failure marker, never a time.
-    // Optional comma-separated name filter for local iteration on a subset
-    // (e.g. SPARK_GRAFT_BENCH_ONLY=q62_neardup_clusters,q63_neardup_dropped);
-    // the driver never sets it, so its runs always cover every query.
-    // trim like ScaleBench's SCALE_ONLY: "a, b" with natural spacing must
-    // not silently match nothing
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .toSeq
@@ -69,11 +62,11 @@ object Bench {
     // idle run at the default SPARK_GRAFT_CPUS=4 would read ~8x the 32-core
     // reference and be falsely flagged load-contaminated. The report records
     // cpus so a reader can reproduce the rescale.
-    val CanaryRef = 0.19 * (32.0 / cpus.toInt) // idle local[32] seconds, committed round 13
+    val CanaryRef = 0.19 * (32.0 / cpus) // idle local[32] seconds, committed round 13
     def canaryOnce(): Double = {
       import org.apache.spark.sql.functions._
       val t0 = System.nanoTime()
-      spark.range(0, 64000000L, 1, cpus.toInt)
+      spark.range(0, 64000000L, 1, cpus)
         .select(sum(xxhash64(col("id")))).collect()
       (System.nanoTime() - t0) / 1e9
     }

@@ -25,13 +25,8 @@ object GraftSession {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    // canChangeCachedPlanOutputPartitioning stays at its default (false):
-    // the r17 experiment that set it true (letting AQE coalesce exchanges
-    // inside cached plans) was a net loss — q41 −25% but q24 +20%,
-    // q56/q62/q63 and the media family +5–13% — because the persisted
-    // gram/bucket/fingerprint tables here are BYTE-small but feed
-    // CPU-heavy downstream work (verify joins, band joins), exactly the
-    // case where byte-derived coalescing under-parallelizes.
+    // canChangeCachedPlanOutputPartitioning stays false: true cost q24 +20%,
+    // q56/q62/q63/media +5–13% for q41 −25% (OPTIMIZATION_r17.md, "1b. q90").
     // Schema drift across append batches is the norm in the reference lake
     // (union_by_name, /root/reference/src/engine/database.py:275).
     .config("spark.sql.parquet.mergeSchema", "false") // opt-in per read

@@ -28,4 +28,15 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allQ.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
+
+  /** Comma-separated query names (`"q01_x, q11_y"`) → the names, each
+    * trimmed, empty entries dropped, in the given order. Throws naming
+    * every name that is not in [[queries]]: a typo fails instead of
+    * silently selecting nothing. */
+  def selectNames(csv: String): Seq[String] = {
+    val names = csv.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    names
+  }
 }

@@ -6,16 +6,19 @@ import graft.SparkEntry
   * files — the plan evidence the optimization rounds commit under plans/.
   * `runMain graft.examples.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>`.
   * Each query is collect()-driven first so the printed plan is the final
-  * (post-AQE) one, the same discipline as [[PlanPeek]].
+  * (post-AQE) one: count() would plan its own cloned QueryExecution and
+  * leave this df's plan at isFinalPlan=false. Plan properties that must
+  * hold are asserted in `PlanInvariantsSpec`, not read from these dumps.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>")
-    val Array(dir, outDir, suffix, names) = args.take(4)
+    val Array(dir, outDir, suffix, csv) = args.take(4)
+    val names = SparkEntry.selectNames(csv)
     val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+    names.foreach { name =>
       spark.sharedState.cacheManager.clearCache()
       val df = SparkEntry.queries(name)(spark, dir)
       val n = df.collect().length

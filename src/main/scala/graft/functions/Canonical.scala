@@ -23,21 +23,6 @@ object Canonical {
   def money(c: Column): Column =
     cleanString(regexp_replace(c, "[$,]", "")).cast("double")
 
-  /** F2 — float parse or NULL (/root/reference/scrapers/vgsi/source.py:148-156). */
-  def toDoubleOrNull(c: Column): Column = cleanString(c).cast("double")
-
-  /** F3 — int parse, floats truncated, unparsable -> NULL
-    * (/root/reference/scrapers/vgsi/source.py:159-167).
-    */
-  def toIntOrNull(c: Column): Column =
-    cleanString(c).cast("double").cast("long")
-
-  /** F5 — comma-stripped numeric parse ("2,000" -> 2000.0)
-    * (/root/reference/scrapers/vgsi/source.py:368-371).
-    */
-  def commaNumber(c: Column): Column =
-    cleanString(regexp_replace(c, ",", "")).cast("double")
-
   /** F6-style name normalization for COLUMN NAMES at ingest: lowercase,
     * whitespace runs -> _, & -> and, strip ALL colons. NOTE: this is the
     * column-level normalizer used by q19 (whose oracle mirrors this exact
@@ -123,10 +108,4 @@ object Canonical {
   /** F11 — URL construction (/root/reference/scrapers/vgsi/source.py:525). */
   def vgsiUrl(base: Column, pid: Column): Column =
     concat(base, lit("Parcel.aspx?pid="), pid.cast("string"))
-
-  /** F14 — entry-key split `"dataset:offset"` -> offset
-    * (/root/reference/scrapers/llc_ct_data/source.py:118-122).
-    */
-  def entryKeyOffset(c: Column): Column = substring_index(c, ":", -1)
-  def entryKeyDataset(c: Column): Column = substring_index(c, ":", 1)
 }

@@ -86,20 +86,10 @@ object Dedup {
       numHashes: Int = 12,
       bands: Int = 4
   ): DataFrame = {
-    // persisted for the same both-sides-read-it reason as
-    // bandedFingerprintPairs: the signature (one md5 per shingle × the
-    // whole corpus) is the heavy part, and under AQE's broadcast choice
-    // the self-join sides share no exchange — uncached it runs twice.
-    // LAZY persist, not [[Par.eager]]: a blocking count here serializes
-    // stages AQE otherwise overlaps, and the r16 fan-out already makes the
-    // worst-case duplicated materialization parallel (measured: eager cost
-    // q62/q63/q89 +9–14% with no win on any minhash query).
-    // NOT settled to data-sized partitioning before the persist: the r17
-    // settleSmall/REBALANCE experiment coalesced this cache to ~1 partition
-    // at sf0.1 and regressed q25/q62/q63/q87/q89 by 7–13% — the downstream
-    // band-bucket join work is CPU-heavy per byte, so byte-derived
-    // partition counts under-parallelize it (same trade as the grams
-    // family note in ngramJaccardPairs).
+    // persisted: both self-join sides read the signature (one md5 per
+    // shingle), and under AQE's broadcast choice they share no exchange.
+    // Lazy, not [[Par.eager]] (eager cost q62/q63/q89 +9–14%), and not
+    // rebalanced first (+7–13%; OPTIMIZATION_r17.md, "1b. q90").
     val bucketed = minhashBuckets(df, idCol, textCol, shingleK, numHashes, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     bucketed
@@ -136,11 +126,8 @@ object Dedup {
       numHashes: Int = 12,
       bands: Int = 4
   ): DataFrame = {
-    // lazy persist (not [[Par.eager]] — the q62/q63 measurement): the
-    // aggregate and join-back consumers usually share the reused
-    // (band, bucket) exchange, and a blocking count only serializes them.
-    // Not settled/rebalanced before the persist — the same r17 negative
-    // measurement as minhashCandidatePairs' (q62/q63 +10%).
+    // lazy persist, not eager or rebalanced: see minhashCandidatePairs
+    // (q62/q63 +10%; OPTIMIZATION_r17.md, "1b. q90").
     val bucketed = minhashBuckets(df, idCol, textCol, shingleK, numHashes, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centers = bucketed.groupBy(col("band"), col("bucket"))

@@ -105,14 +105,6 @@ private[graft] object Par {
     runs.map(_.value.get.get)
   }
 
-  // NOTE (r17 negative experiment, kept as a record): a `settleSmall`
-  // helper — REBALANCE-hint a small frame before persisting it, so the
-  // cache does not inherit the fan-out's cores-wide partitioning, with
-  // canChangeCachedPlanOutputPartitioning=true to let AQE size the
-  // exchange inside the cached plan — regressed every consumer it was
-  // applied to (q25/q62/q63/q87/q89 +7–13%): the persisted gram/bucket
-  // tables are byte-small but feed CPU-heavy join/verify stages, so
-  // byte-derived coalescing under-parallelizes exactly the work the
-  // fan-out exists to spread. Partitioning of a cached frame should track
-  // the WORK hanging off it, which the fan-out's core count already does.
+  // Byte-sized re-partitioning of a fanned-out cache regressed
+  // q25/q62/q63/q87/q89 +7–13% (OPTIMIZATION_r17.md, "1b. q90").
 }

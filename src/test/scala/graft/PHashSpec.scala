@@ -173,7 +173,7 @@ class PHashSpec extends SparkSpec {
     // collect() FIRST, and via collect not count: the fixture's fan-out
     // repartition makes the plan adaptive, codegen spans only appear in
     // the AQE-FINAL plan, and count() plans its own cloned QueryExecution
-    // (this df's plan would stay isFinalPlan=false — the PlanPeek rule)
+    // (this df's plan would stay isFinalPlan=false — the PlanDump rule)
     assert(df.collect().length == 50)
     val starred = df.queryExecution.executedPlan.toString
       .linesIterator.filter(_.toLowerCase.contains("imagedhash"))

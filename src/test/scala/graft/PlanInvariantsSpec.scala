@@ -2,7 +2,7 @@ package graft
 
 /** Plan-shape assertions for the round-3 query surface: the properties that
   * make each query survive a 100× scale-up, checked against the actual
-  * executed plan (not eyeballed). Complements ExplainCheck (interactive) and
+  * executed plan (not eyeballed). Complements PlanDump (plan files) and
   * the per-operator plan tests in AsOfJoinSpec/SamplingSpec/BucketingSpec.
   */
 @org.scalatest.tags.Slow
