@@ -60,9 +60,6 @@ object GraftSession {
     s.conf.set("spark.sql.ansi.enabled", "false")
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s.sparkContext.setLogLevel("WARN")
-    // graft_* SQL functions available in every graft session (cluster
-    // deployments get the same via spark.sql.extensions=GraftExtensions).
-    graft.functions.GraftSqlFunctions.register(s)
     s
   }
 }

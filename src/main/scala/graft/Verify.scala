@@ -3,12 +3,13 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB oracle compare (`tools/check.py`).
-  * `runMain graft.Verify <sfDir> <outDir> [q1,q2,...]`. */
+  * `runMain graft.Verify <sfDir> <outDir> [q1,q2,...]`; a name list that
+  * sbt split at a space over several arguments is joined back with commas. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus, cpus)
-    try run(spark, args(0), args(1), args.lift(2))
+    try run(spark, args(0), args(1), Option.when(args.length > 2)(args.drop(2).mkString(",")))
     finally spark.stop()
   }
 

@@ -13,8 +13,9 @@ import graft.SparkEntry
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>")
-    val Array(dir, outDir, suffix, csv) = args.take(4)
-    val names = SparkEntry.selectNames(csv)
+    val Array(dir, outDir, suffix) = args.take(3)
+    // sbt splits "q01_pricing_summary, q11_current_state" at the space
+    val names = SparkEntry.selectNames(args.drop(3).mkString(","))
     val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

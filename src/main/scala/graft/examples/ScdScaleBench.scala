@@ -164,8 +164,8 @@ object ScdScaleBench {
     Seq("j2_refresh_auto" -> tAuto, "j2_refresh_shuffle" -> tShuffle)
   }
 
-  /** The ENGINES' refresh dedup at scale ([[Scd.refreshDedupSnapshot]],
-    * on both engines' refresh path since r15 via `refreshDedupForLake`):
+  /** The engine's refresh dedup at scale ([[Scd.refreshDedupSnapshot]];
+    * the batch engine runs its [[Scd.snapshotChangedKeys]] plan):
     * per-entity multiset compare of the incoming batch against the
     * entity's latest stored snapshot. The batch is every entity's latest
     * snapshot with HALF the entities perturbed (odd user_id → one changed
@@ -199,7 +199,7 @@ object ScdScaleBench {
     var kept = 0L
     val t = time2(spark) {
       kept = Scd
-        .refreshDedupSnapshot(batch, lake, col("user_id"), Seq(col("ts")))
+        .refreshDedupSnapshot(batch, lake, col("user_id"), col("ts"))
         .count()
     }
     require(kept == changedRows,

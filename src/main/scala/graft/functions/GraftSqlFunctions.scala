@@ -8,9 +8,10 @@ import org.apache.spark.sql.types.IntegerType
 /** SQL surface for the native codegen expressions: the same operators the
   * DataFrame API exposes through [[HashExprs]], callable from plain
   * `spark.sql` (notebooks, the thrift server, BI tools) as `graft_*`
-  * functions. Registration is per-session and idempotent; for a cluster-wide
-  * install set `spark.sql.extensions=graft.functions.GraftExtensions` and
-  * every session the driver builds gets them at construction time.
+  * functions. Sessions get them from [[GraftExtensions]] at construction
+  * time: [[graft.GraftSession.configure]] sets
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, and a
+  * cluster-wide install sets the same conf.
   *
   * Hyper-parameters (shingle k, signature width, window) must be integer
   * LITERALS — they parameterize code generation, so a per-row value cannot
@@ -281,24 +282,6 @@ object GraftSqlFunctions {
     args =>
       if (b.isDefinedAt(args)) b(args)
       else throw new IllegalArgumentException(s"$name expects arguments $arity, got ${args.size}")
-
-  /** Register every graft_* function into an existing session. */
-  def register(spark: SparkSession): Unit = {
-    functions.foreach { case (name, arity, b) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        info(name, arity),
-        safeBuilder(name, arity, b)
-      )
-    }
-    tableFunctions.foreach { case (name, arity, b) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        info(name, arity),
-        safeTableBuilder(name, arity, b)
-      )
-    }
-  }
 
   /** Apply to a [[SparkSessionExtensions]] (the plug-in path). */
   def inject(extensions: SparkSessionExtensions): Unit = {

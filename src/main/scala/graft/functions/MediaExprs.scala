@@ -810,9 +810,6 @@ object MediaExprs {
   def imageDHash64(content: Column): Column =
     ColumnShim.column(ImageDHash64(ColumnShim.expression(content)))
 
-  def imageAHash64(content: Column): Column =
-    ColumnShim.column(ImageAHash64(ColumnShim.expression(content)))
-
   /** Both perceptual hashes from one decode: struct<dhash, ahash>. */
   def imageDualHash64(content: Column): Column =
     ColumnShim.column(ImageDualHash64(ColumnShim.expression(content)))

@@ -413,7 +413,7 @@ object Engine {
     * scans. A table not yet in the lake has no stored snapshot, so all its
     * keys are changed; a table with no incoming rows has no keys. The
     * existing side drops null keys, which the per-table form never
-    * matches either. Snapshot mode comes from Flatten's table contract,
+    * matches either. The snapshot key comes from Flatten's table contract,
     * never from the frame's column names, and the lake side is re-read
     * per batch rather than held in memory for the whole run.
     */
@@ -431,13 +431,12 @@ object Engine {
     val incoming = tables.map(t => keyed(t, stamped(t), "row_hash")).reduce(_ union _)
     val existing = tables.filter(existingTables).map { t =>
       val lake = Lake.read(spark, root, scope, t)
-      Scd.requireSnapshotContract(stamped(t), lake,
-        Scd.RefreshDedupMode.Snapshot(Flatten.identityColumnOf(t)))
+      Scd.requireSnapshotContract(stamped(t), lake, Flatten.identityColumnOf(t))
       keyed(t, lake, "scraped_at", "row_hash")
     }.reduceOption(_ union _)
       .getOrElse(incoming.select($"table", $"key", lit(null).cast("timestamp").as("scraped_at"), $"row_hash").limit(0))
       .filter($"key".isNotNull)
-    Scd.snapshotChangedKeys(incoming, existing, struct($"table", $"key"), Seq($"scraped_at"))
+    Scd.snapshotChangedKeys(incoming, existing, struct($"table", $"key"), $"scraped_at")
       .select($"__rd_key.table", $"__rd_key.key")
       .as[(String, String)]
       .collect()

@@ -200,6 +200,22 @@ object Lake {
         .parquet(path)
     }
 
+  /** [[append]] unless `df` is empty; returns the rows written. A
+    * refresh whose rows are all already in the lake must not append a
+    * schema-only parquet file (each one counts toward [[compactIfNeeded]]'s
+    * file threshold), and the emptiness count and the write read ONE
+    * persisted materialization, so a dedup plan feeding `df` (and its scan
+    * of the existing table) runs once.
+    */
+  def appendIfNonEmpty(df: DataFrame, root: String, scope: String, table: String): Long = {
+    val cached = df.persist()
+    try {
+      val n = cached.count()
+      if (n > 0L) append(cached, root, scope, table)
+      n
+    } finally cached.unpersist(blocking = false)
+  }
+
   /** Partitioned append: the given columns become directory levels
     * (`table/col=value/...`), so equality/range predicates on them prune at
     * file-listing time — no row-group is even opened. The right layout for

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * The reference derives versioning/current-state/change-detection entirely at
   * query time with window functions over `(uuid, scraped_at, row_hash)`
   * (/root/reference/scrapers/vgsi/source.py:813-864, README.md:125-136). These
-  * are the Spark-native equivalents, generic over key/ordering/hash columns.
+  * are the Spark-native equivalents, generic over key/ordering/hash columns
+  * (the refresh dedups read the lake's `row_hash` stamp column by name).
   *
   * Scale notes: every operator here induces exactly one hash-partition shuffle
   * on the entity key — the minimal plan for windowed SCD. At 100 TB the key
@@ -127,31 +128,19 @@ object Scd {
     * set picks the join: under `autoBroadcastJoinThreshold` the sort-merge
     * plan is demoted to broadcast with local shuffle reads (no exchange of
     * the new data over the wire), over it the join stays a real shuffle on
-    * `hashCol` — the graceful degradation a ≫10⁹-entity lake needs.
-    * `forceBroadcast = true` restores the hint for callers that know the
-    * bound (e.g. a dimension registry).
+    * `row_hash` — the graceful degradation a ≫10⁹-entity lake needs.
     *
     * KNOWN LIMITATION (reference parity, database.py:65-78 loads ALL
     * distinct hashes): the anti-join is against the full HISTORY, so a
     * content REVERT (A → B → back to A) matches the historical hash and
     * is never re-recorded — currentState then reports B forever while
     * the live source shows A. This form is kept for reference-parity
-    * callers; the SCD2-correct form is [[refreshDedupSnapshot]], which
-    * the engines' refresh paths use (via [[refreshDedupForLake]]).
+    * callers (the CT source, whose rows carry no entity key); the
+    * SCD2-correct form is [[refreshDedupSnapshot]], whose
+    * [[snapshotChangedKeys]] plan the batch engine's refresh path runs.
     */
-  def refreshDedup(
-      newRows: DataFrame,
-      existing: DataFrame,
-      hashCol: String = "row_hash",
-      forceBroadcast: Boolean = false
-  ): DataFrame = {
-    val hashes = existing.select(hashCol).distinct()
-    newRows.join(
-      if (forceBroadcast) broadcast(hashes) else hashes,
-      Seq(hashCol),
-      "left_anti"
-    )
-  }
+  def refreshDedup(newRows: DataFrame, existing: DataFrame): DataFrame =
+    newRows.join(existing.select("row_hash").distinct(), Seq("row_hash"), "left_anti")
 
   /** J2, SCD2-correct form — SNAPSHOT refresh dedup: an entity's incoming
     * rows append WHOLE iff the multiset of their content hashes differs
@@ -176,23 +165,16 @@ object Scd {
     * Single-row parents (properties) degenerate to the plain
     * one-hash compare.
     *
-    * Scale shape: the existing side is pruned to (key, order, hash) — a
+    * Scale shape: the existing side is pruned to (key, order, row_hash) — a
     * 3-column parquet scan — then ONE hash-partition shuffle on the key
     * shared by the rank window and the signature aggregate (same required
     * distribution, no second exchange; bucketing by the key removes it).
     * The incoming side aggregates batch-sized data; the changed-key set is
     * the delta (small in refresh steady-state) and AQE picks its join
-    * shape (`forceBroadcast` restores the hint for known-bounded callers).
+    * shape.
     */
-  def refreshDedupSnapshot(
-      newRows: DataFrame,
-      existing: DataFrame,
-      key: Column,
-      order: Seq[Column],
-      hashCol: String = "row_hash",
-      forceBroadcast: Boolean = false
-  ): DataFrame = {
-    val changedKeys = snapshotChangedKeys(newRows, existing, key, order, hashCol, forceBroadcast)
+  def refreshDedupSnapshot(newRows: DataFrame, existing: DataFrame, key: Column, order: Column): DataFrame = {
+    val changedKeys = snapshotChangedKeys(newRows, existing, key, order)
     require(!newRows.columns.contains("__rd_key"),
       "refreshDedupSnapshot uses helper column __rd_key; the input already has one — rename it first")
     // null-safe semi-join: a null-keyed incoming group (no entity ever
@@ -205,19 +187,9 @@ object Scd {
     * snapshot's, or that has none. A null incoming key never matches a
     * stored one, so it is always changed.
     */
-  def snapshotChangedKeys(
-      newRows: DataFrame,
-      existing: DataFrame,
-      key: Column,
-      order: Seq[Column],
-      hashCol: String = "row_hash",
-      forceBroadcast: Boolean = false
-  ): DataFrame = {
-    require(order.nonEmpty, "refreshDedupSnapshot needs at least one order column")
-    val orderAliases = order.zipWithIndex.map { case (c, i) => c.as(s"__rd_o$i") }
-    val pruned = existing.select(key.as("__rd_key") +: orderAliases :+ col(hashCol).as("__rd_hash"): _*)
-    val w = Window.partitionBy(col("__rd_key"))
-      .orderBy(order.indices.map(i => col(s"__rd_o$i").desc): _*)
+  def snapshotChangedKeys(newRows: DataFrame, existing: DataFrame, key: Column, order: Column): DataFrame = {
+    val pruned = existing.select(key.as("__rd_key"), order.as("__rd_order"), col("row_hash").as("__rd_hash"))
+    val w = Window.partitionBy(col("__rd_key")).orderBy(col("__rd_order").desc)
     // multiset signature of the entity's latest snapshot: rank (not
     // row_number) keeps every row tied at the newest order value;
     // sort_array makes the signature row-order independent
@@ -228,99 +200,33 @@ object Scd {
       .agg(sort_array(collect_list(col("__rd_hash"))).as("__rd_sig"))
     val incomingSig = newRows
       .groupBy(key.as("__rd_key"))
-      .agg(sort_array(collect_list(col(hashCol))).as("__rd_new_sig"))
+      .agg(sort_array(collect_list(col("row_hash"))).as("__rd_new_sig"))
     incomingSig
-      .join(
-        if (forceBroadcast) broadcast(latestSig) else latestSig,
-        Seq("__rd_key"), "left")
+      .join(latestSig, Seq("__rd_key"), "left")
       .filter(col("__rd_sig").isNull || col("__rd_sig") =!= col("__rd_new_sig"))
       .select(col("__rd_key"))
   }
 
-  /** Which dedup semantics a lake write uses — passed EXPLICITLY by
-    * callers that know their table's stamp convention statically
-    * (the VGSI engine via [[graft.sources.Flatten.identityColumnOf]],
-    * the CT source which has no per-row entity key), so a coincidental
-    * column name or a schema rename can never silently flip the
-    * semantics of the core write path (it could under the old
-    * column-sniff dispatch; the sniff survives only as the logged
-    * fallback for genuinely dynamic frames).
+  /** Snapshot-dedup contract precheck for a lake table keyed on `key`,
+    * with a DIAGNOSABLE error: an existing lake table that does not carry
+    * the stamp convention (e.g. a foreign schema staged into an engine
+    * scope under a colliding table name) would otherwise fail deep inside
+    * the snapshot plan as an unresolved-column AnalysisException on every
+    * batch, with nothing pointing at the contract mismatch. The plan
+    * reads key+scraped_at+row_hash from the existing side but only
+    * key+row_hash from the incoming batch.
     */
-  sealed trait RefreshDedupMode
-  object RefreshDedupMode {
-    /** Per-entity snapshot multiset compare ([[refreshDedupSnapshot]]):
-      * reverts re-record; requires a per-row entity key + order stamp.
-      */
-    final case class Snapshot(key: String, order: String = "scraped_at") extends RefreshDedupMode
-    /** Reference-parity full-history anti-join ([[refreshDedup]]). */
-    case object FullHistory extends RefreshDedupMode
-  }
-
-  /** The ENGINES' refresh dedup, mode chosen by the CALLER: per-entity
-    * snapshot set-compare for frames with an entity identity, the
-    * reference-parity full-history anti-join otherwise. One entry point
-    * so the batch engine, the CT source, and the streaming refresh twin
-    * cannot drift on what each mode MEANS — while what mode a table GETS
-    * is each caller's static knowledge, not a column sniff.
-    */
-  def refreshDedupForLake(
-      newRows: DataFrame,
-      existing: DataFrame,
-      mode: RefreshDedupMode
-  ): DataFrame = mode match {
-    case m @ RefreshDedupMode.Snapshot(k, o) =>
-      requireSnapshotContract(newRows, existing, m)
-      refreshDedupSnapshot(newRows, existing, col(k), Seq(col(o)))
-    case RefreshDedupMode.FullHistory =>
-      refreshDedup(newRows, existing)
-  }
-
-  /** [[refreshDedupForLake]]'s Snapshot-mode contract precheck, with a
-    * DIAGNOSABLE error: an existing lake table that does not carry the
-    * stamp convention (e.g. a foreign schema staged into an engine scope
-    * under a colliding table name) would otherwise fail deep inside the
-    * snapshot plan as an unresolved-column AnalysisException on every
-    * batch, with nothing pointing at the mode/contract mismatch. The plan
-    * reads key+order+hash from the existing side but only key+hash from
-    * the incoming batch; row_hash is in BOTH need lists.
-    */
-  def requireSnapshotContract(
-      newRows: DataFrame,
-      existing: DataFrame,
-      mode: RefreshDedupMode.Snapshot
-  ): Unit = {
-    val RefreshDedupMode.Snapshot(k, o) = mode
-    Seq(("incoming batch", newRows, Seq(k, "row_hash")),
-        ("existing lake table", existing, Seq(k, o, "row_hash")))
+  def requireSnapshotContract(newRows: DataFrame, existing: DataFrame, key: String): Unit =
+    Seq(("incoming batch", newRows, Seq(key, "row_hash")),
+        ("existing lake table", existing, Seq(key, "scraped_at", "row_hash")))
       .foreach { case (side, df, need) =>
         val missing = need.filterNot(df.columns.contains)
         require(missing.isEmpty,
-          s"refreshDedupForLake(Snapshot($k, $o)): the $side is missing column(s) " +
-            s"${missing.mkString(", ")} — this table does not follow the stamp convention " +
-            "the caller declared (was a foreign schema staged into this scope under an " +
-            "engine table name?); resolve the collision or dedup it with FullHistory")
+          s"snapshot dedup keyed on $key: the $side is missing column(s) " +
+            s"${missing.mkString(", ")} — this table does not follow the lake's stamp convention " +
+            "(was a foreign schema staged into this scope under an engine table name?); " +
+            "resolve the collision or dedup it with the full-history refreshDedup")
       }
-  }
-
-  /** Guarded FALLBACK for genuinely dynamic frames (the generic staged
-    * file-stream, where no static table contract exists): infer the mode
-    * from the stamp convention's column names and LOG which form was
-    * chosen — an operator staging a frame that coincidentally carries
-    * `uuid`+`scraped_at` should be able to see the semantics switch in
-    * the log rather than discover it from dedup behavior. Callers with
-    * static knowledge must use the explicit-mode overload.
-    */
-  def refreshDedupForLake(newRows: DataFrame, existing: DataFrame): DataFrame = {
-    val both = newRows.columns.toSet.intersect(existing.columns.toSet)
-    val mode = Seq("uuid", "property_uuid").find(both.contains) match {
-      case Some(k) if both.contains("scraped_at") => RefreshDedupMode.Snapshot(k)
-      case _ => RefreshDedupMode.FullHistory
-    }
-    org.slf4j.LoggerFactory.getLogger(getClass)
-      .info(s"refreshDedupForLake: inferred $mode from columns " +
-        s"(explicit-mode overload avoids the sniff)")
-    refreshDedupForLake(newRows, existing, mode)
-  }
 
   /** S9 — upsert for a small dimension table (vanilla Spark has no MERGE):
     * union the updates over the base and keep the newest row per key via W1.

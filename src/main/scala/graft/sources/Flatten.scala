@@ -108,10 +108,11 @@ object Flatten {
   /** The identity column the VGSI stamp convention gives each flattened
     * table — `uuid` on the parent, the `property_uuid` FK on every child
     * (the pair every [[flatten]] frame carries by construction). This is
-    * the STATIC contract the engine passes to
-    * [[graft.scd.Scd.refreshDedupForLake]]'s explicit-mode overload:
-    * dedup semantics on the write path must come from the table contract,
-    * never from sniffing the frame's column names.
+    * the STATIC contract the engine keys its snapshot dedup on
+    * ([[graft.scd.Scd.snapshotChangedKeys]], checked by
+    * [[graft.scd.Scd.requireSnapshotContract]]): dedup semantics on the
+    * write path must come from the table contract, never from sniffing the
+    * frame's column names.
     */
   def identityColumnOf(table: String): String =
     if (table == "properties") "uuid" else "property_uuid"

@@ -143,29 +143,17 @@ object CtDataSource {
       // stay excluded here too.
       val stamped = stamped0.dropDuplicates("row_hash")
       // Dedup against ANY existing table (not just refresh): makes reruns
-      // after a crash-before-checkpoint idempotent.
-      // EXPLICIT FullHistory mode (reference-parity anti-join): CT rows
-      // carry no uuid/property_uuid identity, so per-entity-latest is
-      // undefined here — and this source KNOWS that statically, so it
-      // says so rather than letting a column sniff decide (a dataset that
-      // happened to ship a `uuid` column would otherwise silently switch
-      // the write path to snapshot semantics)
+      // after a crash-before-checkpoint idempotent. The reference-parity
+      // full-history anti-join: CT rows carry no uuid/property_uuid
+      // identity, so per-entity-latest is undefined here — and this source
+      // KNOWS that statically, so it names the dedup rather than letting a
+      // column sniff decide (a dataset that happened to ship a `uuid`
+      // column must not switch the write path to snapshot semantics)
       val toWrite =
         if (Lake.tables(spark, root, Scope).contains(table))
-          Scd.refreshDedupForLake(stamped, Lake.read(spark, root, Scope, table),
-            Scd.RefreshDedupMode.FullHistory)
+          Scd.refreshDedup(stamped, Lake.read(spark, root, Scope, table))
         else stamped
-      // emptiness probe + write from ONE persisted materialization: a
-      // no-change refresh must not append a schema-only parquet file, and
-      // isEmpty + append would execute the dedup anti-join (and its scan
-      // of the existing lake table) twice — the pages cache only covers
-      // the fetch side
-      val cached = toWrite.persist()
-      try {
-        val n = cached.count()
-        if (n == 0L) 0L
-        else { Lake.append(cached, root, Scope, table); n }
-      } finally cached.unpersist(blocking = false)
+      Lake.appendIfNonEmpty(toWrite, root, Scope, table)
     } finally jsonLines.unpersist()
   }
 

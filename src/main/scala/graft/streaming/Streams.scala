@@ -96,21 +96,35 @@ object Streams {
         // its intra-session set, database.py:139-149), then anti-join the
         // lake's existing hashes
         val fresh = batch.dropDuplicates("row_hash")
-        // the SNIFFING fallback is deliberate here and only here: this
-        // reader stages arbitrary external files with no static table
-        // contract to consult, so the stamp-convention column sniff (which
-        // LOGS the mode it picked) is the honest dispatch — the batch
-        // engine and the CT source, which do know their tables, pass the
-        // mode explicitly
         val toWrite =
           if (Lake.tables(spark, root, scope).contains(table))
-            Scd.refreshDedupForLake(fresh, Lake.read(spark, root, scope, table))
+            dedupByStampConvention(fresh, Lake.read(spark, root, scope, table))
           else fresh
-        Lake.append(toWrite, root, scope, table)
+        Lake.appendIfNonEmpty(toWrite, root, scope, table)
+        ()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
+
+  /** [[refreshStream]]'s lake dedup, chosen from the stamp convention's
+    * column names: [[Scd.refreshDedupSnapshot]] keyed on `uuid` or
+    * `property_uuid` when both sides carry it and `scraped_at`, the
+    * full-history [[Scd.refreshDedup]] otherwise. The sniff is deliberate
+    * here and only here: this reader stages arbitrary external files with
+    * no static table contract to consult (the batch engine and the CT
+    * source name their dedup in code), and it LOGS the form it picked so
+    * an operator staging a frame that coincidentally carries
+    * `uuid`+`scraped_at` can see the semantics switch.
+    */
+  private[graft] def dedupByStampConvention(newRows: DataFrame, existing: DataFrame): DataFrame = {
+    val both = newRows.columns.toSet.intersect(existing.columns.toSet)
+    val key = if (both.contains("scraped_at")) Seq("uuid", "property_uuid").find(both.contains) else None
+    org.slf4j.LoggerFactory.getLogger(getClass).info(
+      s"refreshStream: inferred ${key.fold("full-history dedup")(k => s"snapshot dedup on $k")} from columns")
+    key.fold(Scd.refreshDedup(newRows, existing))(k =>
+      Scd.refreshDedupSnapshot(newRows, existing, col(k), col("scraped_at")))
+  }
 
   /** Streaming corpus intake: the training-data quality gates applied to an
     * unbounded document stream. The per-row gates (token count, language id,

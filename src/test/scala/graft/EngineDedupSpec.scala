@@ -11,7 +11,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The engine's one-plan batch dedup against its per-table definition:
   * for every table, the rows a batch appends equal
-  * `Scd.refreshDedupForLake(stamped_t, lake_t, Snapshot(identityColumnOf(t)))`
+  * `Scd.refreshDedupSnapshot(stamped_t, lake_t, col(identityColumnOf(t)), col("scraped_at"))`
   * computed on its own, and the batch plans that dedup once.
   */
 @org.scalatest.tags.Slow
@@ -59,7 +59,7 @@ class EngineDedupSpec extends SparkSpec {
       val stamped = Lake.stampMetadata(flat(t), new java.sql.Timestamp(0L))
       val expected = before.get(t) match {
         case Some(lake) =>
-          Scd.refreshDedupForLake(stamped, lake, Scd.RefreshDedupMode.Snapshot(Flatten.identityColumnOf(t)))
+          Scd.refreshDedupSnapshot(stamped, lake, col(Flatten.identityColumnOf(t)), col("scraped_at"))
         case None => stamped
       }
       val appended = after.get(t).fold(expected.limit(0)) { a =>

@@ -5,8 +5,6 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 class GraftSqlFunctionsSpec extends SparkSpec {
 
-  GraftSqlFunctions.register(spark)
-
   test("graft_simhash64 from SQL equals the Scala implementation") {
     val got = spark.sql("SELECT graft_simhash64('the quick brown fox') AS h").head().getLong(0)
     assert(got == HashSupport.simhash64("the quick brown fox"))

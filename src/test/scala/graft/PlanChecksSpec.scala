@@ -85,7 +85,7 @@ class PlanChecksSpec extends SparkSpec {
       col("o_custkey").as("uuid"),
       col("o_orderdate").as("scraped_at"),
       md5(concat(col("o_orderpriority"), lit("#new"))).as("row_hash"))
-    val out = Scd.refreshDedupSnapshot(incoming, existing, col("uuid"), Seq(col("scraped_at")))
+    val out = Scd.refreshDedupSnapshot(incoming, existing, col("uuid"), col("scraped_at"))
     out.count() // materialize so AQE's final stages are inspectable
 
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {

@@ -64,14 +64,19 @@ class ScdSpec extends SparkSpec {
     // full-history form)
     val revert = Seq(("u1", 4, "h1", 100)).toDF("uuid", "t", "row_hash", "value")
     assert(Scd.refreshDedup(revert, lake).isEmpty, "full-history form suppresses the revert (reference parity)")
-    val kept = Scd.refreshDedupSnapshot(revert, lake, $"uuid", Seq($"t"))
+    val kept = Scd.refreshDedupSnapshot(revert, lake, $"uuid", $"t")
     assert(kept.select($"row_hash").as[String].collect().toSeq == Seq("h1"))
     // and the chain then shows all three states
     val v = Scd.withVersions(lake.unionByName(revert), $"uuid", $"row_hash", $"t")
     assert(v.filter($"uuid" === "u1").select($"version").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
     // unchanged content still dedups (crash-rerun idempotency preserved)
     val rerun = Seq(("u1", 4, "h2", 200), ("u2", 4, "h9", 900)).toDF("uuid", "t", "row_hash", "value")
-    assert(Scd.refreshDedupSnapshot(rerun, lake, $"uuid", Seq($"t")).isEmpty)
+    assert(Scd.refreshDedupSnapshot(rerun, lake, $"uuid", $"t").isEmpty)
+    // the key is whatever column the caller names: a renamed identity
+    // column keeps snapshot semantics
+    val renamed = Scd.refreshDedupSnapshot(revert.withColumnRenamed("uuid", "entity_id"),
+      lake.withColumnRenamed("uuid", "entity_id"), $"entity_id", $"t")
+    assert(renamed.select($"row_hash").as[String].collect().toSeq == Seq("h1"))
   }
 
   test("refreshDedupSnapshot: changed child-sets append WHOLE; duplicate siblings compare as a multiset") {
@@ -85,7 +90,7 @@ class ScdSpec extends SparkSpec {
     ).toDF("property_uuid", "t", "row_hash")
     val changed = Seq(("p1", 3, "shed"), ("p1", 3, "barn"), ("p1", 3, "silo"))
       .toDF("property_uuid", "t", "row_hash")
-    val kept = Scd.refreshDedupSnapshot(changed, children, $"property_uuid", Seq($"t"))
+    val kept = Scd.refreshDedupSnapshot(changed, children, $"property_uuid", $"t")
       .select($"row_hash").as[String].collect().sorted.toSeq
     assert(kept == Seq("barn", "shed", "silo"),
       s"a changed snapshot appends WHOLE (coherent state), got: $kept")
@@ -94,10 +99,10 @@ class ScdSpec extends SparkSpec {
     // {shed, barn} against {shed, shed, barn})
     val same = Seq(("p1", 3, "shed"), ("p1", 3, "shed"), ("p1", 3, "barn"))
       .toDF("property_uuid", "t", "row_hash")
-    assert(Scd.refreshDedupSnapshot(same, children, $"property_uuid", Seq($"t")).isEmpty)
+    assert(Scd.refreshDedupSnapshot(same, children, $"property_uuid", $"t").isEmpty)
     val dropped = Seq(("p1", 3, "shed"), ("p1", 3, "barn"))
       .toDF("property_uuid", "t", "row_hash")
-    assert(Scd.refreshDedupSnapshot(dropped, children, $"property_uuid", Seq($"t")).count() == 2L,
+    assert(Scd.refreshDedupSnapshot(dropped, children, $"property_uuid", $"t").count() == 2L,
       "losing one duplicate sibling IS a change")
   }
 
@@ -110,27 +115,12 @@ class ScdSpec extends SparkSpec {
     // state), and the t=3 identical refresh appends NOTHING.
     val lake0 = Seq(("p1", 1, "hA"), ("p1", 1, "hB")).toDF("property_uuid", "t", "row_hash")
     val r1 = Seq(("p1", 2, "hA"), ("p1", 2, "hB2")).toDF("property_uuid", "t", "row_hash")
-    val kept1 = Scd.refreshDedupSnapshot(r1, lake0, $"property_uuid", Seq($"t"))
+    val kept1 = Scd.refreshDedupSnapshot(r1, lake0, $"property_uuid", $"t")
     assert(kept1.count() == 2L, "partial change appends the whole new snapshot")
     val lake1 = lake0.unionByName(kept1)
     val r2 = Seq(("p1", 3, "hA"), ("p1", 3, "hB2")).toDF("property_uuid", "t", "row_hash")
-    assert(Scd.refreshDedupSnapshot(r2, lake1, $"property_uuid", Seq($"t")).isEmpty,
+    assert(Scd.refreshDedupSnapshot(r2, lake1, $"property_uuid", $"t").isEmpty,
       "static data after the change must append NOTHING — the oscillation bug")
-  }
-
-  test("refreshDedupForLake dispatches on the lake stamp convention") {
-    // uuid + scraped_at present → per-entity-latest (the revert records)
-    val lk = Seq(("u1", 1, "h1"), ("u1", 2, "h2")).toDF("uuid", "scraped_at", "row_hash")
-    val revert = Seq(("u1", 3, "h1")).toDF("uuid", "scraped_at", "row_hash")
-    assert(Scd.refreshDedupForLake(revert, lk).count() == 1L)
-    // no identity column → reference-parity full history (the revert drops)
-    val lkNoKey = lk.withColumnRenamed("uuid", "business_key")
-    val revNoKey = revert.withColumnRenamed("uuid", "business_key")
-    assert(Scd.refreshDedupForLake(revNoKey, lkNoKey).isEmpty)
-    // identity but no scraped_at stamp → full history too
-    val lkNoStamp = lk.withColumnRenamed("scraped_at", "t")
-    val revNoStamp = revert.withColumnRenamed("scraped_at", "t")
-    assert(Scd.refreshDedupForLake(revNoStamp, lkNoStamp).isEmpty)
   }
 
   test("fieldChanges reports the exact changed columns, null-safely") {
@@ -189,49 +179,19 @@ class ScdSpec extends SparkSpec {
     assert(winners.distinct.size == 1, s"tie winner must be run-stable: $winners")
   }
 
-  test("refreshDedupForLake: the CALLER's explicit mode wins over what a column sniff would pick") {
-    import java.sql.Timestamp
-    val t1 = Timestamp.valueOf("2026-01-01 00:00:00")
-    val t2 = Timestamp.valueOf("2026-01-02 00:00:00")
-    val t3 = Timestamp.valueOf("2026-01-03 00:00:00")
-    // entity e1's history: A then B; the incoming batch REVERTS to A
-    val existing = Seq(("e1", t1, "hashA"), ("e1", t2, "hashB"))
-      .toDF("uuid", "scraped_at", "row_hash")
-    val incoming = Seq(("e1", t3, "hashA")).toDF("uuid", "scraped_at", "row_hash")
-
-    // explicit FullHistory suppresses the revert EVEN THOUGH uuid+scraped_at
-    // are present (the sniff would have flipped to snapshot semantics —
-    // the silent switch the explicit mode exists to prevent)
-    assert(Scd.refreshDedupForLake(incoming, existing, Scd.RefreshDedupMode.FullHistory).count() == 0L)
-    // explicit Snapshot re-records it
-    assert(Scd.refreshDedupForLake(incoming, existing, Scd.RefreshDedupMode.Snapshot("uuid")).count() == 1L)
-    // the sniffing FALLBACK (dynamic frames only) infers snapshot here
-    assert(Scd.refreshDedupForLake(incoming, existing).count() == 1L)
-
-    // a RENAMED identity column: the sniff can only fall back to
-    // full-history (suppressing the revert); a caller that knows its key
-    // statically passes it and keeps snapshot semantics
-    val exR = existing.withColumnRenamed("uuid", "entity_id")
-    val inR = incoming.withColumnRenamed("uuid", "entity_id")
-    assert(Scd.refreshDedupForLake(inR, exR).count() == 0L,
-      "sniff on a renamed key degrades to full-history")
-    assert(Scd.refreshDedupForLake(inR, exR, Scd.RefreshDedupMode.Snapshot("entity_id")).count() == 1L,
-      "the explicit key keeps snapshot semantics under any column name")
-  }
-
-  test("refreshDedupForLake Snapshot precheck: a foreign schema fails naming the contract, not unresolved-column") {
+  test("requireSnapshotContract: a foreign schema fails naming the stamp contract") {
     import java.sql.Timestamp
     val incoming = Seq(("e1", Timestamp.valueOf("2026-01-01 00:00:00"), "h"))
       .toDF("uuid", "scraped_at", "row_hash")
     // a foreign schema staged into an engine scope under a colliding
-    // table name: no uuid/scraped_at — the old deep AnalysisException
-    // said nothing about the mode/contract mismatch
+    // table name: no uuid/scraped_at — the snapshot plan itself would
+    // fail with an AnalysisException that says nothing about the contract
     val foreign = Seq((1, "x", "h")).toDF("id", "payload", "row_hash")
     val e = intercept[IllegalArgumentException] {
-      Scd.refreshDedupForLake(incoming, foreign, Scd.RefreshDedupMode.Snapshot("uuid"))
+      Scd.requireSnapshotContract(incoming, foreign, "uuid")
     }
     assert(e.getMessage.contains("stamp convention"), e.getMessage)
     assert(e.getMessage.contains("uuid"), e.getMessage)
-    assert(e.getMessage.contains("FullHistory"), e.getMessage)
+    assert(e.getMessage.contains("full-history refreshDedup"), e.getMessage)
   }
 }

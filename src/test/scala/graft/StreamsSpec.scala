@@ -61,6 +61,30 @@ class StreamsSpec extends SparkSpec {
     val afterSecond = Lake.read(spark, root, "s", "t")
     assert(afterSecond.count() == 4) // only (4,d) appended
     assert(afterSecond.select($"pid").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+
+    // a third drain whose staged rows are all in the lake appends no file
+    def partFiles = new java.io.File(Lake.tablePath(root, "s", "t")).list().count(_.startsWith("part-"))
+    val filesBefore = partFiles
+    stamped(Seq((1L, "a"), (4L, "d"))).write.mode("append").parquet(staging)
+    val q3 = Streams.refreshStream(spark, schema, staging, root, "s", "t", cp)
+    q3.awaitTermination()
+    assert(partFiles == filesBefore, "an all-duplicate micro-batch must not append a schema-only file")
+    assert(Lake.read(spark, root, "s", "t").count() == 4)
+  }
+
+  test("dedupByStampConvention picks the dedup from the lake stamp convention") {
+    // uuid + scraped_at present → per-entity snapshot (the revert records)
+    val lk = Seq(("u1", 1, "h1"), ("u1", 2, "h2")).toDF("uuid", "scraped_at", "row_hash")
+    val revert = Seq(("u1", 3, "h1")).toDF("uuid", "scraped_at", "row_hash")
+    assert(Streams.dedupByStampConvention(revert, lk).count() == 1L)
+    // no identity column (or a renamed one) → full history (the revert drops)
+    val lkNoKey = lk.withColumnRenamed("uuid", "business_key")
+    val revNoKey = revert.withColumnRenamed("uuid", "business_key")
+    assert(Streams.dedupByStampConvention(revNoKey, lkNoKey).isEmpty)
+    // identity but no scraped_at stamp → full history too
+    val lkNoStamp = lk.withColumnRenamed("scraped_at", "t")
+    val revNoStamp = revert.withColumnRenamed("scraped_at", "t")
+    assert(Streams.dedupByStampConvention(revNoStamp, lkNoStamp).isEmpty)
   }
 
   test("native session_window (q44) produces the same sessions as the lag/cumsum formulation (q17)") {
