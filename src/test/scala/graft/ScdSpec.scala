@@ -1,6 +1,7 @@
 package graft
 
 import graft.scd.Scd
+import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
 /** SCD2 query-time semantics — mirrors the reference's versioning scenarios
@@ -177,6 +178,38 @@ class ScdSpec extends SparkSpec {
         .filter($"city_key" === "k2").select($"url").as[String].head()
     }
     assert(winners.distinct.size == 1, s"tie winner must be run-stable: $winners")
+  }
+
+  // the lake writers call refreshDedup or refreshDedupSnapshot by name; the
+  // stamp-convention sniff (Streams.dedupByStampConvention) serves only
+  // dynamic frames and never overrides a writer's choice
+  test("refreshDedupForLake: the CALLER's explicit mode wins over what a column sniff would pick") {
+    import java.sql.Timestamp
+    val t1 = Timestamp.valueOf("2026-01-01 00:00:00")
+    val t2 = Timestamp.valueOf("2026-01-02 00:00:00")
+    val t3 = Timestamp.valueOf("2026-01-03 00:00:00")
+    // entity e1's history: A then B; the incoming batch REVERTS to A
+    val existing = Seq(("e1", t1, "hashA"), ("e1", t2, "hashB"))
+      .toDF("uuid", "scraped_at", "row_hash")
+    val incoming = Seq(("e1", t3, "hashA")).toDF("uuid", "scraped_at", "row_hash")
+
+    // the full-history dedup suppresses the revert EVEN THOUGH
+    // uuid+scraped_at are present (the sniff would pick snapshot semantics)
+    assert(Scd.refreshDedup(incoming, existing).count() == 0L)
+    // the snapshot dedup re-records it
+    assert(Scd.refreshDedupSnapshot(incoming, existing, $"uuid", $"scraped_at").count() == 1L)
+    // the sniffing fallback (dynamic frames only) infers snapshot here
+    assert(Streams.dedupByStampConvention(incoming, existing).count() == 1L)
+
+    // a RENAMED identity column: the sniff can only fall back to
+    // full-history (suppressing the revert); a caller that knows its key
+    // statically names it and keeps snapshot semantics
+    val exR = existing.withColumnRenamed("uuid", "entity_id")
+    val inR = incoming.withColumnRenamed("uuid", "entity_id")
+    assert(Streams.dedupByStampConvention(inR, exR).count() == 0L,
+      "sniff on a renamed key degrades to full-history")
+    assert(Scd.refreshDedupSnapshot(inR, exR, $"entity_id", $"scraped_at").count() == 1L,
+      "the named key keeps snapshot semantics under any column name")
   }
 
   test("requireSnapshotContract: a foreign schema fails naming the stamp contract") {
