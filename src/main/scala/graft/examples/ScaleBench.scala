@@ -376,24 +376,16 @@ object ScaleBench {
     * — kept ONLY as the A/B baseline for the planted-hot-gram skew
     * fixture: a window partition cannot be split by AQE, so every row of a
     * hot gram lands in one task. [[graft.operators.Dedup.repeatedSpans]]
-    * is the production (salted) form; do not use this one.
+    * is the production (salted) form; do not use this one. Only the mark
+    * differs: the char n-grams and the hits → spans merge are the
+    * production ones.
     */
   private def legacySpans(
       spark: SparkSession, df: DataFrame, minLen: Int, minDocs: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val positions = df
-      .select(
-        col("doc_id"),
-        trim(regexp_replace(lower(col("text")), "\\s+", " ")).as("__t"))
-      .withColumn(
-        "__pg",
-        explode(
-          when(
-            length(col("__t")) >= minLen,
-            expr(
-              s"""transform(sequence(1, length(__t) - $minLen + 1),
-                 |          i -> named_struct('pos', i, 'gram', substring(__t, i, $minLen)))""".stripMargin)
-          ).otherwise(expr("CAST(array() AS array<struct<pos:int,gram:string>>)"))))
+      .select(col("doc_id"), Dedup.normText("text").as("__t"))
+      .withColumn("__pg", explode(Dedup.charGrams("__t", minLen)))
       .select(col("doc_id"), col("__pg.pos").as("pos"), col("__pg.gram").as("gram"))
       .repartition(col("gram"))
     val wFirst = Window.partitionBy(col("gram"), col("doc_id")).orderBy(col("pos"))
@@ -403,22 +395,7 @@ object ScaleBench {
       .withColumn("__nd", sum(col("__first")).over(wGram))
       .filter(col("__nd") >= minDocs)
       .select(col("doc_id"), col("pos"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val cum = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hits
-      .withColumn(
-        "__brk",
-        when(col("pos") - lag(col("pos"), 1).over(w) > minLen, 1).otherwise(0))
-      .withColumn("__run", sum(col("__brk")).over(cum))
-      .groupBy(col("doc_id"), col("__run"))
-      .agg(
-        min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(minLen - 1)).as("span_end"),
-        count(lit(1)).as("n_grams"))
-      .select(
-        col("doc_id"), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1).as("span_len"), col("n_grams"))
+    Dedup.spansOfHits(hits, minLen, count(lit(1)))
   }
 
   /** min-of-2 timed runs, cache cleared before each (same discipline as
@@ -729,8 +706,7 @@ object ScaleBench {
           .select(col("doc_id"),
             explode(array_distinct(graft.functions.HashExprs.wordNGrams(col("text"), 3)))
               .as("gs"))
-          .select(col("doc_id"),
-            conv(substring(md5(col("gs")), 1, 15), 16, 10).cast("long").as("g"))
+          .select(col("doc_id"), Sampling.hash60(col("gs")).as("g"))
         var candNaive = 0L
         val tNaiveCand = time2(spark) {
           candNaive = grams.as("a")

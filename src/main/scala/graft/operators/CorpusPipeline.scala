@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -141,15 +141,10 @@ object CorpusPipeline {
     val capped = cfg.domainCap match {
       case None => annotated
       case Some(dc) =>
-        val canon = UrlOps.canonicalizeUrl(col(dc.urlCol))
-        val dom = dc.pslRules match {
-          case Some(rules) => UrlOps.registeredDomainPsl(canon, rules)
-          case None => UrlOps.registeredDomain(canon)
-        }
         val keptIds = Sampling
           .tokenBudgetMixture(
             annotated.filter(col("drop_reason").isNull),
-            group = dom,
+            group = capDomain(dc),
             key = id,
             tokens = col("__tokens"),
             budgets = dc.budgets,
@@ -187,15 +182,10 @@ object CorpusPipeline {
       "applyDomainCap reserves __cap_tokens/__cap_keep as helper columns — an input " +
         "already carrying one would be silently clobbered before the budget computation")
     val id = col(idCol)
-    val canon = UrlOps.canonicalizeUrl(col(dc.urlCol))
-    val dom = dc.pslRules match {
-      case Some(rules) => UrlOps.registeredDomainPsl(canon, rules)
-      case None => UrlOps.registeredDomain(canon)
-    }
     val keptIds = Sampling
       .tokenBudgetMixture(
         docs.withColumn("__cap_tokens", TextAnalysis.tokenCount(col(textCol))),
-        group = dom,
+        group = capDomain(dc),
         key = id,
         tokens = col("__cap_tokens"),
         budgets = dc.budgets,
@@ -203,6 +193,19 @@ object CorpusPipeline {
         defaultBudget = Some(dc.capTokens))
       .select(id.as("__cap_keep"))
     docs.join(keptIds, id === col("__cap_keep"), "left_semi")
+  }
+
+  /** The budget group of the per-domain cap: the registered domain of the
+    * canonicalized URL, by the PSL rules when given. One derivation for
+    * [[annotate]]'s cap and [[applyDomainCap]], so both spend a domain's
+    * budget on the same docs.
+    */
+  private def capDomain(dc: DomainCap): Column = {
+    val canon = UrlOps.canonicalizeUrl(col(dc.urlCol))
+    dc.pslRules match {
+      case Some(rules) => UrlOps.registeredDomainPsl(canon, rules)
+      case None => UrlOps.registeredDomain(canon)
+    }
   }
 
   /** Audit summary: kept/dropped counts per reason. */

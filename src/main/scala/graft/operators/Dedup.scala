@@ -852,31 +852,93 @@ object Dedup {
         coalesce(col("kept_text"), lit("")).as("kept_text"))
   }
 
-  /** Word 3-grams (space-joined lowercase token triples), used as the
-    * Jaccard unit — native single-pass codegen expression.
+  /** The rarity-ranked word-trigram table behind [[ngramJaccardPairs]] and
+    * [[containmentCandidates]]: `(doc_id, ranked, sz)`, one row per doc
+    * with non-null text. `ranked` holds the doc's DISTINCT word trigrams
+    * ([[graft.functions.HashExprs.wordNGrams]]: a doc of fewer than three
+    * words has one gram, its whole token list) as `(df, g)` structs,
+    * rarest first; `sz` is their count.
+    *
+    *  - `g` is the trigram's 60-bit md5 key ([[Sampling.hash60]]): cheaper
+    *    shuffles and probes than gram strings, birthday collisions
+    *    negligible even at ~10^8 distinct grams, and the oracle hashes
+    *    identically.
+    *  - `df` (document frequency) comes from a groupBy AGGREGATE joined back
+    *    to the gram stream, NOT a count window over g: the aggregate gets
+    *    map-side partial aggregation (a boilerplate gram shared by 10^8 docs
+    *    collapses to one row per map task before its exchange, and the
+    *    join-back is AQE-skew-splittable), where a window partitioned on g
+    *    would buffer EVERY occurrence of the hottest gram in one task —
+    *    WindowExec cannot be skew-split (the q133/q134 paragraph-dedup
+    *    argument).
+    *  - struct sort is lexicographic by field, so `sort_array` ranks each
+    *    doc's grams by the global (df asc, g asc) total order without any
+    *    global sort or rank assignment. That one array feeds the prefix
+    *    slices and the [[overlapVerify]] merge.
+    *
+    * The gram stream (read by the df aggregate and the join probe) and the
+    * result (read by the candidate stage and both verify sides) persist, so
+    * shingling and ranking run once; ContextCleaner reclaims the blocks
+    * once the result plan is unreferenced. (Fan-out history: r16's input
+    * fan-out regressed ~15%; the r17 retry — a fan-out here plus a keyed
+    * one on doc_id before the collect_list aggregate — won warm
+    * (2.09→1.39 s) but read flat on q24 and −15% on q133 in the cold
+    * interleaved bench, so the as-scanned shape stays; numbers in
+    * OPTIMIZATION_r17.md, "q24_ngram_jaccard / q133_containment_pairs".)
     */
-  def wordTrigrams(text: Column): Column =
-    graft.functions.HashExprs.wordNGrams(text, 3)
+  private[graft] def rankedGrams(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val grams = df
+      .select(
+        col(idCol).as("doc_id"),
+        explode(array_distinct(graft.functions.HashExprs.wordNGrams(col(textCol), 3))).as("gs"))
+      .select(col("doc_id"), Sampling.hash60(col("gs")).as("g"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dfTable = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
+    grams
+      .join(dfTable, Seq("g"))
+      .groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(struct(col("df"), col("g")))).as("ranked"))
+      .select(col("doc_id"), col("ranked"), size(col("ranked")).as("sz"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Exact verification of candidate pairs: `candidates` (doc_a, doc_b)
+    * joined to both sides' [[rankedGrams]] rows, with `inter` = |A∩B| from
+    * a codegen'd two-pointer merge over the rarity-sorted structs —
+    * O(sz_a + sz_b) per pair, no re-shingling, no per-row hash set. Each
+    * caller applies only its own metric and threshold.
+    *
+    * @return (doc_a, doc_b, inter, sa, sb)
+    */
+  private def overlapVerify(candidates: DataFrame, docs: DataFrame): DataFrame =
+    candidates
+      .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
+      .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
+      .select(
+        col("doc_a"),
+        col("doc_b"),
+        graft.functions.HashExprs
+          .sortedStructIntersectSize(col("da.ranked"), col("db.ranked"))
+          .as("inter"),
+        col("da.sz").as("sa"),
+        col("db.sz").as("sb")
+      )
 
   /** Near-duplicate pairs by n-gram Jaccard similarity >= threshold, using
     * PPJoin-style prefix filtering (Xiao, Wang, Lin & Yu, "Efficient
     * similarity joins for near duplicate detection", WWW 2008) — exact: the
-    * output is identical to the naive all-pairs formulation.
+    * output is identical to the naive all-pairs formulation over distinct
+    * word trigrams, `round(|A∩B| / |A∪B|, 4) >= threshold`.
     *
     * Plan shape (the scale story):
-    *  1. distinct grams per doc, keyed by a 60-bit md5-derived integer
-    *     (cheaper shuffle/probes than gram strings; birthday collisions
-    *     negligible even at ~10^8 distinct grams, and the oracle hashes
-    *     identically);
-    *  2. a global total order on grams by (document frequency asc, key asc)
-    *     — one count window over g, no global sort;
-    *  3. per doc, only the PREFIX (the sz - ceil(t·sz) + 1 RAREST grams) is
+    *  1. [[rankedGrams]]: each doc's distinct trigram keys, ranked by the
+    *     global (document frequency asc, key asc) order;
+    *  2. per doc, only the PREFIX (the sz - ceil(t·sz) + 1 RAREST grams) is
     *     exploded into the self-join. Two docs with Jaccard >= t must share
     *     a prefix gram, so candidate generation touches hot grams only for
     *     docs whose rarest grams are themselves hot — this is what removes
     *     the count² blow-up of a full inverted-index join;
-    *  4. candidates are verified exactly via array_intersect of the full
-    *     gram sets (a pair of equi-joins on doc_id, no re-shingling).
+    *  3. candidates are verified exactly by [[overlapVerify]].
     *
     * A length filter (least(sz) >= t·greatest(sz)) prunes candidates before
     * verification. The rounded-jaccard output filter means a pair with true
@@ -888,43 +950,7 @@ object Dedup {
     // Candidate-generation threshold: relaxed for round(j,4) >= t semantics,
     // minus a float-noise epsilon so ceil() can only lengthen the prefix.
     val tCand = threshold - 5e-5 - 1e-9
-    // The ranked doc table feeds both prefix-join sides and both verify
-    // sides: persist it so shingling + ranking run once. ContextCleaner
-    // reclaims the blocks once the result plan is unreferenced; at cluster
-    // scale swap for an explicit checkpoint. (Fan-out history: r16's
-    // input fan-out regressed ~15%; the r17 retry — a fan-out here plus a
-    // keyed one on doc_id before the collect_list aggregate — won warm
-    // (2.09→1.39 s) but read flat on q24 and −15% on q133 in the cold
-    // interleaved bench, so the as-scanned shape stays; numbers in
-    // OPTIMIZATION_r17.md, "q24_ngram_jaccard / q133_containment_pairs".)
-    val grams = df
-      .select(col(idCol).as("doc_id"), explode(array_distinct(wordTrigrams(col(textCol)))).as("gs"))
-      .select(
-        col("doc_id"),
-        conv(substring(md5(col("gs")), 1, 15), 16, 10).cast("long").as("g")
-      )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Global order = (document frequency asc, gram key asc): struct sort is
-    // lexicographic by field, so sort_array ranks each doc's grams rarest
-    // first without any global sort or rank assignment. Document frequency
-    // comes from a groupBy AGGREGATE joined back to the gram stream — NOT a
-    // count window over g: the aggregate gets map-side partial aggregation
-    // (a boilerplate gram shared by 10^8 docs collapses to one row per map
-    // task before its exchange, and the join-back is AQE-skew-splittable),
-    // where a window partitioned on g would buffer EVERY occurrence of the
-    // hottest gram in one task — WindowExec cannot be skew-split
-    // (the q133/q134 paragraph-dedup argument). grams persists: the df
-    // aggregate and the join probe both read it.
-    val dfTable = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    // One gram-set view per doc: rarity-sorted (df, g) structs. The rarity
-    // order is itself a total order, so the same array feeds both the prefix
-    // slice and the two-pointer verification merge.
-    val docs = grams
-      .join(dfTable, Seq("g"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("df"), col("g")))).as("ranked"))
-      .select(col("doc_id"), col("ranked"), size(col("ranked")).as("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = rankedGrams(df, idCol, textCol)
     val prefixLen = greatest((col("sz") - ceil(col("sz") * tCand) + 1).cast("int"), lit(1))
     val prefixes = docs
       .select(col("doc_id"), col("sz"), posexplode(slice(col("ranked"), lit(1), prefixLen)))
@@ -951,20 +977,7 @@ object Dedup {
       )
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    // Exact verification: codegen'd two-pointer merge over the rarity-sorted
-    // gram structs — O(sz_a + sz_b) per candidate pair, no per-row hash set.
-    candidates
-      .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
-      .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
-      .select(
-        col("doc_a"),
-        col("doc_b"),
-        graft.functions.HashExprs
-          .sortedStructIntersectSize(col("da.ranked"), col("db.ranked"))
-          .as("inter"),
-        col("da.sz").as("sa"),
-        col("db.sz").as("sb")
-      )
+    overlapVerify(candidates, docs)
       .select(
         col("doc_a"),
         col("doc_b"),
@@ -982,17 +995,16 @@ object Dedup {
     * dedup-then-train pipeline wants alongside [[ngramJaccardPairs]].
     *
     * Exactness: containment_permille = |A∩B|·1000 DIV |A| — integer
-    * arithmetic end to end, same gram derivation (distinct word trigrams →
-    * 60-bit md5 prefix) as the Jaccard operator, so the two reports are
-    * comparable. Docs with fewer than three words have NO trigrams and
-    * never appear on either side (containment of an empty set is 0/0 —
-    * excluded, not defined as 0 or 1000).
+    * arithmetic end to end, over the same gram table ([[rankedGrams]]) as
+    * the Jaccard operator, so the two reports are comparable. A doc of
+    * fewer than three words has one gram, its whole token list, so it pairs
+    * only with a doc holding that exact gram; a doc with NULL text has no
+    * grams and appears on neither side.
     *
     * Scale shape — PPJoin-style A-SIDE prefix filtering (the q24 machinery,
-    * adapted to the asymmetric relation): rank every doc's grams by the
-    * global (document-frequency asc, key asc) total order, then explode
-    * only the |A| − ⌈t·|A|⌉ + 1 RAREST grams of each doc as the A side of
-    * the candidate join. Pigeonhole-exact: if none of A's prefix grams is
+    * adapted to the asymmetric relation): explode only the
+    * |A| − ⌈t·|A|⌉ + 1 RAREST grams of each doc as the A side of the
+    * candidate join. Pigeonhole-exact: if none of A's prefix grams is
     * in B then |A∩B| ≤ ⌈t·|A|⌉ − 1 < t·|A|, so every qualifying pair has a
     * prefix collision — candidate generation never touches a hot
     * boilerplate gram unless it is among a doc's RAREST, which kills the
@@ -1001,9 +1013,8 @@ object Dedup {
     * sit anywhere inside B), so it is the full gram index, but pairs only
     * materialize where an A-prefix gram collides, and a size filter
     * (|B| ≥ ⌈t·|A|⌉ — containment needs that much intersection) prunes at
-    * the join. Verification is the exact sorted-merge intersection over
-    * the ranked arrays (no re-shingle, no per-row hash set). Output is
-    * IDENTICAL to the naive formulation.
+    * the join. Verification is [[overlapVerify]]. Output is IDENTICAL to
+    * the naive formulation.
     *
     * `dfCap` additionally drops grams whose document frequency exceeds the
     * cap from candidate generation — a hard bound on any single gram's
@@ -1021,18 +1032,8 @@ object Dedup {
       dfCap: Long = Long.MaxValue
   ): DataFrame = {
     val (docs, candidates) = containmentCandidates(df, idCol, textCol, thresholdPermille, dfCap)
-    // exact verification: codegen'd two-pointer merge over the rarity-sorted
-    // gram structs — O(sz_a + sz_b) per candidate, same as q24's
-    candidates
-      .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
-      .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
-      .select(
-        col("doc_a"),
-        col("doc_b"),
-        graft.functions.HashExprs
-          .sortedStructIntersectSize(col("da.ranked"), col("db.ranked"))
-          .as("inter"),
-        col("da.sz").cast("long").as("__sa"))
+    overlapVerify(candidates, docs)
+      .select(col("doc_a"), col("doc_b"), col("inter"), col("sa").cast("long").as("__sa"))
       // long arithmetic like the candidate stage's identical pattern: an
       // INT `inter * 1000` wraps negative past ~2.1M shared grams under
       // non-ANSI semantics, silently rejecting a true containment pair
@@ -1045,9 +1046,9 @@ object Dedup {
   /** [[containmentPairs]]' candidate stage, exposed for the ScaleBench
     * planted-hot-gram A/B (candidate counts are the quantity the prefix
     * filter exists to bound). Returns (docs, candidates): `docs` is the
-    * persisted rarity-ranked gram-array frame (doc_id, ranked, sz) the
-    * verify joins read, `candidates` the distinct (doc_a, doc_b) pairs
-    * that survive the A-side prefix + size filter (+ dfCap).
+    * persisted [[rankedGrams]] frame (doc_id, ranked, sz) the verify joins
+    * read, `candidates` the distinct (doc_a, doc_b) pairs that survive the
+    * A-side prefix + size filter (+ dfCap).
     */
   private[graft] def containmentCandidates(
       df: DataFrame,
@@ -1059,28 +1060,9 @@ object Dedup {
     require(thresholdPermille >= 1 && thresholdPermille <= 1000,
       "thresholdPermille must be in [1, 1000]")
     require(dfCap >= 1L, "dfCap must be positive")
-    val grams = df
-      .select(col(idCol).as("doc_id"), explode(array_distinct(wordTrigrams(col(textCol)))).as("gs"))
-      .select(
-        col("doc_id"),
-        conv(substring(md5(col("gs")), 1, 15), 16, 10).cast("long").as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // rarity ranking (q24's construction) via AGGREGATE + join-back, not a
-    // count window: a hot boilerplate gram's occurrences collapse to one
-    // row per map task in the df aggregate's partials, and the join-back
-    // probe streams against a one-row build — where a window partitioned
-    // on g would buffer EVERY occurrence of the hottest gram in one task
-    // (WindowExec cannot be skew-split by AQE; the q134/paragraph-dedup
-    // argument). grams persists: both the df aggregate and the probe read
-    // it. The same (df, g)-sorted array feeds the prefix slice, the B
-    // index, and the verify merge; docs persists for those reads.
-    val dfTable = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    val docs = grams
-      .join(dfTable, Seq("g"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("df"), col("g")))).as("ranked"))
-      .select(col("doc_id"), col("ranked"), size(col("ranked")).as("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the same (df, g)-sorted array feeds the prefix slice, the B index
+    // and the verify merge
+    val docs = rankedGrams(df, idCol, textCol)
     // ⌈t·sz⌉ in exact integer permille; prefixLen = sz − need + 1 ≥ 1
     val prefixLen =
       (col("sz") - expr(s"(sz * ${thresholdPermille}L + 999) div 1000") + 1).cast("int")
@@ -1288,9 +1270,9 @@ object Dedup {
   }
 
   /** Whitespace-normalized text (lowercase, collapsed spaces, trimmed) —
-    * the character space [[repeatedSpans]] positions index, identical to
-    * the winnowing normalization so spans and fingerprints agree on
-    * coordinates.
+    * the character space [[charGrams]] cuts and [[repeatedSpans]] positions
+    * index, identical to the winnowing normalization so spans and
+    * fingerprints agree on coordinates.
     */
   // private[graft]: the streaming boilerplate pregate
   // (Streams.flagCorpusOverlap) must share THIS normalization byte-for-
@@ -1298,6 +1280,74 @@ object Dedup {
   // hand-copied twin gave a future edit here no compiler-visible link
   private[graft] def normText(textCol: String): Column =
     trim(regexp_replace(lower(col(textCol)), "\\s+", " "))
+
+  /** The char n-grams of a [[normText]] column, named because the SQL
+    * lambda reads it: `(pos, gram)` for every 1-based start `pos` of an
+    * `n`-char substring, empty when the text is shorter than `n`. The one
+    * derivation behind both span forms, [[substringGramIndex]] and the
+    * streaming pregate (Streams.flagCorpusOverlap), so span positions, the
+    * corpus index and the bloom probe agree gram for gram.
+    */
+  private[graft] def charGrams(normCol: String, n: Int): Column =
+    when(
+      length(col(normCol)) >= n,
+      expr(
+        s"""transform(sequence(1, length($normCol) - $n + 1),
+           |          i -> named_struct('pos', i, 'gram', substring($normCol, i, $n)))""".stripMargin)
+    ).otherwise(expr("CAST(array() AS array<struct<pos:int,gram:string>>)"))
+
+  /** (doc_id, pos, gram) for every [[charGrams]] window of each doc's
+    * [[normText]] — the gram stream of both span forms. The raw projection
+    * fans out BEFORE normalize+explode: the gram explode is the heavy map
+    * work (30x the input bytes), and a sub-split input otherwise runs it on
+    * one task ([[Par.fanOutSmall]] — no-op at corpus scale).
+    */
+  private def gramPositions(df: DataFrame, idCol: String, textCol: String, minLen: Int): DataFrame = {
+    // a redundant self-alias (`doc_id AS doc_id`) is removed asymmetrically
+    // across the two consumers of repeatedSpans' shared exchange (the
+    // optimizer keeps it only where the aliased attribute is the subtree's
+    // output), which de-canonicalizes the exchange and doubles the scan —
+    // so only alias when the name actually changes
+    val docId = if (idCol == "doc_id") col("doc_id") else col(idCol).as("doc_id")
+    Par
+      .fanOutSmall(df.select(docId, col(textCol).as("__raw")))
+      .select(col("doc_id"), normText("__raw").as("__t"))
+      .withColumn("__pg", explode(charGrams("__t", minLen)))
+      .select(col("doc_id"), col("__pg.pos").as("pos"), col("__pg.gram").as("gram"))
+  }
+
+  /** Hits → maximal spans, the last step of both span forms (and of
+    * ScaleBench's round-8 baseline mark): per doc, hits ordered by `pos`
+    * start a new run where the gap to the previous hit exceeds `minLen`
+    * (the covered intervals [pos, pos+minLen-1] stop touching), and each
+    * run is one span. `nGrams` is the run's evidence
+    * count, an aggregate over its hit rows.
+    *
+    * @return (doc_id, span_start, span_end, span_len, n_grams)
+    */
+  private[graft] def spansOfHits(hits: DataFrame, minLen: Int, nGrams: Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    hits
+      .withColumn(
+        "__brk",
+        when(col("pos") - lag(col("pos"), 1).over(w) > minLen, 1).otherwise(0))
+      .withColumn("__run", sum(col("__brk")).over(cum))
+      .groupBy(col("doc_id"), col("__run"))
+      .agg(
+        min(col("pos")).as("span_start"),
+        (max(col("pos")) + lit(minLen - 1)).as("span_end"),
+        nGrams.as("n_grams")
+      )
+      .select(
+        col("doc_id"),
+        col("span_start"),
+        col("span_end"),
+        (col("span_end") - col("span_start") + 1).as("span_len"),
+        col("n_grams")
+      )
+  }
 
   /** EXACT cross-document repeated-substring spans — the arbitrary-length
     * dedup modality of Lee et al. 2022 ("Deduplicating Training Data Makes
@@ -1312,22 +1362,21 @@ object Dedup {
     * array: a substring of length m >= L repeats elsewhere iff every one of
     * its length-L windows repeats elsewhere, so covered characters are
     * exactly the union of cross-document-repeated L-grams' extents. The
-    * plan is therefore: (1) emit every (doc, pos, L-gram) — a pure
-    * scan-side explode; (2) mark grams whose DISTINCT-document frequency
-    * reaches `minDocs` — the SALTED two-level mark (see the inline
-    * comment): per-(gram, salt-of-doc) partial distinct-doc counts,
-    * combined per gram over at most `saltBuckets` partial rows, with the
-    * verdict joined back at (gram, salt) granularity so the gram table
-    * crosses the wire exactly once; NO pair formation anywhere (a gram
-    * shared by a million docs costs a million rows spread over
-    * `saltBuckets` tasks, never a million-squared join and never one
-    * task); (3) merge
-    * each doc's covered intervals [pos, pos+L-1] into maximal runs with a
-    * per-doc window (adjacent iff the gap <= L). One (gram, salt)-keyed
-    * exchange + one doc-keyed window; shuffle bytes are ~L x corpus — the
-    * honest price of EXACT substring dedup (the same order as Lee et
-    * al.'s suffix-array I/O), with q56's winnowing overlap as the cheap
-    * approximate sibling.
+    * plan is therefore: (1) emit every (doc, pos, L-gram)
+    * ([[gramPositions]]) — a pure scan-side explode; (2) mark grams whose
+    * DISTINCT-document frequency reaches `minDocs` — the SALTED two-level
+    * mark (see the inline comment): per-(gram, salt-of-doc) partial
+    * distinct-doc counts, combined per gram over at most `saltBuckets`
+    * partial rows, with the verdict joined back at (gram, salt)
+    * granularity so the gram table crosses the wire exactly once; NO pair
+    * formation anywhere (a gram shared by a million docs costs a million
+    * rows spread over `saltBuckets` tasks, never a million-squared join and
+    * never one task); (3) merge each doc's covered intervals
+    * [pos, pos+L-1] into maximal runs with a per-doc window (adjacent iff
+    * the gap <= L; [[spansOfHits]]). One (gram, salt)-keyed exchange + one
+    * doc-keyed window; shuffle bytes are ~L x corpus — the honest price of
+    * EXACT substring dedup (the same order as Lee et al.'s suffix-array
+    * I/O), with q56's winnowing overlap as the cheap approximate sibling.
     *
     * Positions are 1-based character offsets into the NORMALIZED text
     * (see [[normText]]); `span_end` is inclusive. `n_grams` is the count
@@ -1348,32 +1397,10 @@ object Dedup {
     require(minDocs >= 2, "minDocs must be >= 2 (a substring always repeats in its own doc)")
     require(saltBuckets >= 1, "saltBuckets must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    // a redundant self-alias (`doc_id AS doc_id`) is removed asymmetrically
-    // across the two consumers of the shared exchange below (the optimizer
-    // keeps it only where the aliased attribute is the subtree's output),
-    // which de-canonicalizes the exchange and doubles the scan — so only
-    // alias when the name actually changes
-    val docId = if (idCol == "doc_id") col("doc_id") else col(idCol).as("doc_id")
-    // fan out the raw projection BEFORE normalize+explode: the gram
-    // explode is the heavy map work (30x the input bytes), and a sub-split
-    // input otherwise runs it on one task ([[Par.fanOutSmall]] — no-op at
-    // corpus scale). Sits below the shared (gram, salt) exchange, so both
-    // consumers' subtrees stay identical (the ReuseExchange law above).
-    val positions = Par
-      .fanOutSmall(df.select(docId, col(textCol).as("__raw")))
-      .select(col("doc_id"), normText("__raw").as("__t"))
-      .withColumn(
-        "__pg",
-        explode(
-          when(
-            length(col("__t")) >= minLen,
-            expr(
-              s"""transform(sequence(1, length(__t) - $minLen + 1),
-                 |          i -> named_struct('pos', i, 'gram', substring(__t, i, $minLen)))""".stripMargin)
-          ).otherwise(expr("CAST(array() AS array<struct<pos:int,gram:string>>)"))
-        )
-      )
-      .select(col("doc_id"), col("__pg.pos").as("pos"), col("__pg.gram").as("gram"))
+    // the fan-out inside gramPositions sits below the shared (gram, salt)
+    // exchange, so both consumers' subtrees stay identical (the
+    // ReuseExchange law below)
+    val positions = gramPositions(df, idCol, textCol, minLen)
       // no-op by construction (grams are substrings of a non-null __t, and
       // __salt below is a pmod over a seeded hash), but load-bearing for
       // exchange reuse: the verdict join infers isnotnull on its keys and
@@ -1472,29 +1499,7 @@ object Dedup {
     val hits = salted
       .join(okGroups.hint("shuffle_hash"), Seq("gram", "__salt"))
       .select(col("doc_id"), col("pos"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val cum = Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hits
-      .withColumn(
-        "__brk",
-        when(col("pos") - lag(col("pos"), 1).over(w) > minLen, 1).otherwise(0))
-      .withColumn("__run", sum(col("__brk")).over(cum))
-      .groupBy(col("doc_id"), col("__run"))
-      .agg(
-        min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(minLen - 1)).as("span_end"),
-        count(lit(1)).as("n_grams")
-      )
-      .select(
-        col("doc_id"),
-        col("span_start"),
-        col("span_end"),
-        (col("span_end") - col("span_start") + 1).as("span_len"),
-        col("n_grams")
-      )
+    spansOfHits(hits, minLen, count(lit(1)))
   }
 
   /** DISTINCT minLen-gram set of a corpus — the STATIC side of the
@@ -1510,14 +1515,7 @@ object Dedup {
     Par
       .fanOutSmall(corpus.select(col(textCol).as("__raw")))
       .select(normText("__raw").as("__t"))
-      .withColumn(
-        "gram",
-        explode(
-          when(
-            length(col("__t")) >= minLen,
-            expr(s"transform(sequence(1, length(__t) - $minLen + 1), i -> substring(__t, i, $minLen))")
-          ).otherwise(expr("CAST(array() AS array<string>)"))))
-      .select(col("gram"))
+      .select(explode(charGrams("__t", minLen).getField("gram")).as("gram"))
       .distinct()
   }
 
@@ -1579,7 +1577,9 @@ object Dedup {
     * run of the new doc already exists in the corpus", which is exactly
     * the dedup/boilerplate decision an intake pipeline makes before
     * admitting a document. Same coverage semantics and output shape as
-    * [[repeatedSpans]].
+    * [[repeatedSpans]]: the same [[gramPositions]] stream, probed against
+    * the index instead of marked by a self-join, ends in the same
+    * [[spansOfHits]] merge.
     *
     * @return (doc_id, span_start, span_end, span_len, n_grams)
     */
@@ -1591,58 +1591,20 @@ object Dedup {
       minLen: Int
   ): DataFrame = {
     require(minLen >= 2, "minLen must be >= 2")
-    import org.apache.spark.sql.expressions.Window
-    val positions = Par
-      .fanOutSmall(probe.select(col(idCol).as("doc_id"), col(textCol).as("__raw")))
-      .select(col("doc_id"), normText("__raw").as("__t"))
-      .withColumn(
-        "__pg",
-        explode(
-          when(
-            length(col("__t")) >= minLen,
-            expr(
-              s"""transform(sequence(1, length(__t) - $minLen + 1),
-                 |          i -> named_struct('pos', i, 'gram', substring(__t, i, $minLen)))""".stripMargin)
-          ).otherwise(expr("CAST(array() AS array<struct<pos:int,gram:string>>)"))
-        )
-      )
-      .select(col("doc_id"), col("__pg.pos").as("pos"), col("__pg.gram").as("gram"))
     // shuffle join with the PROBE as the build side: the probe batch is
     // the small relation here (the index is corpus-scale), and hinting it
     // also keeps the planner from broadcasting the index off the
     // stats-blind distinct-aggregate estimate (the q103 cliff)
-    val hits = positions
+    val hits = gramPositions(probe, idCol, textCol, minLen)
       .hint("shuffle_hash")
       .join(gramIndex, "gram")
       .select(col("doc_id"), col("pos"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val cum = Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hits
-      .withColumn(
-        "__brk",
-        when(col("pos") - lag(col("pos"), 1).over(w) > minLen, 1).otherwise(0))
-      .withColumn("__run", sum(col("__brk")).over(cum))
-      .groupBy(col("doc_id"), col("__run"))
-      .agg(
-        min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(minLen - 1)).as("span_end"),
-        // DISTINCT, not count(1): an [[appendGramIndex]]-maintained index
-        // is a multiset, and a duplicated gram duplicates hit rows — the
-        // duplicates land in the same run (zero gap), so min/max/lag are
-        // unaffected and distinct positions restore the exact evidence
-        // count without an extra probe-side exchange
-        count_distinct(col("pos")).as("n_grams")
-      )
-      .select(
-        col("doc_id"),
-        col("span_start"),
-        col("span_end"),
-        (col("span_end") - col("span_start") + 1).as("span_len"),
-        col("n_grams")
-      )
+    // DISTINCT, not count(1): an [[appendGramIndex]]-maintained index is a
+    // multiset, and a duplicated gram duplicates hit rows — the duplicates
+    // land in the same run (zero gap), so min/max/lag are unaffected and
+    // distinct positions restore the exact evidence count without an extra
+    // probe-side exchange
+    spansOfHits(hits, minLen, count_distinct(col("pos")))
   }
 
   /** The removal operator over [[repeatedSpans]]: every covered character

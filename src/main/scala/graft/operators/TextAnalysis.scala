@@ -29,7 +29,7 @@ object TextAnalysis {
       .reduce(concat(_, _))
 
   private[operators] def featureBucket(f: Column, numBuckets: Int): Column =
-    (conv(substring(md5(f), 1, 15), 16, 10).cast("long") % numBuckets).cast("int")
+    (Sampling.hash60(f) % numBuckets).cast("int")
 
   /** Marker-word language ID sets. Ties / no markers fall through to 'en'. */
   val LangMarkers: Seq[(String, Seq[String])] = Seq(
@@ -499,12 +499,12 @@ object TextAnalysis {
     * projection, no join, no shuffle: the 100 TB shape when only the
     * reference's BITS fit an executor. Build the bits with
     * `BloomExprs.bloomAgg` over md5-prefix gram hashes
-    * ([[graft.operators.Sampling.hash60]] arithmetic, the portable hash).
+    * ([[Sampling.hash60]], the portable hash).
     */
   def bloomNoveltyLowerBound(text: Column, bloomBits: Array[Byte], n: Int = 3): Column = {
     val grams = array_distinct(graft.functions.HashExprs.wordNGrams(text, n))
-    val h = (g: Column) => conv(substring(md5(g), 1, 15), 16, 10).cast("long")
-    size(filter(grams, g => !graft.functions.BloomExprs.mightContain(lit(bloomBits), h(g))))
+    size(filter(grams, g =>
+      !graft.functions.BloomExprs.mightContain(lit(bloomBits), Sampling.hash60(g))))
   }
 
   /** Exact-integer compression ratio in permille: 1000 · deflated / raw

@@ -187,7 +187,8 @@ object UrlOps {
     * under the identical (quality DESC NULLS LAST, id ASC) order — so the
     * survivor set equals the batch operator's restricted to batch ids
     * (StreamsSpec parity law). Streaming composition:
-    * [[graft.streaming.Streams.dedupUrlBatch]] inside `foreachBatch`.
+    * this function inside `foreachBatch` (StreamsSpec drives it on a real
+    * stream; [[graft.streaming.Streams.intakeBatch]] calls it per batch).
     *
     * Scale shape: one hash shuffle of the BATCH on canonical_url (group
     * sizes bounded by re-crawl policy, as in the batch operator) plus one

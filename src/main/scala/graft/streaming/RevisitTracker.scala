@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   *
   * Fetch identity is (url, tsMs, digest) — a redelivered record (same
   * triple) is a no-op, so the tracker is idempotent under at-least-once
-  * delivery (the Streams.dedupUrlBatch redelivery contract). A fetch
+  * delivery (the UrlOps.canonicalUrlProbeDedup redelivery contract). A fetch
   * arriving OUT OF ORDER under the batch operator's (ts, digest) total
   * order — strictly older ts, or equal ts with a digest that sorts before
   * the state's last — is dropped and counted nowhere: change detection is

@@ -412,17 +412,13 @@ object Streams {
       !stream.columns.contains("__norm_t") && !stream.columns.contains("maybe_boilerplate"),
       "input already has a __norm_t or maybe_boilerplate column — flagCorpusOverlap writes " +
         "both; rename or drop them first")
-    val grams = array_distinct(
-      when(
-        length(col("__norm_t")) >= minLen,
-        expr(
-          s"transform(sequence(1, length(__norm_t) - $minLen + 1), i -> substring(__norm_t, i, $minLen))")
-      ).otherwise(expr("CAST(array() AS array<string>)")))
-    // the SHARED normalization and gram hash, not inline twins: the
-    // "false is PROOF" law below holds only while these byte-match what
-    // substringGramBloom indexed — calling the one implementation gives a
-    // future edit there a compiler-visible link to this pregate
-    // (hash60's cast("string") is a no-op on the string gram)
+    // the SHARED normalization, char n-grams and gram hash, not inline
+    // twins: the "false is PROOF" law below holds only while these
+    // byte-match what substringGramBloom indexed — calling the one
+    // implementation gives a future edit there a compiler-visible link to
+    // this pregate (hash60's cast("string") is a no-op on the string gram)
+    val grams =
+      array_distinct(graft.operators.Dedup.charGrams("__norm_t", minLen).getField("gram"))
     val probe = bloomProbe(stream, bloomBits, broadcastBitsOver)
     stream
       .withColumn("__norm_t", graft.operators.Dedup.normText(textCol))
@@ -432,25 +428,6 @@ object Streams {
       .drop("__norm_t")
   }
 
-  /** Per-micro-batch canonical-URL dedup against a static
-    * [[graft.operators.UrlOps.canonicalUrlCorpusIndex]] — the crawl-intake
-    * member of the probe family: each arriving batch is deduped within
-    * itself and against the corpus's existing canonical URLs under exactly
-    * the batch operator's (quality DESC, id ASC) keep-best rule, so the
-    * stream's survivors are precisely
-    * [[graft.operators.UrlOps.canonicalUrlDedup]]'s survivors over
-    * corpus ∪ batch restricted to the batch (the q119 operator as intake).
-    * Stateless — rebuild the index when the corpus snapshot advances.
-    */
-  def dedupUrlBatch(
-      batch: DataFrame,
-      idCol: String,
-      urlCol: org.apache.spark.sql.Column,
-      quality: org.apache.spark.sql.Column,
-      index: DataFrame
-  ): DataFrame =
-    graft.operators.UrlOps.canonicalUrlProbeDedup(batch, idCol, urlCol, quality, index)
-
   /** Per-batch crawl intake — the streaming twin of
     * [[graft.operators.WebIntake.ingest]], for `foreachBatch` on a stream
     * of raw WARC files: the stateless stages (record split, robots gate,
@@ -458,7 +435,8 @@ object Streams {
     * [[graft.operators.WebIntake.extractDocs]], and the one stateful stage
     * — canonical-URL keep-best — probes a static
     * [[graft.operators.UrlOps.canonicalUrlCorpusIndex]] built from the
-    * corpus snapshot, exactly like [[dedupUrlBatch]]. A batch doc survives
+    * corpus snapshot through
+    * [[graft.operators.UrlOps.canonicalUrlProbeDedup]]. A batch doc survives
     * iff it would survive the batch operator over corpus ∪ batch
     * (parity-pinned in WebIntakeSpec). Stateless across batches — rebuild
     * the index when the corpus snapshot advances.
@@ -475,10 +453,7 @@ object Streams {
   ): DataFrame = {
     val contentful =
       graft.operators.WebIntake.extractDocs(crawlBatch, contentCol, robots, cfg)
-    // through the dedupUrlBatch wrapper, not a second inline spelling of
-    // the probe call: two call sites encoding the probe-dedup contract
-    // independently is how a wrapper change silently diverges from intake
-    dedupUrlBatch(contentful, "url",
+    graft.operators.UrlOps.canonicalUrlProbeDedup(contentful, "url",
       graft.operators.WebIntake.dedupKey, length(col("text")), urlIndex)
       .select(col("url"), col("host"), col("canonical_url"), col("text"))
   }

@@ -232,7 +232,7 @@ class StreamsSpec extends SparkSpec {
     val survivors = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val q = stream.writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        Streams.dedupUrlBatch(b, "doc_id", col("url"), col("q"), index)
+        UrlOps.canonicalUrlProbeDedup(b, "doc_id", col("url"), col("q"), index)
           .select($"doc_id").as[Long].collect().foreach(survivors.add)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -161,6 +161,47 @@ class TextNormSpec extends SparkSpec {
     assert(capped.subsetOf(fast), s"dfCap must only remove pairs: $capped vs $fast")
   }
 
+  test("ngramJaccardPairs: prefix-filtered output equals the naive all-pairs Jaccard") {
+    val footer = "shared footer boilerplate here" // a HOT trigram run in every doc
+    val base = (0L until 40L).map { i =>
+      val words = (0 until 6).map(j => s"w${(i * 7 + j * 3 + i * i % 5) % 41}").mkString(" ")
+      (i, s"$words $footer")
+    }
+    // size-mismatched: long docs that extend a base doc, and truncations
+    val long = (0L until 40L by 10L).map { i =>
+      (i + 500L, base(i.toInt)._2 + " " + (0 until 12).map(j => s"x${i + j}").mkString(" "))
+    }
+    val short = (0L until 40L by 5L).map(i => (i + 600L, base(i.toInt)._2.split(" ").take(4).mkString(" ")))
+    // fewer than three words: one whole-token gram each, so only the equal
+    // pair overlaps
+    val tiny = Seq((900L, "tiny doc"), (901L, "tiny doc"), (902L, "solo"), (903L, "tiny doc here"))
+    // planted on the threshold: 15 trigrams each, one body word swapped ->
+    // 12 shared of 18, J = 2/3 < 0.6667 = round(J, 4)
+    val body = (1 to 13).map(j => s"q$j")
+    val planted = Seq(
+      (700L, (body :+ footer).mkString(" ")),
+      (701L, (body.updated(6, "zz") :+ footer).mkString(" ")))
+    val docs = (base ++ long ++ short ++ tiny ++ planted).toDF("doc_id", "text")
+    val grams = docs.select($"doc_id",
+      explode(array_distinct(graft.functions.HashExprs.wordNGrams($"text", 3))).as("g"))
+    val sizes = grams.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
+    val allPairs = grams.as("a")
+      .join(grams.as("b"), $"a.g" === $"b.g" && $"a.doc_id" < $"b.doc_id")
+      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b")).agg(count(lit(1)).as("inter"))
+      .join(sizes.select($"doc_id".as("doc_a"), $"sz".as("sa")), "doc_a")
+      .join(sizes.select($"doc_id".as("doc_b"), $"sz".as("sb")), "doc_b")
+      .select($"doc_a", $"doc_b", round($"inter" / ($"sa" + $"sb" - $"inter"), 4).as("j"))
+    def collect(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for (t <- Seq(0.3, 0.6667)) {
+      val fast = collect(Dedup.ngramJaccardPairs(docs, "doc_id", "text", t))
+      val naive = collect(allPairs.filter($"j" >= t))
+      assert(fast == naive, s"t=$t: prefix filter changed the output:\nfast=$fast\nnaive=$naive")
+      assert(fast.contains((700L, 701L, 0.6667)), s"t=$t: the on-threshold pair must survive")
+      assert(fast.filter(_._2 >= 900L) == Set((900L, 901L, 1.0)), s"t=$t: short docs: $fast")
+    }
+  }
+
   private def dl(s: String): String =
     TextNormSupport.dedupLines(UTF8String.fromString(s)).toString
 
