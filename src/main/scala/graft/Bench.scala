@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -115,10 +116,20 @@ object Bench {
     val sweepLoaded = scala.collection.mutable.ArrayBuffer[Boolean]()
     val sweepRetries = scala.collection.mutable.ArrayBuffer[Int]()
     val sweepBuf = scala.collection.mutable.ArrayBuffer[Seq[(String, Option[Double])]]()
+    // Janino compiles per sweep (CodegenMetrics delta, read outside every
+    // timed region): a warm sweep that still compiles hundreds of classes
+    // means the generated-class cache no longer holds the working set
+    val sweepCompiles = scala.collection.mutable.ArrayBuffer[Long]()
+    def sweep(): (Seq[(String, Option[Double])], Long) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val times = selected.map { case (name, fn) => name -> once(name, fn) }
+      (times, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }
     for (_ <- 1 to 3) {
       val (c, loaded, retries) = canaryGate()
       canaries += c; sweepLoaded += loaded; sweepRetries += retries
-      sweepBuf += selected.map { case (name, fn) => name -> once(name, fn) }
+      val (times, compiles) = sweep()
+      sweepBuf += times; sweepCompiles += compiles
     }
     // WHOLE-RUN drift rejection (round-15 verdict): per-sweep gating
     // passes sweeps that are individually under 1.5x ref yet still 2x
@@ -152,13 +163,14 @@ object Bench {
       // record)
       val (c, loaded, retries) = canaryGate()
       if (c < canaries(outlier)) {
-        val rerun = selected.map { case (name, fn) => name -> once(name, fn) }
+        val (rerun, compiles) = sweep()
         val old = sweepBuf(outlier).toMap
         sweepBuf(outlier) = rerun.map { case (n, t) => n -> t.orElse(old.getOrElse(n, None)) }
         discardedCanaries += canaries(outlier) // the drifted value the rule healed
         canaries(outlier) = c
         sweepLoaded(outlier) = loaded
         sweepRetries(outlier) = retries
+        sweepCompiles(outlier) = compiles
       } else {
         discardedCanaries += c
         System.err.println(f"[bench] re-run canary $c%.3f s did not improve on the outlier — keeping the original sweep")
@@ -183,6 +195,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val canaryJson = canaries.map(fmt).mkString("[", ",", "]")
     val discardedJson = discardedCanaries.map(fmt).mkString("[", ",", "]")
+    val compilesJson = sweepCompiles.mkString("[", ",", "]")
     // Floor detection on the MIN canary: the per-query min already
     // survives a one-sweep load window (that is what interleaving is for);
     // the record is corrupted only when every sweep ran slow — i.e. the
@@ -222,12 +235,12 @@ object Bench {
     // written to a JSON file with a stable schema
     // {metric,value,unit,sweeps,queries,raw,canary,canary_ref,canary_loaded,
     //  canary_drift,canary_retries,canary_sweep_loaded,drift_reruns,
-    //  canary_discarded,failed,cpus,sf},
+    //  canary_discarded,codegen_compiles,failed,cpus,sf},
     // queries sorted by name. Path override: SPARK_GRAFT_BENCH_REPORT.
     val reportPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPORT", "bench_report.json")
     try {
       val report =
-        s"""{"metric":"total","value":$total,"unit":"sec","sweeps":3,"queries":$qs,"raw":$raw,"canary":$canaryJson,"canary_ref":$CanaryRef,"canary_loaded":$canaryLoaded,"canary_drift":$canaryDrift,"canary_retries":$canaryRetries,"canary_sweep_loaded":$canarySweepLoaded,"drift_reruns":$driftReruns,"canary_discarded":$discardedJson,"failed":$failedJson,"cpus":$cpus,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","sweeps":3,"queries":$qs,"raw":$raw,"canary":$canaryJson,"canary_ref":$CanaryRef,"canary_loaded":$canaryLoaded,"canary_drift":$canaryDrift,"canary_retries":$canaryRetries,"canary_sweep_loaded":$canarySweepLoaded,"drift_reruns":$driftReruns,"canary_discarded":$discardedJson,"codegen_compiles":$compilesJson,"failed":$failedJson,"cpus":$cpus,"sf":"$sfDir"}"""
       java.nio.file.Files.writeString(java.nio.file.Paths.get(reportPath), report + "\n")
       System.err.println(s"[bench] full per-query report written to $reportPath")
     } catch {

@@ -9,6 +9,11 @@ tables in <sfDir>, then compares: schema (column names sorted), row count, and
 a hash of all values with columns sorted by name and rows sorted. Each
 query's line carries its DuckDB oracle seconds, and the five slowest oracles
 are listed at the end.
+
+The first line is `checking N oracles` and the last is `<ok> ok, <fail> fail`
+(exit status 1 on any failure). A log that has the first line but not the
+last is a failed check: the process died mid-run (an oracle killed for
+memory prints nothing).
 """
 import sys, json, glob, hashlib, time
 import duckdb
@@ -36,6 +41,7 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    print(f"checking {len(oracle)} oracles", flush=True)
     ok = fail = 0
     duck_s = {}
     for name, sql in sorted(oracle.items()):
