@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """Per-query comparison of two graft.Bench reports.
 
-Usage: python3 tools/bench_diff.py <before.json> <after.json> [--sort name|ratio]
+Usage: python3 tools/bench_diff.py <before.json> <after.json>
 
 Each report is a `bench_report.json` written by graft.Bench (min of three
 interleaved sweeps, `raw` per-sweep times and one `canary` per sweep). For
-every query the table shows the raw min-of-3 seconds of both runs and their
+every query, in name order, the table shows the raw min-of-3 seconds of both runs and their
 ratio, then the canary-normalised times: each sweep's time divided by that
 sweep's canary, the min over sweeps, in canary units. The normalised ratio is
 the one to read when the two runs saw different host load (ROADMAP aim 1:
@@ -47,8 +47,6 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("before")
     ap.add_argument("after")
-    ap.add_argument("--sort", choices=["name", "ratio"], default="name",
-                    help="order rows by query name or by normalised ratio (default: name)")
     a = ap.parse_args()
     before, after = load(a.before), load(a.after)
 
@@ -58,8 +56,6 @@ def main():
         nb, na = normalised(before, name), normalised(after, name)
         rows.append((name, rb, ra, nb, na))
     ratio = lambda x, y: y / x if x and y is not None else None
-    if a.sort == "ratio":
-        rows.sort(key=lambda r: (ratio(r[3], r[4]) is None, ratio(r[3], r[4]) or 0.0))
 
     cell = lambda v, f: "-" if v is None else format(v, f)
     print(f"{'query':<32} {'before_s':>9} {'after_s':>9} {'ratio':>6}   "
