@@ -64,18 +64,24 @@ object Bench {
     // reference and be falsely flagged load-contaminated. The report records
     // cpus so a reader can reproduce the rescale.
     val CanaryRef = 0.19 * (32.0 / cpus) // idle local[32] seconds, committed round 13
-    def canaryOnce(): Double = {
+    def canaryJob(rows: Long): Unit = {
       import org.apache.spark.sql.functions._
+      spark.range(0, rows, 1, cpus).select(sum(xxhash64(col("id")))).collect()
+    }
+    def canaryOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0, 64000000L, 1, cpus)
-        .select(sum(xxhash64(col("id")))).collect()
+      canaryJob(64000000L)
       (System.nanoTime() - t0) / 1e9
     }
-    // warm the canary's own codegen + C2 path at FULL size so sweep-1's
-    // canary measures host capacity, not first-use JIT (~2x inflation
-    // observed with a smaller warm-up); calling canaryOnce() itself keeps
-    // the warm-up and the measured job from ever drifting apart
-    canaryOnce()
+    // Warm the canary before sweep 1 gates on it. Its wall time includes
+    // Spark's per-job scheduling path, which stays JIT-cold until many jobs
+    // have run, so the warm-up runs 50 small jobs of the canary's own shape
+    // (that path), then full-size runs (its codegen'd hash loop). Measured
+    // at sf0.01 on 4 cores: the next canary reads 0.13 s, against 0.26-0.33 s
+    // after one full-size run and 0.11 s after a sweep of queries — enough
+    // to trip the 2x drift rule below on sweep 1 of an idle run.
+    (1 to 50).foreach(_ => canaryJob(64000L))
+    (1 to 3).foreach(_ => canaryOnce())
     // PER-SWEEP canary rejection (round-14 verdict): the whole-run flags
     // below can't reject a run where 2 of 3 sweeps were loaded — min-of-3
     // silently degrades to min-of-1 and the committed total carries the

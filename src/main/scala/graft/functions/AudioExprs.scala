@@ -1,11 +1,10 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Perceptual AUDIO fingerprint — the audio twin of
   * [[MediaExprs.imageDHash64]], closing the modality gap the round-8
@@ -155,42 +154,18 @@ object AudioFpSupport {
 /** 49-bit audio energy-map fingerprint of a binary WAV column; NULL on
   * anything that is not complete 16-bit PCM.
   */
-case class AudioFingerprint(child: Expression) extends UnaryExpression {
+case class AudioFingerprint(child: Expression)
+    extends GraftUnary("graft_audio_fp", "binary content", isBinary, nullResult = true) {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_audio_fp requires binary content, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = AudioFpSupport.fingerprint(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.AudioFpSupport.fingerprint($a)"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val fp = AudioFpSupport.fingerprint(input.asInstanceOf[Array[Byte]])
-    if (fp == null) null else fp.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // freshName: a fixed local would be redeclared if two instances land in
-    // one unbraced codegen scope (non-nullable child inlining).
-    val tmp = ctx.freshName("graftAudioFp")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        java.lang.Long $tmp = graft.functions.AudioFpSupport.fingerprint($c);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp.longValue(); }
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AudioFingerprint =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): AudioFingerprint = copy(child = c)
 }
 
 object AudioExprs {
   /** 49-bit perceptual audio fingerprint (see [[AudioFpSupport]]). */
-  def audioFingerprint(content: Column): Column =
-    ColumnShim.column(AudioFingerprint(ColumnShim.expression(content)))
+  def audioFingerprint(content: Column): Column = column(AudioFingerprint, content)
 }

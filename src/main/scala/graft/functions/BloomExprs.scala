@@ -1,13 +1,13 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** Bloom-filter sketch over LongType keys — the scale path for membership
@@ -152,31 +152,17 @@ case class BloomBuildAgg(
   * Codegen-enabled — with the filter bytes as a Literal the probe runs
   * inside whole-stage codegen at the scan, before any shuffle.
   */
-case class BloomMightContain(left: Expression, right: Expression) extends BinaryExpression {
+case class BloomMightContain(left: Expression, right: Expression) extends GraftBinary(
+      "graft_bloom_might_contain", "(binary, bigint)", isBinary, isLong) {
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bloom_might_contain requires (binary, bigint), got (${l.catalogString}, ${r.catalogString})")
-  }
+  protected def call(bloom: Any, key: Any): Any =
+    BloomSupport.mightContain(bytes(bloom), key.asInstanceOf[Long])
+  protected def callCode(ctx: CodegenContext, bloom: String, key: String): String =
+    s"graft.functions.BloomSupport.mightContain($bloom, $key)"
 
-  override protected def nullSafeEval(bloom: Any, value: Any): Any =
-    BloomSupport.mightContain(bloom.asInstanceOf[Array[Byte]], value.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (b, v) => s"${ev.value} = graft.functions.BloomSupport.mightContain($b, $v);"
-    )
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression,
-      newRight: Expression
-  ): BloomMightContain = copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomMightContain =
+    copy(left = l, right = r)
 }
 
 /** Scan-side bloom probe whose bits arrive as a torrent BROADCAST variable
@@ -193,49 +179,31 @@ case class BloomMightContain(left: Expression, right: Expression) extends Binary
 case class BloomMightContainBcast(
     bits: org.apache.spark.broadcast.Broadcast[Array[Byte]],
     child: Expression
-) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+) extends GraftUnary("graft_bloom_might_contain_bcast", "a BIGINT key", isLong) {
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bloom_might_contain_bcast requires a BIGINT key, got ${other.catalogString}")
-  }
-
   @transient private lazy val localBits: Array[Byte] = bits.value
 
-  override protected def nullSafeEval(value: Any): Any =
-    BloomSupport.mightContain(localBits, value.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(key: Any): Any = BloomSupport.mightContain(localBits, key.asInstanceOf[Long])
+  protected def callCode(ctx: CodegenContext, key: String): String = {
     val bcastRef =
       ctx.addReferenceObj("graftBloomBcast", bits, "org.apache.spark.broadcast.Broadcast")
     val cached = ctx.addMutableState(
       "byte[]",
       "graftBloomBits",
       v => s"$v = (byte[]) $bcastRef.value();")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      v => s"${ev.value} = graft.functions.BloomSupport.mightContain($cached, $v);")
+    s"graft.functions.BloomSupport.mightContain($cached, $key)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): BloomMightContainBcast =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): BloomMightContainBcast = copy(child = c)
 }
 
 object BloomExprs {
   /** Aggregate a LongType column into bloom-filter bytes. */
   def bloomAgg(key: Column, numBytes: Int, numHashes: Int): Column =
-    ColumnShim.column(
-      BloomBuildAgg(ColumnShim.expression(key), numBytes, numHashes).toAggregateExpression())
+    column(BloomBuildAgg(_, numBytes, numHashes).toAggregateExpression(), key)
 
   /** Probe bloom bytes (typically a small Literal) for a key. */
-  def mightContain(bloom: Column, key: Column): Column =
-    ColumnShim.column(
-      BloomMightContain(ColumnShim.expression(bloom), ColumnShim.expression(key)))
+  def mightContain(bloom: Column, key: Column): Column = column(BloomMightContain, bloom, key)
 
   /** Probe broadcast bloom bytes for a key — the large-filter path; see
     * [[BloomMightContainBcast]].
@@ -243,6 +211,5 @@ object BloomExprs {
   def mightContainBcast(
       bits: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       key: Column
-  ): Column =
-    ColumnShim.column(BloomMightContainBcast(bits, ColumnShim.expression(key)))
+  ): Column = column(BloomMightContainBcast(bits, _), key)
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -524,33 +523,18 @@ case class BpeTokenCount(
     child: Expression,
     ranks: BpeSupport.Ranks,
     byteLevel: Boolean = false
-) extends UnaryExpression {
+) extends GraftUnary("graft_bpe_count", "a string", isString) {
   override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bpe_count requires a string, got ${other.catalogString}")
-  }
-
   private def fn = if (byteLevel) "countTokensBytes" else "countTokens"
 
-  override protected def nullSafeEval(input: Any): Any =
-    if (byteLevel) BpeSupport.countTokensBytes(input.asInstanceOf[UTF8String], ranks)
-    else BpeSupport.countTokens(input.asInstanceOf[UTF8String], ranks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any =
+    if (byteLevel) BpeSupport.countTokensBytes(utf8(a), ranks) else BpeSupport.countTokens(utf8(a), ranks)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val ranksRef = ctx.addReferenceObj("bpeRanks", ranks, classOf[BpeSupport.Ranks].getName)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = graft.functions.BpeSupport.$fn($c, $ranksRef);")
+    s"graft.functions.BpeSupport.$fn($a, $ranksRef)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): BpeTokenCount =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): BpeTokenCount = copy(child = c)
 }
 
 /** array<struct<a,b>> of ADJACENT SYMBOL PAIRS of a document under the
@@ -566,37 +550,22 @@ case class BpeAdjacentPairs(
     child: Expression,
     ranks: BpeSupport.Ranks,
     byteLevel: Boolean = false
-) extends UnaryExpression {
+) extends GraftUnary("graft_bpe_pairs", "a string", isString) {
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("a", StringType, nullable = false),
       StructField("b", StringType, nullable = false))),
     containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bpe_pairs requires a string, got ${other.catalogString}")
-  }
-
   private def fn = if (byteLevel) "adjacentPairsBytes" else "adjacentPairs"
 
-  override protected def nullSafeEval(input: Any): Any =
-    if (byteLevel) BpeSupport.adjacentPairsBytes(input.asInstanceOf[UTF8String], ranks)
-    else BpeSupport.adjacentPairs(input.asInstanceOf[UTF8String], ranks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any =
+    if (byteLevel) BpeSupport.adjacentPairsBytes(utf8(a), ranks) else BpeSupport.adjacentPairs(utf8(a), ranks)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val ranksRef = ctx.addReferenceObj("bpeRanks", ranks, classOf[BpeSupport.Ranks].getName)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = graft.functions.BpeSupport.$fn($c, $ranksRef);")
+    s"graft.functions.BpeSupport.$fn($a, $ranksRef)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): BpeAdjacentPairs =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): BpeAdjacentPairs = copy(child = c)
 }
 
 /** array<int> BPE token ids of a string column (codegen-enabled); ids index
@@ -607,36 +576,21 @@ case class BpeTokenIds(
     ranks: BpeSupport.Ranks,
     vocab: Seq[String],
     byteLevel: Boolean = false
-) extends UnaryExpression {
+) extends GraftUnary("graft_bpe_ids", "a string", isString) {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
   @transient private lazy val vmap = BpeSupport.vocabMap(vocab)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bpe_ids requires a string, got ${other.catalogString}")
-  }
-
   private def fn = if (byteLevel) "tokenIdsBytes" else "tokenIds"
 
-  override protected def nullSafeEval(input: Any): Any =
-    if (byteLevel) BpeSupport.tokenIdsBytes(input.asInstanceOf[UTF8String], ranks, vmap)
-    else BpeSupport.tokenIds(input.asInstanceOf[UTF8String], ranks, vmap)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any =
+    if (byteLevel) BpeSupport.tokenIdsBytes(utf8(a), ranks, vmap)
+    else BpeSupport.tokenIds(utf8(a), ranks, vmap)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val ranksRef = ctx.addReferenceObj("bpeRanks", ranks, classOf[BpeSupport.Ranks].getName)
     val vocabRef = ctx.addReferenceObj("bpeVocab", vmap, "java.util.HashMap")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = graft.functions.BpeSupport.$fn($c, $ranksRef, $vocabRef);")
+    s"graft.functions.BpeSupport.$fn($a, $ranksRef, $vocabRef)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): BpeTokenIds =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): BpeTokenIds = copy(child = c)
 }
 
 /** STRING detokenization of an array<int> id column under a vocabulary —
@@ -650,96 +604,51 @@ case class BpeDecodeIds(
     child: Expression,
     vocab: Seq[String],
     byteLevel: Boolean = false
-) extends UnaryExpression {
+) extends GraftUnary("graft_bpe_decode", "array<int> ids", isArrayOf(IntegerType), nullResult = true) {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
   @transient private lazy val varr: Array[String] = vocab.toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bpe_decode requires array<int> ids, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    BpeSupport.decodeIds(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], varr, byteLevel)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any = BpeSupport.decodeIds(array(a), varr, byteLevel)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val vocabRef = ctx.addReferenceObj("bpeVocabArr", varr, "java.lang.String[]")
-    // freshName: two instances over non-nullable children share one
-    // unbraced codegen scope (nullSafeExec inlines) — a fixed local would
-    // be declared twice and fail Janino.
-    val tmp = ctx.freshName("graftBpeDec")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        org.apache.spark.unsafe.types.UTF8String $tmp =
-          graft.functions.BpeSupport.decodeIds($c, $vocabRef, $byteLevel);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-      """)
+    s"graft.functions.BpeSupport.decodeIds($a, $vocabRef, $byteLevel)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): BpeDecodeIds =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): BpeDecodeIds = copy(child = c)
 }
 
 object BpeExprs {
   /** Exact BPE token count under `merges` (validated well-formed). */
-  def bpeTokenCount(text: Column, merges: Seq[(String, String)]): Column = {
-    BpeSupport.validate(merges)
-    ColumnShim.column(
-      BpeTokenCount(ColumnShim.expression(text), new BpeSupport.Ranks(merges.toArray)))
-  }
+  def bpeTokenCount(text: Column, merges: Seq[(String, String)]): Column =
+    column(BpeTokenCount(_, ranks(merges)), text)
 
   /** Exact BPE token ids under `merges`, indexed into `vocab` (-1 = OOV). */
-  def bpeTokenIds(text: Column, merges: Seq[(String, String)], vocab: Seq[String]): Column = {
-    BpeSupport.validate(merges)
-    ColumnShim.column(
-      BpeTokenIds(ColumnShim.expression(text), new BpeSupport.Ranks(merges.toArray), vocab))
-  }
+  def bpeTokenIds(text: Column, merges: Seq[(String, String)], vocab: Seq[String]): Column =
+    column(BpeTokenIds(_, ranks(merges), vocab), text)
 
   /** Adjacent symbol pairs under `merges` (training statistic) — the
     * empty table gives base-atom pairs, round 0 of training.
     */
   def bpeAdjacentPairs(
-      text: Column, merges: Seq[(String, String)], byteLevel: Boolean = false): Column = {
-    BpeSupport.validate(merges)
-    ColumnShim.column(
-      BpeAdjacentPairs(
-        ColumnShim.expression(text), new BpeSupport.Ranks(merges.toArray), byteLevel))
-  }
+      text: Column, merges: Seq[(String, String)], byteLevel: Boolean = false): Column =
+    column(BpeAdjacentPairs(_, ranks(merges), byteLevel), text)
 
   /** BYTE-level exact BPE token count: atoms are the GPT-2
     * bytes_to_unicode remap of the word's UTF-8 bytes
     * ([[BpeSupport.ByteToChar]]); merges are pairs over that alphabet.
     */
-  def bpeByteTokenCount(text: Column, merges: Seq[(String, String)]): Column = {
-    BpeSupport.validate(merges)
-    ColumnShim.column(
-      BpeTokenCount(
-        ColumnShim.expression(text), new BpeSupport.Ranks(merges.toArray), byteLevel = true))
-  }
+  def bpeByteTokenCount(text: Column, merges: Seq[(String, String)]): Column =
+    column(BpeTokenCount(_, ranks(merges), byteLevel = true), text)
 
   /** BYTE-level exact BPE token ids; `vocab` indexes REMAPPED symbols. */
   def bpeByteTokenIds(
-      text: Column, merges: Seq[(String, String)], vocab: Seq[String]): Column = {
-    BpeSupport.validate(merges)
-    ColumnShim.column(
-      BpeTokenIds(
-        ColumnShim.expression(text), new BpeSupport.Ranks(merges.toArray), vocab,
-        byteLevel = true))
-  }
+      text: Column, merges: Seq[(String, String)], vocab: Seq[String]): Column =
+    column(BpeTokenIds(_, ranks(merges), vocab, byteLevel = true), text)
 
   /** ids → text under `vocab` (char-level symbols concatenated); NULL on
     * any id outside the vocabulary.
     */
-  def bpeDecodeIds(ids: Column, vocab: Seq[String]): Column =
-    ColumnShim.column(BpeDecodeIds(ColumnShim.expression(ids), vocab))
+  def bpeDecodeIds(ids: Column, vocab: Seq[String]): Column = column(BpeDecodeIds(_, vocab), ids)
 
   /** BYTE-level ids → text: vocab symbols concatenated, then the inverse
     * bytes_to_unicode remap back to UTF-8 ([[BpeSupport.CharToByte]]).
@@ -747,5 +656,11 @@ object BpeExprs {
     * whose final symbols are all in `v` (the spec-pinned round-trip law).
     */
   def bpeByteDecodeIds(ids: Column, vocab: Seq[String]): Column =
-    ColumnShim.column(BpeDecodeIds(ColumnShim.expression(ids), vocab, byteLevel = true))
+    column(BpeDecodeIds(_, vocab, byteLevel = true), ids)
+
+  /** The merges table, validated well-formed, as ranks. */
+  private def ranks(merges: Seq[(String, String)]): BpeSupport.Ranks = {
+    BpeSupport.validate(merges)
+    new BpeSupport.Ranks(merges.toArray)
+  }
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
 /** Byte-buffer assembly helpers for the archive writers.
@@ -61,34 +60,18 @@ object BytesSupport {
   * allocation and one copy per element; NULL on a null array, null
   * element, or a result that exceeds a JVM array.
   */
-case class BytesConcatAll(child: Expression) extends UnaryExpression {
+case class BytesConcatAll(child: Expression) extends GraftUnary(
+      "graft_bytes_concat_all", "array<binary> input", isArrayOf(BinaryType), nullResult = true) {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(BinaryType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bytes_concat_all requires array<binary> input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = BytesSupport.concatAll(array(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.BytesSupport.concatAll($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    BytesSupport.concatAll(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      c => s"""
-        |${ev.value} = graft.functions.BytesSupport.concatAll($c);
-        |${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): BytesConcatAll =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): BytesConcatAll = copy(child = c)
 }
 
 object BytesExprs {
   /** Elements of an array<binary> concatenated in order, O(total bytes). */
-  def concatAll(arr: Column): Column =
-    ColumnShim.column(BytesConcatAll(ColumnShim.expression(arr)))
+  def concatAll(arr: Column): Column = column(BytesConcatAll, arr)
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -288,59 +288,29 @@ object CharsetSupport {
 }
 
 /** binary → declared/BOM charset label or NULL (codegen-enabled). */
-case class SniffCharset(child: Expression) extends UnaryExpression {
+case class SniffCharset(child: Expression)
+    extends GraftUnary("graft_sniff_charset", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_sniff_charset requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = CharsetSupport.sniff(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.CharsetSupport.sniff($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    CharsetSupport.sniff(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tmp = ctx.freshName("graftSniffed")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        UTF8String $tmp = graft.functions.CharsetSupport.sniff($c);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SniffCharset =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): SniffCharset = copy(child = c)
 }
 
 /** binary → decoded text under the sniffed/defaulted charset
   * (codegen-enabled); never null for non-null input.
   */
-case class DecodeSniffed(child: Expression) extends UnaryExpression {
+case class DecodeSniffed(child: Expression)
+    extends GraftUnary("graft_decode_sniffed", "binary input", isBinary) {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_decode_sniffed requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = CharsetSupport.decode(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.CharsetSupport.decode($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    CharsetSupport.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CharsetSupport.decode($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): DecodeSniffed =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): DecodeSniffed = copy(child = c)
 }
 
 /** (binary, string label) → decoded text under the WHATWG precedence
@@ -396,11 +366,8 @@ case class DecodeSniffedWith(left: Expression, right: Expression)
 }
 
 object CharsetExprs {
-  def sniffCharset(bytes: Column): Column =
-    ColumnShim.column(SniffCharset(ColumnShim.expression(bytes)))
-  def decodeSniffed(bytes: Column): Column =
-    ColumnShim.column(DecodeSniffed(ColumnShim.expression(bytes)))
+  def sniffCharset(bytes: Column): Column = column(SniffCharset, bytes)
+  def decodeSniffed(bytes: Column): Column = column(DecodeSniffed, bytes)
   def decodeSniffedWith(bytes: Column, label: Column): Column =
-    ColumnShim.column(
-      DecodeSniffedWith(ColumnShim.expression(bytes), ColumnShim.expression(label)))
+    column(DecodeSniffedWith, bytes, label)
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Per-row DEFLATE size — the classic cheap quality gate: how small a
   * document compresses is a direct measure of its redundancy, catching
@@ -66,33 +65,19 @@ object CompressSupport {
 }
 
 /** INT deflated byte count of a binary column (codegen-enabled). */
-case class DeflatedSize(child: Expression, level: Int) extends UnaryExpression {
+case class DeflatedSize(child: Expression, level: Int)
+    extends GraftUnary("graft_deflated_size", "binary input", isBinary) {
   require(level >= 0 && level <= 9, s"deflate level must be 0..9, got $level")
   override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_deflated_size requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = CompressSupport.deflatedSize(bytes(a), level)
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.CompressSupport.deflatedSize($a, $level)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    CompressSupport.deflatedSize(input.asInstanceOf[Array[Byte]], level)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = graft.functions.CompressSupport.deflatedSize($c, $level);")
-
-  override protected def withNewChildInternal(newChild: Expression): DeflatedSize =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): DeflatedSize = copy(child = c)
 }
 
 object CompressExprs {
   /** Deflated size in bytes of a binary column at the given level. */
-  def deflatedSize(content: Column, level: Int = 6): Column =
-    ColumnShim.column(DeflatedSize(ColumnShim.expression(content), level))
+  def deflatedSize(content: Column, level: Int = 6): Column = column(DeflatedSize(_, level), content)
 }

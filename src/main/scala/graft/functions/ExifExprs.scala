@@ -1,11 +1,10 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -303,77 +302,36 @@ object ExifSupport {
 /** binary → struct<exif_make, exif_orientation, gps_lat_e3, gps_lon_e3>;
   * null for anything that is not a JPEG with a sound Exif APP1.
   */
-case class ExifMeta(child: Expression) extends UnaryExpression {
+case class ExifMeta(child: Expression)
+    extends GraftUnary("graft_exif_meta", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = ExifSupport.metaType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_exif_meta requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = ExifSupport.meta(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.ExifSupport.meta($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    ExifSupport.meta(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tmp = ctx.freshName("graftExifMeta")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        org.apache.spark.sql.catalyst.InternalRow $tmp =
-          graft.functions.ExifSupport.meta($c);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ExifMeta =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): ExifMeta = copy(child = c)
 }
 
 /** binary → binary of IDENTICAL length with the GPS IFD zeroed and
   * unlinked; the input unchanged when it carries no GPS; null when the
   * bytes are not parseable Exif (never silently un-scrubbed).
   */
-case class ExifStripGps(child: Expression) extends UnaryExpression {
+case class ExifStripGps(child: Expression)
+    extends GraftUnary("graft_exif_strip_gps", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_exif_strip_gps requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = ExifSupport.stripGps(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.ExifSupport.stripGps($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    ExifSupport.stripGps(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tmp = ctx.freshName("graftExifStrip")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        byte[] $tmp = graft.functions.ExifSupport.stripGps($c);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ExifStripGps =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): ExifStripGps = copy(child = c)
 }
 
 object ExifExprs {
   /** EXIF metadata struct of a JPEG payload (see [[ExifSupport.meta]]). */
-  def exifMeta(content: Column): Column =
-    ColumnShim.column(ExifMeta(ColumnShim.expression(content)))
+  def exifMeta(content: Column): Column = column(ExifMeta, content)
 
   /** Length-preserving GPS scrub (see [[ExifSupport.stripGps]]). */
-  def exifStripGps(content: Column): Column =
-    ColumnShim.column(ExifStripGps(ColumnShim.expression(content)))
+  def exifStripGps(content: Column): Column = column(ExifStripGps, content)
 }

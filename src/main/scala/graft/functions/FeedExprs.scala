@@ -1,12 +1,11 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -202,29 +201,17 @@ object FeedSupport {
 /** string → array<struct<title,link,published,is_atom>> (codegen-enabled);
   * empty array for entry-free input.
   */
-case class FeedEntries(child: Expression) extends UnaryExpression {
+case class FeedEntries(child: Expression)
+    extends GraftUnary("graft_feed_entries", "string input", isString) {
   override def dataType: DataType = ArrayType(FeedSupport.entryType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_feed_entries requires string input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = FeedSupport.entries(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.FeedSupport.entries($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    FeedSupport.entries(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.FeedSupport.entries($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): FeedEntries =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): FeedEntries = copy(child = c)
 }
 
 object FeedExprs {
-  def feedEntries(xml: Column): Column =
-    ColumnShim.column(FeedEntries(ColumnShim.expression(xml)))
+  def feedEntries(xml: Column): Column = column(FeedEntries, xml)
 }

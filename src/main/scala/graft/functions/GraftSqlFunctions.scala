@@ -6,18 +6,22 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.types.IntegerType
 
 /** SQL surface for the native codegen expressions: the same operators the
-  * DataFrame API exposes through [[HashExprs]], callable from plain
-  * `spark.sql` (notebooks, the thrift server, BI tools) as `graft_*`
-  * functions. Sessions get them from [[GraftExtensions]] at construction
-  * time: [[graft.GraftSession.configure]] sets
+  * DataFrame API exposes through [[HashExprs]] and its siblings, callable
+  * from plain `spark.sql` (notebooks, the thrift server, BI tools) as
+  * `graft_*` functions. Sessions get them from [[GraftExtensions]] at
+  * construction time: [[graft.GraftSession.configure]] sets
   * `spark.sql.extensions=graft.functions.GraftExtensions`, and a
   * cluster-wide install sets the same conf.
   *
+  * A function whose arguments are all columns is one `unary`/`binary`/
+  * `ternary` line naming its [[GraftFunction]] class: the SQL name is the
+  * class's `sqlName`, and the class checks its input types at analysis.
   * Hyper-parameters (shingle k, signature width, window) must be integer
   * LITERALS — they parameterize code generation, so a per-row value cannot
   * work; the error says so at analysis time rather than at execution.
   */
 object GraftSqlFunctions {
+  private type Builder = PartialFunction[Seq[Expression], Expression]
 
   private def intLit(e: Expression, fn: String, arg: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
@@ -26,14 +30,20 @@ object GraftSqlFunctions {
         s"$fn: $arg must be an integer literal (it parameterizes codegen), got $other")
   }
 
+  // the SQL name is read off an instance over a placeholder input
+  private def unary(make: Expression => GraftFunction, arity: String): (String, String, Builder) =
+    (make(Literal(null)).sqlName, arity, { case Seq(a) => make(a) })
+  private def binary(make: (Expression, Expression) => GraftFunction, arity: String): (String, String, Builder) =
+    (make(Literal(null), Literal(null)).sqlName, arity, { case Seq(a, b) => make(a, b) })
+  private def ternary(
+      make: (Expression, Expression, Expression) => GraftFunction,
+      arity: String): (String, String, Builder) =
+    (make(Literal(null), Literal(null), Literal(null)).sqlName, arity, { case Seq(a, b, c) => make(a, b, c) })
+
   /** (name, arity description, builder). */
-  val functions: Seq[(String, String, PartialFunction[Seq[Expression], Expression])] = Seq(
-    ("graft_simhash32", "(text)", {
-      case Seq(t) => SimHash32Expr(t)
-    }),
-    ("graft_simhash64", "(text)", {
-      case Seq(t) => SimHash64Expr(t)
-    }),
+  val functions: Seq[(String, String, Builder)] = Seq(
+    unary(SimHash32Expr, "(text)"),
+    unary(SimHash64Expr, "(text)"),
     ("graft_minhash", "(text, shingleK, numHashes)", {
       case Seq(t, k, n) =>
         val width = intLit(n, "graft_minhash", "numHashes")
@@ -47,21 +57,11 @@ object GraftSqlFunctions {
       case Seq(t, k, w) =>
         WinnowingFingerprints(t, intLit(k, "graft_winnow", "shingleK"), intLit(w, "graft_winnow", "window"))
     }),
-    ("graft_array_dot", "(arrayA, arrayB)", {
-      case Seq(a, b) => ArrayDot(a, b)
-    }),
-    ("graft_sorted_intersect_size", "(sortedArrayA, sortedArrayB)", {
-      case Seq(a, b) => SortedIntersectSize(a, b)
-    }),
-    ("graft_rep_stats", "(text)", {
-      case Seq(t) => RepStats(t)
-    }),
-    ("graft_sniff_image", "(binary)", {
-      case Seq(b) => SniffImageMeta(b)
-    }),
-    ("graft_sniff_av", "(binary)", {
-      case Seq(b) => SniffAvMeta(b)
-    }),
+    binary(ArrayDot, "(arrayA, arrayB)"),
+    binary(SortedIntersectSize, "(sortedArrayA, sortedArrayB)"),
+    unary(RepStats, "(text)"),
+    unary(SniffImageMeta, "(binary)"),
+    unary(SniffAvMeta, "(binary)"),
     ("graft_bloom_agg", "(bigintKey, numBytes, numHashes) AGGREGATE", {
       case Seq(k, nb, nh) =>
         BloomBuildAgg(
@@ -70,96 +70,38 @@ object GraftSqlFunctions {
           intLit(nh, "graft_bloom_agg", "numHashes")
         ).toAggregateExpression()
     }),
-    ("graft_bloom_might_contain", "(bloomBits, bigintKey)", {
-      case Seq(bits, k) => BloomMightContain(bits, k)
-    }),
-    ("graft_image_dhash", "(binary)", {
-      case Seq(b) => ImageDHash64(b)
-    }),
-    ("graft_image_ahash", "(binary)", {
-      case Seq(b) => ImageAHash64(b)
-    }),
-    ("graft_audio_fp", "(binary)", {
-      case Seq(b) => AudioFingerprint(b)
-    }),
-    ("graft_image_dual_hash", "(binary)", {
-      case Seq(b) => ImageDualHash64(b)
-    }),
-    ("graft_video_fp", "(binary)", {
-      case Seq(b) => VideoFingerprint(b)
-    }),
-    ("graft_exif_meta", "(binary)", {
-      case Seq(b) => ExifMeta(b)
-    }),
-    ("graft_exif_strip_gps", "(binary)", {
-      case Seq(b) => ExifStripGps(b)
-    }),
-    ("graft_warc_records", "(binary)", {
-      case Seq(b) => WarcRecords(b)
-    }),
-    ("graft_dedup_lines", "(string)", {
-      case Seq(t) => DedupLines(t)
-    }),
-    ("graft_gzip", "(binary)", {
-      case Seq(b) => GzipMemberOf(b)
-    }),
-    ("graft_gunzip", "(binary)", {
-      case Seq(b) => GunzipConcat(b)
-    }),
-    ("graft_gunzip_members", "(binary)", {
-      case Seq(b) => GunzipMembers(b)
-    }),
-    ("graft_html_text", "(string)", {
-      case Seq(h) => HtmlText(h)
-    }),
-    ("graft_html_links", "(string)", {
-      case Seq(h) => HtmlLinks(h)
-    }),
-    ("graft_html_anchors", "(string)", {
-      case Seq(h) => HtmlAnchors(h)
-    }),
-    ("graft_html_meta", "(string)", {
-      case Seq(h) => HtmlMeta(h)
-    }),
-    ("graft_html_main_text", "(string, int, int)", {
-      case Seq(h, m, p) => HtmlMainText(h, m, p)
-    }),
-    ("graft_robots_allowed", "(string, string, string)", {
-      case Seq(r, a, p) => RobotsAllowed(r, a, p)
-    }),
-    ("graft_robots_crawl_delay_ms", "(string, string)", {
-      case Seq(r, a) => RobotsCrawlDelayMs(r, a)
-    }),
-    ("graft_robots_sitemaps", "(string)", {
-      case Seq(r) => RobotsSitemaps(r)
-    }),
-    ("graft_sitemap_entries", "(string)", {
-      case Seq(x) => SitemapEntries(x)
-    }),
-    ("graft_feed_entries", "(string)", {
-      case Seq(x) => FeedEntries(x)
-    }),
-    ("graft_sniff_mime", "(binary)", {
-      case Seq(b) => SniffMime(b)
-    }),
-    ("graft_resolve_url", "(string, string)", {
-      case Seq(b, r) => ResolveUrl(b, r)
-    }),
-    ("graft_sniff_charset", "(binary)", {
-      case Seq(b) => SniffCharset(b)
-    }),
-    ("graft_decode_sniffed", "(binary)", {
-      case Seq(b) => DecodeSniffed(b)
-    }),
+    binary(BloomMightContain, "(bloomBits, bigintKey)"),
+    unary(ImageDHash64, "(binary)"),
+    unary(ImageAHash64, "(binary)"),
+    unary(AudioFingerprint, "(binary)"),
+    unary(ImageDualHash64, "(binary)"),
+    unary(VideoFingerprint, "(binary)"),
+    unary(ExifMeta, "(binary)"),
+    unary(ExifStripGps, "(binary)"),
+    unary(WarcRecords, "(binary)"),
+    unary(DedupLines, "(string)"),
+    unary(GzipMemberOf, "(binary)"),
+    unary(GunzipConcat, "(binary)"),
+    unary(GunzipMembers, "(binary)"),
+    unary(HtmlText, "(string)"),
+    unary(HtmlLinks, "(string)"),
+    unary(HtmlAnchors, "(string)"),
+    unary(HtmlMeta, "(string)"),
+    ternary(HtmlMainText, "(string, int, int)"),
+    ternary(RobotsAllowed, "(string, string, string)"),
+    binary(RobotsCrawlDelayMs, "(string, string)"),
+    unary(RobotsSitemaps, "(string)"),
+    unary(SitemapEntries, "(string)"),
+    unary(FeedEntries, "(string)"),
+    unary(SniffMime, "(binary)"),
+    binary(ResolveUrl, "(string, string)"),
+    unary(SniffCharset, "(binary)"),
+    unary(DecodeSniffed, "(binary)"),
     ("graft_decode_sniffed_with", "(binary, string)", {
       case Seq(b, l) => DecodeSniffedWith(b, l)
     }),
-    ("graft_http_response", "(binary)", {
-      case Seq(b) => HttpResponse(b)
-    }),
-    ("graft_http_charset", "(string)", {
-      case Seq(c) => HttpCharset(c)
-    })
+    unary(HttpResponse, "(binary)"),
+    unary(HttpCharset, "(string)")
   )
 
   // ---- table-valued sugar for the SCD window queries ----
@@ -274,11 +216,7 @@ object GraftSqlFunctions {
       s"$name$arity - graft native codegen expression",
       "")
 
-  private def safeBuilder(
-      name: String,
-      arity: String,
-      b: PartialFunction[Seq[Expression], Expression]
-  ): Seq[Expression] => Expression =
+  private def safeBuilder(name: String, arity: String, b: Builder): Seq[Expression] => Expression =
     args =>
       if (b.isDefinedAt(args)) b(args)
       else throw new IllegalArgumentException(s"$name expects arguments $arity, got ${args.size}")

@@ -1,11 +1,10 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType}
 
 /** Gzip MEMBER handling (RFC 1952) — the wire format of real crawl
@@ -175,92 +174,47 @@ object GzipSupport {
 }
 
 /** binary → binary: one deterministic gzip member (codegen-enabled). */
-case class GzipMemberOf(child: Expression) extends UnaryExpression {
+case class GzipMemberOf(child: Expression) extends GraftUnary("graft_gzip", "binary input", isBinary) {
   override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_gzip requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = GzipSupport.gzipMember(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.GzipSupport.gzipMember($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    GzipSupport.gzipMember(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = graft.functions.GzipSupport.gzipMember($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): GzipMemberOf =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): GzipMemberOf = copy(child = c)
 }
 
 /** binary → array<binary>: per-member inflated payloads; NULL on malformed. */
-case class GunzipMembers(child: Expression) extends UnaryExpression {
+case class GunzipMembers(child: Expression)
+    extends GraftUnary("graft_gunzip_members", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_gunzip_members requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = GzipSupport.gunzipMembers(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.GzipSupport.gunzipMembers($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    GzipSupport.gunzipMembers(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      c => s"""
-        |${ev.value} = graft.functions.GzipSupport.gunzipMembers($c);
-        |${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): GunzipMembers =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): GunzipMembers = copy(child = c)
 }
 
 /** binary → binary: all members inflated and concatenated; NULL on malformed. */
-case class GunzipConcat(child: Expression) extends UnaryExpression {
+case class GunzipConcat(child: Expression)
+    extends GraftUnary("graft_gunzip", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_gunzip requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = GzipSupport.gunzipConcat(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.GzipSupport.gunzipConcat($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    GzipSupport.gunzipConcat(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      c => s"""
-        |${ev.value} = graft.functions.GzipSupport.gunzipConcat($c);
-        |${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): GunzipConcat =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): GunzipConcat = copy(child = c)
 }
 
 object GzipExprs {
   /** Deterministic gzip member of a binary column. */
-  def gzipMember(content: Column): Column =
-    ColumnShim.column(GzipMemberOf(ColumnShim.expression(content)))
+  def gzipMember(content: Column): Column = column(GzipMemberOf, content)
 
   /** array<binary> of inflated member payloads; NULL on malformed. */
-  def gunzipMembers(content: Column): Column =
-    ColumnShim.column(GunzipMembers(ColumnShim.expression(content)))
+  def gunzipMembers(content: Column): Column = column(GunzipMembers, content)
 
   /** Inflated members concatenated to one binary; NULL on malformed. */
-  def gunzipConcat(content: Column): Column =
-    ColumnShim.column(GunzipConcat(ColumnShim.expression(content)))
+  def gunzipConcat(content: Column): Column = column(GunzipConcat, content)
 }

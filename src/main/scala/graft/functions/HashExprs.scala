@@ -1,10 +1,11 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
@@ -229,48 +230,20 @@ object DotSupport {
 /** double dot-product over two numeric arrays (codegen-enabled) — replaces
   * the interpreted zip_with+aggregate composition in the similarity path.
   */
-case class ArrayDot(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.types.{DoubleType, FloatType}
-
+case class ArrayDot(left: Expression, right: Expression) extends GraftBinary(
+      "graft_array_dot", "two array<float>/array<double> inputs", isVector, isVector) {
+  // the input check matters here: an array<int> child would have getDouble
+  // reinterpret 4-byte int slots of the unsafe buffer — silent garbage
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
+  private def lf = isFloatArray(left.dataType)
+  private def rf = isFloatArray(right.dataType)
 
-  // Input-type contract (same hazard as pq_assign_codes): without it an
-  // array<int> child passes analysis and getDouble reinterprets 4-byte int
-  // slots of the unsafe buffer as doubles — silent garbage, no error.
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"graft_array_dot requires two array<float>/array<double> inputs, " +
-            s"got ${l.catalogString} and ${r.catalogString}")
-    }
+  protected def call(a: Any, b: Any): Any = DotSupport.dot(array(a), array(b), lf, rf)
+  protected def callCode(ctx: CodegenContext, a: String, b: String): String =
+    s"graft.functions.DotSupport.dot($a, $b, $lf, $rf)"
 
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DotSupport.dot(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      isFloat(left),
-      isFloat(right)
-    )
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lf = isFloat(left)
-    val rf = isFloat(right)
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DotSupport.dot($a, $b, $lf, $rf)")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ArrayDot =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayDot =
+    copy(left = l, right = r)
 }
 
 object LshSupport {
@@ -314,40 +287,19 @@ object LshSupport {
   * semantically equal, defeating common-subexpression elimination and
   * cached-plan matching (the PQ expressions use the same convention).
   */
-case class LshBucket(child: Expression, planes: Seq[Seq[Double]]) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.types.{DoubleType, FloatType}
-
+case class LshBucket(child: Expression, planes: Seq[Seq[Double]])
+    extends GraftUnary("graft_lsh_bucket", "array<float> or array<double>", isVector) {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  // Input-type contract: see ArrayDot — unguarded, an integer array would
-  // misread the unsafe buffer at eval instead of failing analysis.
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_lsh_bucket requires array<float> or array<double>, got ${other.catalogString}")
-  }
-
   @transient private lazy val planeArr: Array[Array[Double]] = planes.map(_.toArray).toArray
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  private def f = isFloatArray(child.dataType)
 
-  override protected def nullSafeEval(input: Any): Any =
-    LshSupport.bucket(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], planeArr, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any = LshSupport.bucket(array(a), planeArr, f)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val ref = ctx.addReferenceObj("planes", planeArr, "double[][]")
-    val f = isFloat
-    defineCodeGen(ctx, ev, c => s"graft.functions.LshSupport.bucket($c, $ref, $f)")
+    s"graft.functions.LshSupport.bucket($a, $ref, $f)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): LshBucket =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): LshBucket = copy(child = c)
 }
 
 object IntersectSupport {
@@ -397,88 +349,45 @@ object IntersectSupport {
     }
     out
   }
+
+  /** array<struct<bigint, bigint>> with any field names. */
+  val isLongPairs: DataType => Boolean = {
+    case ArrayType(s: org.apache.spark.sql.types.StructType, _) =>
+      s.fields.length == 2 && s.fields.forall(_.dataType == LongType)
+    case _ => false
+  }
 }
 
 /** long intersection size of two sorted array<long> columns (codegen-enabled).
   * Both inputs MUST be sorted ascending (e.g. via sort_array) and duplicate-
   * free for set semantics.
   */
-case class SortedIntersectSize(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-
+case class SortedIntersectSize(left: Expression, right: Expression) extends GraftBinary(
+      "graft_sorted_intersect_size", "two array<bigint> inputs", isArrayOf(LongType), isArrayOf(LongType)) {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
 
-  // Input-type contract: getLong on an array<int> reads past the 4-byte
-  // element region of the unsafe buffer — guard at analysis instead.
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"graft_sorted_intersect_size requires two array<bigint> inputs, " +
-            s"got ${l.catalogString} and ${r.catalogString}")
-    }
+  protected def call(a: Any, b: Any): Any = IntersectSupport.sortedIntersectSize(array(a), array(b))
+  protected def callCode(ctx: CodegenContext, a: String, b: String): String =
+    s"graft.functions.IntersectSupport.sortedIntersectSize($a, $b)"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    IntersectSupport.sortedIntersectSize(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    )
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.IntersectSupport.sortedIntersectSize($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression,
-      newRight: Expression
-  ): SortedIntersectSize = copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedIntersectSize =
+    copy(left = l, right = r)
 }
 
 /** long intersection size of two array<struct<long,long>> columns, both
   * sorted ascending by (field0, field1) (codegen-enabled).
   */
-case class SortedStructIntersectSize(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.types.StructType
-
+case class SortedStructIntersectSize(left: Expression, right: Expression) extends GraftBinary(
+      "graft_sorted_struct_intersect_size", "two array<struct<bigint,bigint>> inputs",
+      IntersectSupport.isLongPairs, IntersectSupport.isLongPairs) {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
 
-  private def isLongPair(dt: DataType): Boolean = dt match {
-    case ArrayType(s: StructType, _) =>
-      s.fields.length == 2 && s.fields.forall(_.dataType == LongType)
-    case _ => false
-  }
+  protected def call(a: Any, b: Any): Any = IntersectSupport.sortedStructIntersectSize(array(a), array(b))
+  protected def callCode(ctx: CodegenContext, a: String, b: String): String =
+    s"graft.functions.IntersectSupport.sortedStructIntersectSize($a, $b)"
 
-  // Input-type contract: getStruct(_, 2).getLong on any other shape
-  // misreads the unsafe buffer — guard at analysis instead.
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isLongPair(left.dataType) && isLongPair(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_sorted_struct_intersect_size requires two array<struct<bigint,bigint>> inputs, " +
-          s"got ${left.dataType.catalogString} and ${right.dataType.catalogString}")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    IntersectSupport.sortedStructIntersectSize(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    )
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(
-      ctx,
-      ev,
-      (a, b) => s"graft.functions.IntersectSupport.sortedStructIntersectSize($a, $b)"
-    )
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression,
-      newRight: Expression
-  ): SortedStructIntersectSize = copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedStructIntersectSize =
+    copy(left = l, right = r)
 }
 
 object TextStatsSupport {
@@ -542,7 +451,7 @@ object TextStatsSupport {
   * tokens in `markerSets(i)`.
   */
 case class TextStats(child: Expression, stop: Seq[String], markerSets: Seq[Seq[String]])
-    extends UnaryExpression {
+    extends GraftUnary("graft_text_stats", "a string", isString) {
   import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
   override def dataType: DataType = StructType(
@@ -554,22 +463,18 @@ case class TextStats(child: Expression, stop: Seq[String], markerSets: Seq[Seq[S
       StructField("marks", ArrayType(IntegerType, containsNull = false), nullable = false)
     )
   )
-  override def nullIntolerant: Boolean = true
 
   @transient private lazy val stopSet = TextStatsSupport.toSet(stop)
   @transient private lazy val markerArr = markerSets.map(TextStatsSupport.toSet).toArray
 
-  override protected def nullSafeEval(input: Any): Any =
-    TextStatsSupport.stats(input.asInstanceOf[UTF8String], stopSet, markerArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any = TextStatsSupport.stats(utf8(a), stopSet, markerArr)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val stopRef = ctx.addReferenceObj("stopSet", stopSet, "java.util.HashSet")
     val markRef = ctx.addReferenceObj("markerArr", markerArr, "java.util.HashSet[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextStatsSupport.stats($c, $stopRef, $markRef)")
+    s"graft.functions.TextStatsSupport.stats($a, $stopRef, $markRef)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): TextStats =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): TextStats = copy(child = c)
 }
 
 object RepStatsSupport {
@@ -614,7 +519,7 @@ object RepStatsSupport {
 /** struct<n:int, top_unigram:int, n_bigrams:int, top_bigram:int> repetition
   * statistics in one token pass (codegen-enabled).
   */
-case class RepStats(child: Expression) extends UnaryExpression {
+case class RepStats(child: Expression) extends GraftUnary("graft_rep_stats", "a string", isString) {
   import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
   override def dataType: DataType = StructType(
@@ -625,16 +530,12 @@ case class RepStats(child: Expression) extends UnaryExpression {
       StructField("top_bigram", IntegerType, nullable = false)
     )
   )
-  override def nullIntolerant: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any =
-    RepStatsSupport.stats(input.asInstanceOf[UTF8String])
+  protected def call(a: Any): Any = RepStatsSupport.stats(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.RepStatsSupport.stats($a)"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RepStatsSupport.stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RepStats =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): RepStats = copy(child = c)
 }
 
 object NGramSupport {
@@ -666,93 +567,67 @@ object NGramSupport {
 }
 
 /** array<string> word n-grams expression (codegen-enabled). */
-case class WordNGrams(child: Expression, n: Int) extends UnaryExpression {
+case class WordNGrams(child: Expression, n: Int)
+    extends GraftUnary("graft_word_ngrams", "a string", isString) {
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any =
-    NGramSupport.wordNGrams(input.asInstanceOf[UTF8String].toString, n)
+  protected def call(a: Any): Any = NGramSupport.wordNGrams(a.toString, n)
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.NGramSupport.wordNGrams($a.toString(), $n)"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NGramSupport.wordNGrams($c.toString(), $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNGrams =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): WordNGrams = copy(child = c)
 }
 
 /** array<long> MinHash signature expression (codegen-enabled). */
 case class MinHashSignature(child: Expression, k: Int, a: Seq[Long], b: Seq[Long])
-    extends UnaryExpression {
+    extends GraftUnary("graft_minhash", "a string", isString) {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
 
   @transient private lazy val aArr = a.toArray
   @transient private lazy val bArr = b.toArray
 
-  override protected def nullSafeEval(input: Any): Any =
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-      HashSupport.minhash(input.asInstanceOf[UTF8String].toString, k, aArr, bArr)
-    )
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(in: Any): Any =
+    ArrayData.toArrayData(HashSupport.minhash(in.toString, k, aArr, bArr))
+  protected def callCode(ctx: CodegenContext, in: String): String = {
     val aRef = ctx.addReferenceObj("aArr", aArr, "long[]")
     val bRef = ctx.addReferenceObj("bArr", bArr, "long[]")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"""${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-           |  graft.functions.HashSupport.minhash($c.toString(), $k, $aRef, $bRef));""".stripMargin
-    )
+    s"""org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
+       |  graft.functions.HashSupport.minhash($in.toString(), $k, $aRef, $bRef))""".stripMargin
   }
 
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): MinHashSignature = copy(child = c)
 }
 
 /** long SimHash32 expression (codegen-enabled). */
-case class SimHash32Expr(child: Expression) extends UnaryExpression {
+case class SimHash32Expr(child: Expression) extends GraftUnary("graft_simhash32", "a string", isString) {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any =
-    HashSupport.simhash32(input.asInstanceOf[UTF8String].toString)
+  protected def call(a: Any): Any = HashSupport.simhash32(a.toString)
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.HashSupport.simhash32($a.toString())"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashSupport.simhash32($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash32Expr =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): SimHash32Expr = copy(child = c)
 }
 
 /** array<long> winnowing-fingerprint expression (codegen-enabled): distinct
   * sorted sliding-window minima of k-gram rolling hashes.
   */
-case class WinnowingFingerprints(child: Expression, k: Int, w: Int) extends UnaryExpression {
+case class WinnowingFingerprints(child: Expression, k: Int, w: Int)
+    extends GraftUnary("graft_winnow", "a string", isString) {
   // analysis-time range check (the file's error-at-analysis contract):
   // k = 0 would reach pw(-1) inside the per-row walk and kill every task
   // with a bare AIOOBE instead of a message naming the bad argument
   require(k >= 1 && w >= 1, s"graft_winnow needs k >= 1 and w >= 1, got k=$k w=$w")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any =
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-      HashSupport.winnowing(input.asInstanceOf[UTF8String].toString, k, w)
-    )
+  protected def call(a: Any): Any =
+    ArrayData.toArrayData(HashSupport.winnowing(a.toString, k, w))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"""org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
+       |  graft.functions.HashSupport.winnowing($a.toString(), $k, $w))""".stripMargin
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"""${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-           |  graft.functions.HashSupport.winnowing($c.toString(), $k, $w));""".stripMargin
-    )
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowingFingerprints =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): WinnowingFingerprints = copy(child = c)
 }
 
 object PqSupport {
@@ -889,51 +764,39 @@ object PqSupport {
     }
     acc
   }
+
+  /** Squared norm of every centroid, per subspace. */
+  def norms(cb: Array[Array[Array[Double]]]): Array[Array[Double]] =
+    cb.map(_.map(c => c.map(x => x * x).sum))
+
+  /** array<array<double>>: a per-query distance table. */
+  val isTable: DataType => Boolean = {
+    case ArrayType(ArrayType(DoubleType, _), _) => true
+    case _ => false
+  }
 }
 
 /** PQ code assignment (codegen-enabled); input vector length must be ≥
   * m·dsub. The codebook rides into generated code as a reference object —
   * no per-row construction, no 128-way expression tree for Janino to chew.
   */
-case class PqAssignCodes(child: Expression, codebooks: Seq[Seq[Seq[Double]]]) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType}
-
+case class PqAssignCodes(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
+    extends GraftUnary("pq_assign_codes", "array<float> or array<double>", isVector) {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  // Input-type contract: without it an array<int>/array<long> child passes
-  // analysis and getFloat/getDouble misreads the unsafe buffer at eval.
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"pq_assign_codes requires array<float> or array<double>, got ${other.catalogString}")
-  }
 
   @transient private lazy val cbArr: Array[Array[Array[Double]]] =
     codebooks.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val normArr: Array[Array[Double]] =
-    cbArr.map(_.map(c => c.map(x => x * x).sum))
+  @transient private lazy val normArr: Array[Array[Double]] = PqSupport.norms(cbArr)
+  private def f = isFloatArray(child.dataType)
 
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    PqSupport.assignCodes(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cbArr, normArr, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any = PqSupport.assignCodes(array(a), cbArr, normArr, f)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val cbRef = ctx.addReferenceObj("pqCodebook", cbArr, "double[][][]")
     val nRef = ctx.addReferenceObj("pqNorms", normArr, "double[][]")
-    val f = isFloat
-    defineCodeGen(ctx, ev, c => s"graft.functions.PqSupport.assignCodes($c, $cbRef, $nRef, $f)")
+    s"graft.functions.PqSupport.assignCodes($a, $cbRef, $nRef, $f)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): PqAssignCodes =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): PqAssignCodes = copy(child = c)
 }
 
 /** Per-query ADC distance table (codegen-enabled): query vector
@@ -943,94 +806,51 @@ case class PqAssignCodes(child: Expression, codebooks: Seq[Seq[Seq[Double]]]) ex
   * plan analysis and Janino compilation per query (the fixed overhead that
   * dominated the persisted-index probe path).
   */
-case class PqQueryTableExpr(child: Expression, codebooks: Seq[Seq[Seq[Double]]]) extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.types.{DoubleType, FloatType}
-
+case class PqQueryTableExpr(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
+    extends GraftUnary("pq_query_table", "array<float> or array<double>", isVector) {
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"pq_query_table requires array<float> or array<double>, got ${other.catalogString}")
-  }
 
   @transient private lazy val cbArr: Array[Array[Array[Double]]] =
     codebooks.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val normArr: Array[Array[Double]] =
-    cbArr.map(_.map(c => c.map(x => x * x).sum))
+  @transient private lazy val normArr: Array[Array[Double]] = PqSupport.norms(cbArr)
+  private def f = isFloatArray(child.dataType)
 
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    PqSupport.queryTable(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], cbArr, normArr, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any = PqSupport.queryTable(array(a), cbArr, normArr, f)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val cbRef = ctx.addReferenceObj("pqCodebook", cbArr, "double[][][]")
     val nRef = ctx.addReferenceObj("pqNorms", normArr, "double[][]")
-    val f = isFloat
-    defineCodeGen(ctx, ev, c => s"graft.functions.PqSupport.queryTable($c, $cbRef, $nRef, $f)")
+    s"graft.functions.PqSupport.queryTable($a, $cbRef, $nRef, $f)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): PqQueryTableExpr =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): PqQueryTableExpr = copy(child = c)
 }
 
 /** ADC table-lookup distance (codegen-enabled): codes array<int> ×
   * per-query table array<array<double>> → double.
   */
-case class PqAdcDistance(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.types.{DoubleType, IntegerType}
-
+case class PqAdcDistance(left: Expression, right: Expression) extends GraftBinary(
+      "pq_adc_distance", "(array<int>, array<array<double>>)",
+      isArrayOf(IntegerType), PqSupport.isTable) {
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
 
-  // codes must be array<int>, table array<array<double>> — anything else
-  // would misread the unsafe buffers at eval; fail at analysis instead.
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(IntegerType, _), ArrayType(ArrayType(DoubleType, _), _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) =>
-      TypeCheckResult.TypeCheckFailure(
-        "pq_adc_distance requires (array<int>, array<array<double>>), got " +
-          s"(${l.catalogString}, ${r.catalogString})")
-  }
+  protected def call(codes: Any, table: Any): Any = PqSupport.adcDistance(array(codes), array(table))
+  protected def callCode(ctx: CodegenContext, codes: String, table: String): String =
+    s"graft.functions.PqSupport.adcDistance($codes, $table)"
 
-  override protected def nullSafeEval(codes: Any, table: Any): Any =
-    PqSupport.adcDistance(
-      codes.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      table.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    )
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, t) => s"graft.functions.PqSupport.adcDistance($c, $t)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): PqAdcDistance =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcDistance =
+    copy(left = l, right = r)
 }
 
 /** long SimHash64 expression (codegen-enabled). */
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
+case class SimHash64Expr(child: Expression) extends GraftUnary("graft_simhash64", "a string", isString) {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any =
-    HashSupport.simhash64(input.asInstanceOf[UTF8String].toString)
+  protected def call(a: Any): Any = HashSupport.simhash64(a.toString)
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.HashSupport.simhash64($a.toString())"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashSupport.simhash64($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): SimHash64Expr = copy(child = c)
 }
 
 object HashExprs {
@@ -1043,49 +863,38 @@ object HashExprs {
 
   def minhashSignature(text: Column, k: Int, n: Int): Column = {
     val (a, b) = seeds(n)
-    ColumnShim.column(MinHashSignature(ColumnShim.expression(text), k, a, b))
+    column(MinHashSignature(_, k, a, b), text)
   }
 
-  def simhash32(text: Column): Column =
-    ColumnShim.column(SimHash32Expr(ColumnShim.expression(text)))
+  def simhash32(text: Column): Column = column(SimHash32Expr, text)
 
-  def simhash64(text: Column): Column =
-    ColumnShim.column(SimHash64Expr(ColumnShim.expression(text)))
+  def simhash64(text: Column): Column = column(SimHash64Expr, text)
 
   def winnowingFingerprints(text: Column, k: Int, w: Int): Column =
-    ColumnShim.column(WinnowingFingerprints(ColumnShim.expression(text), k, w))
+    column(WinnowingFingerprints(_, k, w), text)
 
-  def wordNGrams(text: Column, n: Int): Column =
-    ColumnShim.column(WordNGrams(ColumnShim.expression(text), n))
+  def wordNGrams(text: Column, n: Int): Column = column(WordNGrams(_, n), text)
 
-  def arrayDot(a: Column, b: Column): Column =
-    ColumnShim.column(ArrayDot(ColumnShim.expression(a), ColumnShim.expression(b)))
+  def arrayDot(a: Column, b: Column): Column = column(ArrayDot, a, b)
 
   def pqAssignCodes(v: Column, codebooks: Array[Array[Array[Double]]]): Column =
-    ColumnShim.column(
-      PqAssignCodes(ColumnShim.expression(v), codebooks.toSeq.map(_.toSeq.map(_.toSeq))))
+    column(PqAssignCodes(_, codebooks.toSeq.map(_.toSeq.map(_.toSeq))), v)
 
-  def pqAdcDistance(codes: Column, table: Column): Column =
-    ColumnShim.column(PqAdcDistance(ColumnShim.expression(codes), ColumnShim.expression(table)))
+  def pqAdcDistance(codes: Column, table: Column): Column = column(PqAdcDistance, codes, table)
 
   def pqQueryTable(v: Column, codebooks: Array[Array[Array[Double]]]): Column =
-    ColumnShim.column(
-      PqQueryTableExpr(ColumnShim.expression(v), codebooks.toSeq.map(_.toSeq.map(_.toSeq))))
+    column(PqQueryTableExpr(_, codebooks.toSeq.map(_.toSeq.map(_.toSeq))), v)
 
   def lshBucket(v: Column, planes: Seq[Array[Double]]): Column =
-    ColumnShim.column(LshBucket(ColumnShim.expression(v), planes.map(_.toSeq)))
+    column(LshBucket(_, planes.map(_.toSeq)), v)
 
-  def sortedIntersectSize(a: Column, b: Column): Column =
-    ColumnShim.column(SortedIntersectSize(ColumnShim.expression(a), ColumnShim.expression(b)))
+  def sortedIntersectSize(a: Column, b: Column): Column = column(SortedIntersectSize, a, b)
 
   def sortedStructIntersectSize(a: Column, b: Column): Column =
-    ColumnShim.column(
-      SortedStructIntersectSize(ColumnShim.expression(a), ColumnShim.expression(b))
-    )
+    column(SortedStructIntersectSize, a, b)
 
   def textStats(text: Column, stop: Seq[String], markerSets: Seq[Seq[String]]): Column =
-    ColumnShim.column(TextStats(ColumnShim.expression(text), stop, markerSets))
+    column(TextStats(_, stop, markerSets), text)
 
-  def repStats(text: Column): Column =
-    ColumnShim.column(RepStats(ColumnShim.expression(text)))
+  def repStats(text: Column): Column = column(RepStats, text)
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -636,76 +635,40 @@ object HtmlSupport {
 }
 
 /** string → string rendered-text extraction (codegen-enabled). */
-case class HtmlText(child: Expression) extends UnaryExpression {
+case class HtmlText(child: Expression) extends GraftUnary("graft_html_text", "string input", isString) {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_html_text requires string input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = HtmlSupport.extract(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.HtmlSupport.extract($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlSupport.extract(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlSupport.extract($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlText =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): HtmlText = copy(child = c)
 }
 
 /** string → array<string> of anchor hrefs in document order
   * (codegen-enabled); empty array for anchor-free pages.
   */
-case class HtmlLinks(child: Expression) extends UnaryExpression {
+case class HtmlLinks(child: Expression) extends GraftUnary("graft_html_links", "string input", isString) {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_html_links requires string input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = HtmlSupport.links(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.HtmlSupport.links($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlSupport.links(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlSupport.links($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlLinks =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): HtmlLinks = copy(child = c)
 }
 
 /** string → array<struct<href,text>> of anchors in document order
   * (codegen-enabled); empty array for anchor-free pages.
   */
-case class HtmlAnchors(child: Expression) extends UnaryExpression {
+case class HtmlAnchors(child: Expression) extends GraftUnary("graft_html_anchors", "string input", isString) {
   override def dataType: DataType = ArrayType(HtmlSupport.anchorType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_html_anchors requires string input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = HtmlSupport.anchors(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.HtmlSupport.anchors($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlSupport.anchors(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlSupport.anchors($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlAnchors =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): HtmlAnchors = copy(child = c)
 }
 
 /** (html, minChars, maxLinkPermille) → main-content string (codegen-
@@ -713,79 +676,36 @@ case class HtmlAnchors(child: Expression) extends UnaryExpression {
   * input.
   */
 case class HtmlMainText(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
+    extends GraftTernary("graft_html_main_text", "(string, int, int)", isString, isInt, isInt) {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = first.nullable || second.nullable || third.nullable
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, org.apache.spark.sql.types.IntegerType,
-            org.apache.spark.sql.types.IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"graft_html_main_text requires (string, int, int), got " +
-            s"(${a.catalogString}, ${b.catalogString}, ${c.catalogString})")
-    }
+  protected def call(html: Any, minChars: Any, maxPm: Any): Any =
+    HtmlSupport.mainText(utf8(html), minChars.asInstanceOf[Int], maxPm.asInstanceOf[Int])
+  protected def callCode(ctx: CodegenContext, html: String, minChars: String, maxPm: String): String =
+    s"graft.functions.HtmlSupport.mainText($html, $minChars, $maxPm)"
 
-  override protected def nullSafeEval(html: Any, minChars: Any, maxPm: Any): Any =
-    HtmlSupport.mainText(
-      html.asInstanceOf[UTF8String],
-      minChars.asInstanceOf[Int],
-      maxPm.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (h, m, p) => s"${ev.value} = graft.functions.HtmlSupport.mainText($h, $m, $p);"
-    )
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression,
-      newSecond: Expression,
-      newThird: Expression
-  ): HtmlMainText = copy(first = newFirst, second = newSecond, third = newThird)
+  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): HtmlMainText =
+    copy(first = a, second = b, third = c)
 }
 
 /** string → struct<title,canonical,meta_robots,description>
   * (codegen-enabled); all-NULL struct for signal-free pages.
   */
-case class HtmlMeta(child: Expression) extends UnaryExpression {
+case class HtmlMeta(child: Expression) extends GraftUnary("graft_html_meta", "string input", isString) {
   override def dataType: DataType = HtmlSupport.metaType
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_html_meta requires string input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = HtmlSupport.meta(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.HtmlSupport.meta($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlSupport.meta(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlSupport.meta($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlMeta =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): HtmlMeta = copy(child = c)
 }
 
 object HtmlExprs {
-  def htmlText(html: Column): Column =
-    ColumnShim.column(HtmlText(ColumnShim.expression(html)))
-  def htmlMeta(html: Column): Column =
-    ColumnShim.column(HtmlMeta(ColumnShim.expression(html)))
-  def htmlLinks(html: Column): Column =
-    ColumnShim.column(HtmlLinks(ColumnShim.expression(html)))
-  def htmlAnchors(html: Column): Column =
-    ColumnShim.column(HtmlAnchors(ColumnShim.expression(html)))
+  def htmlText(html: Column): Column = column(HtmlText, html)
+  def htmlMeta(html: Column): Column = column(HtmlMeta, html)
+  def htmlLinks(html: Column): Column = column(HtmlLinks, html)
+  def htmlAnchors(html: Column): Column = column(HtmlAnchors, html)
   def htmlMainText(html: Column, minChars: Column, maxLinkPermille: Column): Column =
-    ColumnShim.column(HtmlMainText(
-      ColumnShim.expression(html),
-      ColumnShim.expression(minChars),
-      ColumnShim.expression(maxLinkPermille)))
+    column(HtmlMainText, html, minChars, maxLinkPermille)
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -131,72 +130,32 @@ object HttpSupport {
 /** binary → struct<status:int, content_type:string, body:binary>, or NULL
   * when the payload is not an HTTP response message (codegen-enabled).
   */
-case class HttpResponse(child: Expression) extends UnaryExpression {
+case class HttpResponse(child: Expression)
+    extends GraftUnary("graft_http_response", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = HttpSupport.responseType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_http_response requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = HttpSupport.parse(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.HttpSupport.parse($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    HttpSupport.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tmp = ctx.freshName("graftHttp")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        InternalRow $tmp = graft.functions.HttpSupport.parse($c);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HttpResponse =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): HttpResponse = copy(child = c)
 }
 
 /** string → lowercased charset label from a Content-Type value, or NULL
   * when the value carries no charset parameter (codegen-enabled).
   */
-case class HttpCharset(child: Expression) extends UnaryExpression {
+case class HttpCharset(child: Expression)
+    extends GraftUnary("graft_http_charset", "string input", isString, nullResult = true) {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_http_charset requires string input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = HttpSupport.charsetParam(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.HttpSupport.charsetParam($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    HttpSupport.charsetParam(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tmp = ctx.freshName("graftHttpCs")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        UTF8String $tmp = graft.functions.HttpSupport.charsetParam($c);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HttpCharset =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): HttpCharset = copy(child = c)
 }
 
 object HttpExprs {
-  def httpResponse(payload: Column): Column =
-    ColumnShim.column(HttpResponse(ColumnShim.expression(payload)))
-  def httpCharset(contentType: Column): Column =
-    ColumnShim.column(HttpCharset(ColumnShim.expression(contentType)))
+  def httpResponse(payload: Column): Column = column(HttpResponse, payload)
+  def httpCharset(contentType: Column): Column = column(HttpCharset, contentType)
 }

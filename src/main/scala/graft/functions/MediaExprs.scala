@@ -1,11 +1,10 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -362,44 +361,27 @@ object MediaSniffSupport {
   * binary column (codegen-enabled); NULL when the bytes are not a
   * recognizable image — the corrupt-file gate.
   */
-case class SniffImageMeta(child: Expression) extends UnaryExpression {
+case class SniffImageMeta(child: Expression)
+    extends GraftUnary("graft_sniff_image", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = StructType(Seq(
     StructField("format", StringType, nullable = false),
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false)
   ))
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_sniff_image requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = MediaSniffSupport.imageRow(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.MediaSniffSupport.imageRow($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MediaSniffSupport.imageRow(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        |${ev.value} = graft.functions.MediaSniffSupport.imageRow($c);
-        |${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin
-    )
-
-  override protected def withNewChildInternal(newChild: Expression): SniffImageMeta =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): SniffImageMeta = copy(child = c)
 }
 
 /** struct<format:string, codec:string, channels:int, sampleRateHz:int,
   * durationMs:bigint> audio/video-header sniff over a binary column
   * (codegen-enabled); NULL when the bytes are not a recognizable container.
   */
-case class SniffAvMeta(child: Expression) extends UnaryExpression {
+case class SniffAvMeta(child: Expression)
+    extends GraftUnary("graft_sniff_av", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = StructType(Seq(
     StructField("format", StringType, nullable = false),
     StructField("codec", StringType, nullable = true),
@@ -407,31 +389,12 @@ case class SniffAvMeta(child: Expression) extends UnaryExpression {
     StructField("sampleRateHz", IntegerType, nullable = true),
     StructField("durationMs", LongType, nullable = true)
   ))
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_sniff_av requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = MediaSniffSupport.avRow(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.MediaSniffSupport.avRow($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MediaSniffSupport.avRow(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        |${ev.value} = graft.functions.MediaSniffSupport.avRow($c);
-        |${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin
-    )
-
-  override protected def withNewChildInternal(newChild: Expression): SniffAvMeta =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): SniffAvMeta = copy(child = c)
 }
 
 /** Perceptual 64-bit image hashes over the decoded luminance grid — the
@@ -568,71 +531,29 @@ object PHashSupport {
 /** BIGINT perceptual difference-hash of an image binary (codegen-enabled);
   * NULL when the bytes are not a decodable image. See [[PHashSupport]].
   */
-case class ImageDHash64(child: Expression) extends UnaryExpression {
+case class ImageDHash64(child: Expression)
+    extends GraftUnary("graft_image_dhash", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_image_dhash requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = PHashSupport.dHash64(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.PHashSupport.dHash64($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    PHashSupport.dHash64(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tmp = ctx.freshName("graftDh")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        |java.lang.Long $tmp = graft.functions.PHashSupport.dHash64($c);
-        |${ev.isNull} = $tmp == null;
-        |${ev.value} = ${ev.isNull} ? -1L : $tmp.longValue();
-        |""".stripMargin
-    )
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ImageDHash64 =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): ImageDHash64 = copy(child = c)
 }
 
 /** BIGINT perceptual average-hash of an image binary (codegen-enabled);
   * NULL when the bytes are not a decodable image. See [[PHashSupport]].
   */
-case class ImageAHash64(child: Expression) extends UnaryExpression {
+case class ImageAHash64(child: Expression)
+    extends GraftUnary("graft_image_ahash", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_image_ahash requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = PHashSupport.aHash64(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.PHashSupport.aHash64($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    PHashSupport.aHash64(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tmp = ctx.freshName("graftAh")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        |java.lang.Long $tmp = graft.functions.PHashSupport.aHash64($c);
-        |${ev.isNull} = $tmp == null;
-        |${ev.value} = ${ev.isNull} ? -1L : $tmp.longValue();
-        |""".stripMargin
-    )
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ImageAHash64 =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): ImageAHash64 = copy(child = c)
 }
 
 /** struct<dhash: bigint, ahash: bigint> of an image binary from a SINGLE
@@ -640,35 +561,17 @@ case class ImageAHash64(child: Expression) extends UnaryExpression {
   * image. The dual-verify operator's scan expression — see
   * [[PHashSupport.dualHash64]].
   */
-case class ImageDualHash64(child: Expression) extends UnaryExpression {
+case class ImageDualHash64(child: Expression)
+    extends GraftUnary("graft_image_dual_hash", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = StructType(Seq(
     StructField("dhash", LongType, nullable = false),
     StructField("ahash", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_image_dual_hash requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = PHashSupport.dualHash64(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.PHashSupport.dualHash64($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    PHashSupport.dualHash64(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        |${ev.value} = graft.functions.PHashSupport.dualHash64($c);
-        |${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin
-    )
-
-  override protected def withNewChildInternal(newChild: Expression): ImageDualHash64 =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): ImageDualHash64 = copy(child = c)
 }
 
 /** WHATWG-shaped MIME sniffing over untrusted payload bytes — the router
@@ -775,42 +678,26 @@ object MimeSniffSupport {
 }
 
 /** binary → string MIME label (codegen-enabled). */
-case class SniffMime(child: Expression) extends UnaryExpression {
+case class SniffMime(child: Expression) extends GraftUnary("graft_sniff_mime", "binary input", isBinary) {
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_sniff_mime requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = MimeSniffSupport.sniff(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.MimeSniffSupport.sniff($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MimeSniffSupport.sniff(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MimeSniffSupport.sniff($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SniffMime =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): SniffMime = copy(child = c)
 }
 
 object MediaExprs {
-  def sniffImageMeta(content: Column): Column =
-    ColumnShim.column(SniffImageMeta(ColumnShim.expression(content)))
+  def sniffImageMeta(content: Column): Column = column(SniffImageMeta, content)
 
   /** WHATWG-shaped MIME label of untrusted payload bytes. */
-  def sniffMime(content: Column): Column =
-    ColumnShim.column(SniffMime(ColumnShim.expression(content)))
+  def sniffMime(content: Column): Column = column(SniffMime, content)
 
-  def sniffAvMeta(content: Column): Column =
-    ColumnShim.column(SniffAvMeta(ColumnShim.expression(content)))
+  def sniffAvMeta(content: Column): Column = column(SniffAvMeta, content)
 
-  def imageDHash64(content: Column): Column =
-    ColumnShim.column(ImageDHash64(ColumnShim.expression(content)))
+  def imageDHash64(content: Column): Column = column(ImageDHash64, content)
 
   /** Both perceptual hashes from one decode: struct<dhash, ahash>. */
-  def imageDualHash64(content: Column): Column =
-    ColumnShim.column(ImageDualHash64(ColumnShim.expression(content)))
+  def imageDualHash64(content: Column): Column = column(ImageDualHash64, content)
 }

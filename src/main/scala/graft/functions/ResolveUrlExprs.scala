@@ -1,10 +1,9 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -161,41 +160,18 @@ object ResolveUrlSupport {
 /** (base, href) → absolute fragment-free URL (codegen-enabled); NULL when
   * the base is not an absolute hierarchical URL.
   */
-case class ResolveUrl(left: Expression, right: Expression) extends BinaryExpression {
+case class ResolveUrl(left: Expression, right: Expression) extends GraftBinary(
+      "graft_resolve_url", "(string, string)", isString, isString, nullResult = true) {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"graft_resolve_url requires (string, string), got " +
-            s"(${a.catalogString}, ${b.catalogString})")
-    }
+  protected def call(base: Any, ref: Any): Any = ResolveUrlSupport.resolve(utf8(base), utf8(ref))
+  protected def callCode(ctx: CodegenContext, base: String, ref: String): String =
+    s"graft.functions.ResolveUrlSupport.resolve($base, $ref)"
 
-  override protected def nullSafeEval(base: Any, ref: Any): Any =
-    ResolveUrlSupport.resolve(base.asInstanceOf[UTF8String], ref.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tmp = ctx.freshName("graftResolved")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (b, r) => s"""
-        UTF8String $tmp = graft.functions.ResolveUrlSupport.resolve($b, $r);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression,
-      newRight: Expression
-  ): ResolveUrl = copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): ResolveUrl =
+    copy(left = l, right = r)
 }
 
 object ResolveUrlExprs {
-  def resolveUrl(base: Column, ref: Column): Column =
-    ColumnShim.column(ResolveUrl(ColumnShim.expression(base), ColumnShim.expression(ref)))
+  def resolveUrl(base: Column, ref: Column): Column = column(ResolveUrl, base, ref)
 }

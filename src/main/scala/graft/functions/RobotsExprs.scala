@@ -1,10 +1,9 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -251,39 +250,17 @@ object RobotsSupport {
   * 404'd robots.txt allows everything, a 5xx disallows, so the policy
   * belongs outside the expression).
   */
-case class RobotsAllowed(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
+case class RobotsAllowed(first: Expression, second: Expression, third: Expression) extends GraftTernary(
+      "graft_robots_allowed", "(string, string, string)", isString, isString, isString) {
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = first.nullable || second.nullable || third.nullable
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"graft_robots_allowed requires (string, string, string), got " +
-            s"(${a.catalogString}, ${b.catalogString}, ${c.catalogString})")
-    }
+  protected def call(robots: Any, agent: Any, path: Any): Any =
+    RobotsSupport.allowed(utf8(robots), utf8(agent), utf8(path))
+  protected def callCode(ctx: CodegenContext, robots: String, agent: String, path: String): String =
+    s"graft.functions.RobotsSupport.allowed($robots, $agent, $path)"
 
-  override protected def nullSafeEval(robots: Any, agent: Any, path: Any): Any =
-    RobotsSupport.allowed(
-      robots.asInstanceOf[UTF8String],
-      agent.asInstanceOf[UTF8String],
-      path.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (r, a, p) => s"${ev.value} = graft.functions.RobotsSupport.allowed($r, $a, $p);"
-    )
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression,
-      newSecond: Expression,
-      newThird: Expression
-  ): RobotsAllowed = copy(first = newFirst, second = newSecond, third = newThird)
+  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): RobotsAllowed =
+    copy(first = a, second = b, third = c)
 }
 
 /** (robotsTxt, agent) → effective Crawl-delay in ms (codegen-enabled);
@@ -291,79 +268,37 @@ case class RobotsAllowed(first: Expression, second: Expression, third: Expressio
   * distinct from 0 ("no delay requested"), so the rate-limiter policy
   * (default delay? global cap?) stays with the caller.
   */
-case class RobotsCrawlDelayMs(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+case class RobotsCrawlDelayMs(left: Expression, right: Expression) extends GraftBinary(
+      "graft_robots_crawl_delay_ms", "(string, string)", isString, isString, nullResult = true) {
   override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"graft_robots_crawl_delay_ms requires (string, string), got " +
-            s"(${a.catalogString}, ${b.catalogString})")
-    }
+  protected def call(robots: Any, agent: Any): Any = RobotsSupport.crawlDelayMs(utf8(robots), utf8(agent))
+  protected def callCode(ctx: CodegenContext, robots: String, agent: String): String =
+    s"graft.functions.RobotsSupport.crawlDelayMs($robots, $agent)"
 
-  override protected def nullSafeEval(robots: Any, agent: Any): Any =
-    RobotsSupport.crawlDelayMs(
-      robots.asInstanceOf[UTF8String],
-      agent.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tmp = ctx.freshName("graftCrawlDelay")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (r, a) => s"""
-        java.lang.Long $tmp = graft.functions.RobotsSupport.crawlDelayMs($r, $a);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp.longValue(); }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression,
-      newRight: Expression
-  ): RobotsCrawlDelayMs = copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): RobotsCrawlDelayMs =
+    copy(left = l, right = r)
 }
 
 /** string → array<string> of Sitemap URLs in file order (codegen-enabled);
   * empty array when the file lists none.
   */
-case class RobotsSitemaps(child: Expression) extends UnaryExpression {
+case class RobotsSitemaps(child: Expression)
+    extends GraftUnary("graft_robots_sitemaps", "string input", isString) {
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_robots_sitemaps requires string input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = RobotsSupport.sitemaps(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.RobotsSupport.sitemaps($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    RobotsSupport.sitemaps(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RobotsSupport.sitemaps($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RobotsSitemaps =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): RobotsSitemaps = copy(child = c)
 }
 
 object RobotsExprs {
   def robotsAllowed(robots: Column, agent: Column, path: Column): Column =
-    ColumnShim.column(
-      RobotsAllowed(
-        ColumnShim.expression(robots),
-        ColumnShim.expression(agent),
-        ColumnShim.expression(path)))
+    column(RobotsAllowed, robots, agent, path)
   def robotsCrawlDelayMs(robots: Column, agent: Column): Column =
-    ColumnShim.column(
-      RobotsCrawlDelayMs(ColumnShim.expression(robots), ColumnShim.expression(agent)))
-  def robotsSitemaps(robots: Column): Column =
-    ColumnShim.column(RobotsSitemaps(ColumnShim.expression(robots)))
+    column(RobotsCrawlDelayMs, robots, agent)
+  def robotsSitemaps(robots: Column): Column = column(RobotsSitemaps, robots)
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -134,29 +133,17 @@ object SitemapSupport {
 /** string → array<struct<loc,lastmod,is_index>> (codegen-enabled); empty
   * array for entry-free input.
   */
-case class SitemapEntries(child: Expression) extends UnaryExpression {
+case class SitemapEntries(child: Expression)
+    extends GraftUnary("graft_sitemap_entries", "string input", isString) {
   override def dataType: DataType = ArrayType(SitemapSupport.entryType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_sitemap_entries requires string input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = SitemapSupport.entries(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.SitemapSupport.entries($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    SitemapSupport.entries(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SitemapSupport.entries($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SitemapEntries =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): SitemapEntries = copy(child = c)
 }
 
 object SitemapExprs {
-  def sitemapEntries(xml: Column): Column =
-    ColumnShim.column(SitemapEntries(ColumnShim.expression(xml)))
+  def sitemapEntries(xml: Column): Column = column(SitemapEntries, xml)
 }

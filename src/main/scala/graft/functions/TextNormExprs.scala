@@ -1,10 +1,9 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -141,101 +140,54 @@ object TextNormSupport {
 }
 
 /** Unicode NFC normalization of a string column (codegen-enabled). */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends GraftUnary("graft_nfc", "a string", isString) {
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_nfc requires a string, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = TextNormSupport.nfc(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.TextNormSupport.nfc($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    TextNormSupport.nfc(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = graft.functions.TextNormSupport.nfc($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): NfcNormalize = copy(child = c)
 }
 
 /** Mojibake repair of a string column; NULL = not mojibake (see
   * [[TextNormSupport.repairMojibake]]).
   */
-case class MojibakeRepair(child: Expression) extends UnaryExpression {
+case class MojibakeRepair(child: Expression)
+    extends GraftUnary("graft_mojibake_repair", "a string", isString, nullResult = true) {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_mojibake_repair requires a string, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = TextNormSupport.repairMojibake(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.TextNormSupport.repairMojibake($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    TextNormSupport.repairMojibake(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // freshName, not a fixed local: over a NON-nullable child nullSafeExec
-    // inlines this code unbraced, so two instances in one codegen scope
-    // would redeclare the variable and fail Janino compilation.
-    val tmp = ctx.freshName("graftMoji")
-    nullSafeCodeGen(ctx, ev,
-      c => s"""
-        org.apache.spark.unsafe.types.UTF8String $tmp =
-          graft.functions.TextNormSupport.repairMojibake($c);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MojibakeRepair =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): MojibakeRepair = copy(child = c)
 }
 
 /** First-occurrence intra-document line dedup (codegen-enabled). */
-case class DedupLines(child: Expression) extends UnaryExpression {
+case class DedupLines(child: Expression)
+    extends GraftUnary("graft_dedup_lines", "string input", isString) {
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_dedup_lines requires string input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = TextNormSupport.dedupLines(utf8(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.TextNormSupport.dedupLines($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    TextNormSupport.dedupLines(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = graft.functions.TextNormSupport.dedupLines($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): DedupLines =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): DedupLines = copy(child = c)
 }
 
 object TextNormExprs {
   /** Unicode NFC normalization (see [[TextNormSupport.nfc]]). */
-  def nfcNormalize(text: Column): Column =
-    ColumnShim.column(NfcNormalize(ColumnShim.expression(text)))
+  def nfcNormalize(text: Column): Column = column(NfcNormalize, text)
 
   /** Intra-document first-occurrence line dedup
     * (see [[TextNormSupport.dedupLines]]).
     */
-  def dedupLines(text: Column): Column =
-    ColumnShim.column(DedupLines(ColumnShim.expression(text)))
+  def dedupLines(text: Column): Column = column(DedupLines, text)
 
   /** Mojibake repair; NULL when the string is not valid mojibake —
     * `coalesce(mojibakeRepair(c), c)` is the cleaning form,
     * `mojibakeRepair(c).isNotNull` the detector.
     */
-  def mojibakeRepair(text: Column): Column =
-    ColumnShim.column(MojibakeRepair(ColumnShim.expression(text)))
+  def mojibakeRepair(text: Column): Column = column(MojibakeRepair, text)
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -260,95 +259,56 @@ object UnigramSupport {
 
 /** string → int token count under a unigram piece model. */
 case class UnigramTokenCount(child: Expression, model: UnigramSupport.Model)
-    extends UnaryExpression {
+    extends GraftUnary("graft_unigram_count", "a string", isString) {
   override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_unigram_count requires a string, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    UnigramSupport.countTokens(input.asInstanceOf[UTF8String], model)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any = UnigramSupport.countTokens(utf8(a), model)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val ref = ctx.addReferenceObj("unigramModel", model, classOf[UnigramSupport.Model].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = graft.functions.UnigramSupport.countTokens($c, $ref);")
+    s"graft.functions.UnigramSupport.countTokens($a, $ref)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): UnigramTokenCount =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): UnigramTokenCount = copy(child = c)
 }
 
 /** string → bigint total milli-cost under a unigram piece model. */
 case class UnigramTokenCost(child: Expression, model: UnigramSupport.Model)
-    extends UnaryExpression {
+    extends GraftUnary("graft_unigram_cost", "a string", isString) {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_unigram_cost requires a string, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    UnigramSupport.totalCost(input.asInstanceOf[UTF8String], model)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any = UnigramSupport.totalCost(utf8(a), model)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val ref = ctx.addReferenceObj("unigramModel", model, classOf[UnigramSupport.Model].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = graft.functions.UnigramSupport.totalCost($c, $ref);")
+    s"graft.functions.UnigramSupport.totalCost($a, $ref)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): UnigramTokenCost =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): UnigramTokenCost = copy(child = c)
 }
 
 /** string → array<string> Viterbi segmentation under a unigram model. */
 case class UnigramTokensOf(child: Expression, model: UnigramSupport.Model)
-    extends UnaryExpression {
+    extends GraftUnary("graft_unigram_tokens", "a string", isString) {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_unigram_tokens requires a string, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    UnigramSupport.tokens(input.asInstanceOf[UTF8String], model)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  protected def call(a: Any): Any = UnigramSupport.tokens(utf8(a), model)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
     val ref = ctx.addReferenceObj("unigramModel", model, classOf[UnigramSupport.Model].getName)
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = graft.functions.UnigramSupport.tokens($c, $ref);")
+    s"graft.functions.UnigramSupport.tokens($a, $ref)"
   }
 
-  override protected def withNewChildInternal(newChild: Expression): UnigramTokensOf =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): UnigramTokensOf = copy(child = c)
 }
 
 object UnigramExprs {
   def unigramTokens(text: Column, model: UnigramSupport.Model): Column =
-    ColumnShim.column(UnigramTokensOf(ColumnShim.expression(text), model))
+    column(UnigramTokensOf(_, model), text)
 
   def unigramCount(text: Column, pieces: Seq[(String, Long)], unkCost: Long): Column =
-    ColumnShim.column(UnigramTokenCount(
-      ColumnShim.expression(text), UnigramSupport.model(pieces, unkCost)))
+    column(UnigramTokenCount(_, UnigramSupport.model(pieces, unkCost)), text)
 
   def unigramCost(text: Column, pieces: Seq[(String, Long)], unkCost: Long): Column =
-    ColumnShim.column(UnigramTokenCost(
-      ColumnShim.expression(text), UnigramSupport.model(pieces, unkCost)))
+    column(UnigramTokenCost(_, UnigramSupport.model(pieces, unkCost)), text)
 
   def unigramTokens(text: Column, pieces: Seq[(String, Long)], unkCost: Long): Column =
-    ColumnShim.column(UnigramTokensOf(
-      ColumnShim.expression(text), UnigramSupport.model(pieces, unkCost)))
+    column(UnigramTokensOf(_, UnigramSupport.model(pieces, unkCost)), text)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -162,40 +161,20 @@ object PslSupport {
 
 /** Registered domain of a HOST column under a compiled PSL rule set. */
 case class RegisteredDomainPsl(child: Expression, suffixes: PslSupport.SuffixSet)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true // NULL for public-suffix/bare hosts
-  override def nullIntolerant: Boolean = true
+    extends GraftUnary("graft_psl_domain", "a string host", isString, nullResult = true) {
+  override def dataType: DataType = StringType // NULL for public-suffix/bare hosts
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_psl_domain requires a string host, got ${other.catalogString}")
+  protected def call(a: Any): Any = PslSupport.registered(utf8(a), suffixes)
+  protected def callCode(ctx: CodegenContext, a: String): String = {
+    val sfxRef = ctx.addReferenceObj("pslSuffixes", suffixes, classOf[PslSupport.SuffixSet].getName)
+    s"graft.functions.PslSupport.registered($a, $sfxRef)"
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    PslSupport.registered(input.asInstanceOf[UTF8String], suffixes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sfxRef =
-      ctx.addReferenceObj("pslSuffixes", suffixes, classOf[PslSupport.SuffixSet].getName)
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        ${ev.value} = graft.functions.PslSupport.registered($c, $sfxRef);
-        ${ev.isNull} = (${ev.value} == null);
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RegisteredDomainPsl =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): RegisteredDomainPsl = copy(child = c)
 }
 
 object UrlExprs {
   /** PSL registered domain of a host column under `rules`. */
   def pslDomain(host: Column, rules: Seq[String]): Column =
-    ColumnShim.column(
-      RegisteredDomainPsl(ColumnShim.expression(host), PslSupport.compile(rules)))
+    column(RegisteredDomainPsl(_, PslSupport.compile(rules)), host)
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Perceptual VIDEO fingerprint — the video twin of
   * [[MediaExprs.imageDHash64]] / [[AudioFpSupport]], closing the last
@@ -229,44 +228,20 @@ object VideoFpSupport {
 /** 64-bit frame-sampled perceptual video fingerprint of a binary AVI
   * column; NULL on anything that is not a complete uncompressed RGB24 AVI.
   */
-case class VideoFingerprint(child: Expression) extends UnaryExpression {
+case class VideoFingerprint(child: Expression)
+    extends GraftUnary("graft_video_fp", "binary content", isBinary, nullResult = true) {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_video_fp requires binary content, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = VideoFpSupport.fingerprint(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.VideoFpSupport.fingerprint($a)"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val fp = VideoFpSupport.fingerprint(input.asInstanceOf[Array[Byte]])
-    if (fp == null) null else fp.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // freshName: a fixed local would be redeclared if two instances land in
-    // one unbraced codegen scope (non-nullable child inlining).
-    val tmp = ctx.freshName("graftVideoFp")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        java.lang.Long $tmp = graft.functions.VideoFpSupport.fingerprint($c);
-        if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp.longValue(); }
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): VideoFingerprint =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): VideoFingerprint = copy(child = c)
 }
 
 object VideoExprs {
   /** 64-bit frame-sampled perceptual video fingerprint (see
     * [[VideoFpSupport]]).
     */
-  def videoFingerprint(content: Column): Column =
-    ColumnShim.column(VideoFingerprint(ColumnShim.expression(content)))
+  def videoFingerprint(content: Column): Column = column(VideoFingerprint, content)
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
+import graft.functions.GraftFunction._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -127,36 +126,17 @@ object WarcSupport {
   * binary WARC/WET blob (codegen-enabled); NULL when the blob is not a
   * well-formed record sequence.
   */
-case class WarcRecords(child: Expression) extends UnaryExpression {
+case class WarcRecords(child: Expression)
+    extends GraftUnary("graft_warc_records", "binary input", isBinary, nullResult = true) {
   override def dataType: DataType = ArrayType(WarcSupport.recordType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_warc_records requires binary input, got ${other.catalogString}")
-  }
+  protected def call(a: Any): Any = WarcSupport.records(bytes(a))
+  protected def callCode(ctx: CodegenContext, a: String): String =
+    s"graft.functions.WarcSupport.records($a)"
 
-  override protected def nullSafeEval(input: Any): Any =
-    WarcSupport.records(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"""
-        |${ev.value} = graft.functions.WarcSupport.records($c);
-        |${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin
-    )
-
-  override protected def withNewChildInternal(newChild: Expression): WarcRecords =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): WarcRecords = copy(child = c)
 }
 
 object WarcExprs {
-  def warcRecords(content: Column): Column =
-    ColumnShim.column(WarcRecords(ColumnShim.expression(content)))
+  def warcRecords(content: Column): Column = column(WarcRecords, content)
 }

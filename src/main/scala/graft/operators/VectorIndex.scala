@@ -156,13 +156,13 @@ object VectorIndex {
     * non-atomic parquet overwrite a crash could leave unreadable (readMeta
     * would then hit its legacy fallback and flat-decode a residual index).
     * The only crash window leaves `meta.__swap` alone, which [[readMeta]]
-    * reads directly and [[recoverMetaSwap]] promotes on the next entry.
+    * reads directly and [[recoverArtifactSwap]] promotes on the next entry.
     * Callers writing a STAGED path (meta.__retrain) keep plain writeMeta —
     * that path is already behind the retrain marker protocol.
     */
   private def writeMetaSwap(spark: SparkSession, dir: String, m: Meta): Unit = {
     writeMeta(spark, s"$dir/meta.__swap", m)
-    promoteSwap(dir, spark, "meta")
+    swapIn(dir, spark, "meta", "__swap")
   }
 
   /** Reconcile an interrupted staged `<name>.__swap` rewrite: live copy
@@ -179,30 +179,34 @@ object VectorIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stage = new org.apache.hadoop.fs.Path(s"$dir/$name.__swap")
     if (fs.exists(stage)) {
-      val live = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      if (fs.exists(live)) {
-        if (!fs.delete(stage, true))
-          throw new java.io.IOException(s"could not discard stray $name swap $stage")
-      } else if (!fs.rename(stage, live))
-        throw new java.io.IOException(s"could not promote interrupted $name swap $stage")
+      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$name"))) swapIn(dir, spark, name, "__swap")
+      else if (!fs.delete(stage, true))
+        throw new java.io.IOException(s"could not discard stray $name swap $stage")
     }
   }
 
-  private def recoverMetaSwap(dir: String, spark: SparkSession): Unit =
-    recoverArtifactSwap(dir, spark, "meta")
-
-  /** Promote a fully-written `<name>.__swap` over the live artifact —
-    * the delete-live + rename-stage tail every staged rewrite shares.
+  /** Every staged artifact a write leaves beside the live index: the
+    * retrain set (`*.__retrain`, see [[commitRetrain]]) and the in-place
+    * rewrites of meta and centroids (`*.__swap`).
     */
-  private def promoteSwap(dir: String, spark: SparkSession, name: String): Unit = {
+  private val StagedNames = Seq(
+    "meta.__retrain", "postings.__retrain", "codebooks.__retrain", "meta.__swap", "centroids.__swap")
+
+  /** Install the fully-written `<name>.<stage>` as the live `<name>`:
+    * delete the live copy when there is one, then rename the stage over
+    * it — both checked (HDFS-style filesystems report failure by
+    * returning false). The one step every staged rewrite, retrain commit
+    * and recovery shares.
+    */
+  private def swapIn(dir: String, spark: SparkSession, name: String, stage: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new org.apache.hadoop.fs.Path(s"$dir/$name")
-    val stage = new org.apache.hadoop.fs.Path(s"$dir/$name.__swap")
+    val staged = new org.apache.hadoop.fs.Path(s"$dir/$name.$stage")
     if (fs.exists(live) && !fs.delete(live, true))
-      throw new java.io.IOException(s"$name swap: could not retire $live")
-    if (!fs.rename(stage, live))
-      throw new java.io.IOException(s"$name swap: could not promote $stage")
+      throw new java.io.IOException(s"$name.$stage: could not retire $live")
+    if (!fs.rename(staged, live))
+      throw new java.io.IOException(s"$name.$stage: could not promote $staged")
   }
 
   private def writeCodebooks(
@@ -253,13 +257,11 @@ object VectorIndex {
     try {
       val fsb = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq("meta.__retrain", "postings.__retrain", "codebooks.__retrain",
-          "meta.__swap", "centroids.__swap")
-        .foreach { n =>
-          val pp = new org.apache.hadoop.fs.Path(s"$dir/$n")
-          if (fsb.exists(pp) && !fsb.delete(pp, true))
-            throw new java.io.IOException(s"build: could not discard stale staging $pp")
-        }
+      StagedNames.foreach { n =>
+        val pp = new org.apache.hadoop.fs.Path(s"$dir/$n")
+        if (fsb.exists(pp) && !fsb.delete(pp, true))
+          throw new java.io.IOException(s"build: could not discard stale staging $pp")
+      }
       // REBUILD tombstone: buildBody overwrites postings → centroids →
       // codebooks → meta in sequence with no staging, so a crash leaves a
       // mixed-generation index whose artifacts are individually readable —
@@ -651,7 +653,7 @@ object VectorIndex {
       .write
       .mode("overwrite")
       .parquet(s"${h.dir}/centroids.__swap")
-    promoteSwap(h.dir, spark, "centroids")
+    swapIn(h.dir, spark, "centroids", "__swap")
     // version bump (staged swap — a crash mid-write must not leave live
     // meta unreadable); the drift BASELINE is preserved — a rebalance
     // refits coarse geometry only, the codebooks (whose staleness the
@@ -883,7 +885,7 @@ object VectorIndex {
     * — every step re-checks existence.
     */
   private def recoverRetrain(dir: String, spark: SparkSession): Boolean = {
-    recoverMetaSwap(dir, spark) // reconcile an interrupted live-meta swap first
+    recoverArtifactSwap(dir, spark, "meta") // reconcile an interrupted live-meta swap first
     recoverArtifactSwap(dir, spark, "centroids") // and an interrupted centroid refit
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -922,21 +924,13 @@ object VectorIndex {
   /** Swap staged retrain artifacts into place: postings, codebooks, then
     * meta — meta LAST, because its staged copy is the roll-forward marker
     * and must outlive the swaps it gates ([[readMeta]] reads it directly
-    * inside the window). Each swap is delete-live + rename-stage, both
-    * checked (HDFS-style filesystems report failure by returning false).
+    * inside the window). Each swap is one [[swapIn]].
     */
   private def commitRetrain(dir: String, spark: SparkSession): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq("postings", "codebooks", "meta").foreach { n =>
-      val stage = new org.apache.hadoop.fs.Path(s"$dir/$n.__retrain")
-      if (fs.exists(stage)) {
-        val live = new org.apache.hadoop.fs.Path(s"$dir/$n")
-        if (fs.exists(live) && !fs.delete(live, true))
-          throw new java.io.IOException(s"retrain commit: could not retire $live")
-        if (!fs.rename(stage, live))
-          throw new java.io.IOException(s"retrain commit: could not promote $stage")
-      }
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$n.__retrain"))) swapIn(dir, spark, n, "__retrain")
     }
   }
 
@@ -1022,10 +1016,7 @@ object VectorIndex {
     locally {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val pending =
-        Seq("meta.__retrain", "meta.__swap", "centroids.__swap",
-            "postings.__retrain", "codebooks.__retrain")
-          .exists(n => fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$n")))
+      val pending = StagedNames.exists(n => fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$n")))
       if (pending) {
         val lease = acquireLease(dir, spark, "open-recovery")
         try recoverRetrain(dir, spark)

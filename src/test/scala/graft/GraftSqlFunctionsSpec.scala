@@ -146,4 +146,30 @@ class GraftSqlFunctionsSpec extends SparkSpec {
     val img = spark.sql("SELECT graft_sniff_image(b) AS m FROM gsf_media WHERE id = 2").head()
     assert(img.isNullAt(0))
   }
+
+  test("the text functions refuse binary and bigint input at analysis, naming the function") {
+    import org.apache.spark.sql.AnalysisException
+    // without an input check these hashed a byte array's JVM identity string
+    // (a new value every run) or failed Janino compilation at run time
+    val calls = Seq(
+      "graft_simhash32" -> "graft_simhash32(%s)",
+      "graft_simhash64" -> "graft_simhash64(%s)",
+      "graft_minhash" -> "graft_minhash(%s, 3, 8)",
+      "graft_word_ngrams" -> "graft_word_ngrams(%s, 2)",
+      "graft_winnow" -> "graft_winnow(%s, 5, 4)",
+      "graft_rep_stats" -> "graft_rep_stats(%s)"
+    )
+    for ((name, call) <- calls; input <- Seq("CAST(CAST(id AS STRING) AS BINARY)", "id")) {
+      val e = intercept[AnalysisException] {
+        spark.sql(s"SELECT ${call.format(input)} FROM range(3)").collect()
+      }
+      assert(e.getMessage.contains(s"$name requires a string"), s"$name($input): ${e.getMessage}")
+    }
+    // the DataFrame-only TextStats carries the same check
+    val bin = spark.range(3).selectExpr("CAST(CAST(id AS STRING) AS BINARY) AS b")
+    val e = intercept[AnalysisException] {
+      bin.select(graft.functions.HashExprs.textStats(bin("b"), Seq("a"), Nil)).collect()
+    }
+    assert(e.getMessage.contains("graft_text_stats requires a string"), e.getMessage)
+  }
 }
